@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import sqlcompat
-from .sqlcompat import SqlTranslationError, tokenize, _find_args, _is_word, _j
+from .sqlcompat import SqlTranslationError, tokenize, trigger_body, _find_args, _is_word, _j
 
 _SQLITE_TYPE_MAP = {
     "integer": T.LongType(),
@@ -74,6 +74,31 @@ class TableDef:
     # enforced on plain inserts. CREATE UNIQUE INDEX columns live in
     # TableStore.unique_indexes (droppable, so tracked by index name).
     unique_cols: set = field(default_factory=set)
+
+
+def flat_name(name: str) -> str:
+    """Store key of a possibly db-qualified table name: ``state.x`` →
+    ``state_x``, ``main.x`` → ``x`` (the _create_table flattening)."""
+    return name.lower().replace("state.", "state_").replace("main.", "")
+
+
+def qualified_name(toks: list[str], j: int) -> tuple[str, int]:
+    """The raw (possibly ``db.``-qualified) table name starting at
+    ``toks[j]``, and the index just past it."""
+    if j + 1 < len(toks) and toks[j + 1] == ".":
+        return "".join(toks[j : j + 3]), j + 3
+    return toks[j], j + 1
+
+
+def int_pk(tdef: TableDef) -> str | None:
+    """The rowid-aliased column: a single INTEGER PRIMARY KEY."""
+    if len(tdef.primary_key) == 1:
+        f_ = next(
+            (f for f in tdef.schema.fields if f.name == tdef.primary_key[0]), None
+        )
+        if f_ is not None and isinstance(f_.dataType, (T.LongType, T.IntegerType)):
+            return f_.name
+    return None
 
 
 @dataclass
@@ -610,7 +635,7 @@ class DmlExecutor:
             self._create_trigger(raw_sql)
             return None
         if kind == "drop":
-            name = (info.target or "").replace("state.", "state_").replace("main.", "")
+            name = flat_name(info.target or "")
             toks = [t.lower() for t in tokenize(raw_sql) if _is_word(t)]
             if "table" in toks:
                 self.store.drop(name, if_exists="if" in toks)
@@ -639,7 +664,7 @@ class DmlExecutor:
             # inserted (post-image), updated (post-image), deleted
             # (pre-image); exprs evaluate over those rows. The target-table
             # qualifier is stripped (the affected rows carry bare columns).
-            tgt = (info.target or "").replace("state.", "state_").replace("main.", "")
+            tgt = flat_name(info.target or "")
             cleaned = []
             for expr in returning:
                 etoks = tokenize(expr)
@@ -720,20 +745,10 @@ class DmlExecutor:
                 i += 1
         return _j(out)
 
-    def _int_pk(self, tdef: TableDef) -> str | None:
-        """The rowid-aliased column: a single INTEGER PRIMARY KEY."""
-        if len(tdef.primary_key) == 1:
-            f_ = next(
-                (f for f in tdef.schema.fields if f.name == tdef.primary_key[0]), None
-            )
-            if f_ is not None and isinstance(f_.dataType, (T.LongType, T.IntegerType)):
-                return f_.name
-        return None
-
     def _record_insert(self, tdef: TableDef, inserted: DataFrame, extra: int = 0) -> None:
         if not self.store.track_changes:
             return
-        pk = self._int_pk(tdef)
+        pk = int_pk(tdef)
         if pk:
             row = inserted.agg(
                 F.count(F.lit(1)).alias("n"), F.max(pk).alias("m")
@@ -1024,18 +1039,8 @@ class DmlExecutor:
             while i < len(lows) and lows[i] in ("if", "not", "exists"):
                 i += 1
             ix_name = lows[i]
-            on_i = lows.index("on", i)
-            j = on_i + 1
-            parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                parts += [".", toks[j + 1]]
-                j += 2
-            flat = (
-                "".join(parts).lower().replace("state.", "state_").replace(
-                    "main.", ""
-                )
-            )
+            raw, j = qualified_name(toks, lows.index("on", i) + 1)
+            flat = flat_name(raw)
             if j >= len(toks) or toks[j] != "(":
                 return
             key_args, close = _find_args(toks, j)
@@ -1108,14 +1113,7 @@ class DmlExecutor:
         begin_idx = lows.index("begin", i)
         if lows[i] == "when":
             when_sql = _j(toks[i + 1 : begin_idx])
-        # body = BEGIN … END, where END is the LAST 'end' token (the body may
-        # contain CASE…END expressions)
-        end_idx = len(lows) - 1 - lows[::-1].index("end")
-        from .module import split_statements
-
-        body = tuple(
-            s for s in split_statements(_j(toks[begin_idx + 1 : end_idx])) if s.strip()
-        )
+        body = trigger_body(toks, lows, begin_idx)
         if name in self.store.triggers and if_not_exists:
             return
         if name in self.store.triggers:
@@ -1327,7 +1325,7 @@ class DmlExecutor:
 
         src_sql = _j(body[j:])
         any_null_pk = False
-        auto_pk = self._int_pk(tdef)
+        auto_pk = int_pk(tdef)
         if src_sql.lower().startswith("values"):
             vtoks = tokenize(src_sql)
             k = 1
@@ -1624,7 +1622,7 @@ class DmlExecutor:
             # every deduped incoming row either inserts or updates; NULL-key
             # rows always insert — both count as changes in SQLite
             n = incoming.count() + append_only.count()
-            pk = self._int_pk(tdef)
+            pk = int_pk(tdef)
             last = (
                 inserted.agg(F.max(pk)).first()[0] if pk else None
             )

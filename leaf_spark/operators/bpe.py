@@ -28,18 +28,6 @@ from ..localdf import arrow_local_df
 
 from .text import words_expr
 
-# Loop-checkpoint mode for _learn (see its comment): False = lazy
-# (materialization folds into the next consuming action), True = eager
-# (a dedicated job per merge). Module-level so the r13 A/B harness can
-# flip it without re-importing. r13 adjudication (VERDICT r12 #5: the
-# driver measured the r12 lazy change 0.82x): 9-run interleaved A/B
-# under bench conditions — eager med 1.792 s / min 1.615 vs lazy med
-# 1.904 / min 1.629 — the lazy form saves no wall time (the folded
-# materialization just moves the job boundary), so the default reverts
-# to the pre-r12 eager mode the driver measured at 1.40 s.
-_EAGER_LOOP_CKPT = True
-
-
 def word_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the whitespace-tokenized lowercased corpus — the
     single corpus-wide shuffle of BPE training. Tokenization is the shared
@@ -129,18 +117,16 @@ def _learn(
     corpus. ``track_totals=False`` skips the per-iteration corpus-size
     aggregate (one Spark job per merge) for callers that only need the
     encoded vocab."""
-    # lazy checkpoints throughout the loop (r12): eager=True ran a separate
-    # materialization job per merge; eager=False folds that materialization
-    # into the next action that reads the vocab (the argmax or the
-    # corpus-size aggregate), cutting one Spark job per iteration while
-    # keeping lineage flat. _EAGER_LOOP_CKPT exposes the choice so the
-    # r13 A/B (VERDICT r12 "Next round #5": the driver measured the lazy
-    # form 0.82x with overlapping spreads) can flip it in-process; the
-    # committed default is whichever side the interleaved A/B wins.
+    # eager checkpoints throughout the loop keep lineage flat. r13
+    # adjudication (VERDICT r12 #5): a 9-run interleaved A/B under bench
+    # conditions measured eager med 1.792 s / min 1.615 vs lazy med
+    # 1.904 / min 1.629 — the lazy form (materialization folded into the
+    # next consuming action) saves no wall time, it only moves the job
+    # boundary.
     vocab = (
         word_vocab(docs, text_col)
         .select("word", "freq", chars_with_terminal(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=_EAGER_LOOP_CKPT)
+        .localCheckpoint(eager=True)
     )
     results = []
     for rank in range(1, num_merges + 1):
@@ -176,12 +162,10 @@ def _learn(
                 "syms"
             ),
         )
-        if track_totals and _EAGER_LOOP_CKPT:
+        if track_totals:
             # one job per merge, not two (r13, guide §2.4): the corpus-size
             # aggregate rides the eager checkpoint materialization as an
-            # observe() metric instead of a second collect job. Only valid
-            # eager — a lazy checkpoint runs no action, so obs.get would
-            # block; the lazy A/B arm keeps the separate aggregate below.
+            # observe() metric instead of a second collect job
             from pyspark.sql import Observation
 
             obs = Observation()
@@ -191,14 +175,8 @@ def _learn(
             ).localCheckpoint(eager=True)
             total_after = obs.get["tot"]
         else:
-            vocab = merged.localCheckpoint(eager=_EAGER_LOOP_CKPT)
-            total_after = (
-                vocab.agg(
-                    F.sum(F.col("freq") * F.size("syms")).cast("bigint")
-                ).collect()[0][0]
-                if track_totals
-                else None
-            )
+            vocab = merged.localCheckpoint(eager=True)
+            total_after = None
         results.append(
             (rank, best["l"], best["r"], best["l"] + best["r"], best["cnt"], total_after)
         )

@@ -331,16 +331,10 @@ def _sorted_array_pairs(ids: Column) -> Column:
     )
 
 
-# Streaming over-cap fallback for _bucketed_pairs (module flag, audit /
-# pathological-corpus use — see the docstring below). False = the default
-# single-pass conditional emission.
-_STREAM_OVERCAP = False
-
-
 def _chain_array_pairs(ids: Column) -> Column:
     """Consecutive (ids[i], ids[i+1]) pairs of a sorted id array as an
-    array<struct<id_a,id_b>> — the same n-1 connectivity chain the
-    window/lead() form emits, as a pure array expression."""
+    array<struct<id_a,id_b>> — the n-1 connectivity chain, as a pure
+    array expression."""
     return F.transform(
         F.slice(ids, 1, F.size(ids) - 1),
         lambda x, i: F.struct(
@@ -358,111 +352,48 @@ def _bucketed_pairs(
     id-sorted consecutive chain — n-1 pairs instead of n(n-1)/2 — which
     keeps every member transitively connected for clustering while
     bounding the fan-out (the scale guard against mass-duplicated
-    content). bucket_cap=None disables the guard — TEST/AUDIT USE ONLY
-    (ADVICE r12): that path materializes each bucket's full id list and
-    its C(n,2) pair array in a single aggregation row, so one
-    pathological bucket can OOM an executor where the capped path (and
-    the pre-r12 self-join) streamed. Production callers must pass a
-    finite cap; the capped branch's per-row memory is bounded by
-    C(bucket_cap, 2) struct entries (~16 MB at the 1000 default).
-
-    Streaming shape (r12 rewrite, now the ``_STREAM_OVERCAP`` fallback,
-    guide §2.4): ONE hash exchange on the bucket key + one sort feed two
-    branches — a window sizes each bucket and lead() emits the over-cap
-    chains from the same sorted run, while ≤ cap rows group into an id
-    array (memory bounded by the cap) whose clique pairs are an array
-    expression. The pre-r12 shape self-joined the bucketed relation and
-    window-counted it separately, recomputing the banded input 3× behind
-    3 full-data exchanges. Output is identical across every shape here:
-    the self-join's a.id < b.id clique equals the position pairs of the
-    sorted distinct-id array (ids are unique per bucket for every caller;
-    an id_a < id_b filter guards the general case), and the array chain
-    equals the window chain.
+    content). bucket_cap=None disables the guard (every bucket emits its
+    clique) — TEST/AUDIT USE ONLY (ADVICE r12): one pathological bucket's
+    C(n,2) pair array lives in a single aggregation row and can OOM an
+    executor. Production callers must pass a finite cap; the capped
+    clique's per-row memory is bounded by C(bucket_cap, 2) struct
+    entries (~16 MB at the 1000 default).
 
     Single-pass conditional emission (r13.2, guide §2.4 "remove shuffles
-    outright"): ONE hash aggregation emits per-bucket conditionally —
-    buckets ≤ cap explode the clique array of their sorted ids, over-cap
-    buckets the consecutive-pair chain array of the SAME sorted ids
-    (identical to the lead()-over-sorted-window chain, see
-    _chain_array_pairs), so no whole-plan regime decision is needed and
-    the output is identical in every regime by construction. The r13.1
-    probed design ran a separate max-bucket-size job first; since
-    buckets are near-unique for every banding caller, its partial
-    counts barely combine and the probe shuffled ~1 row per bucket —
-    the same order of bytes as the main exchange, i.e. the operator
-    shuffled its banded input TWICE at any scale, plus a fixed job
-    round-trip (~0.55 s at sf0.1) locally. Measured: candidate stage
-    med 2.33 s vs 2.94 s probed at sf0.1, identical pair sets.
+    outright"): ONE hash aggregation groups each bucket's sorted id array
+    and emits per bucket — buckets ≤ cap explode the clique array of
+    their sorted ids, over-cap buckets the consecutive-pair chain array
+    of the SAME sorted ids (_chain_array_pairs) — so no whole-plan regime
+    decision, probe job, window or union is needed. The clique of the
+    sorted distinct-id array equals the self-join's a.id < b.id pairs
+    (ids are unique per bucket for every caller; the id_a < id_b filter
+    guards the general case). The r13.1 probed design ran a separate
+    max-bucket-size job first and shuffled the banded input twice;
+    measured: candidate stage med 2.33 s vs 2.94 s probed at sf0.1,
+    identical pair sets.
 
-    Memory: a bucket's sorted id array lives in one aggregation row —
-    bounded by the cap only for ≤ cap buckets; an over-cap bucket
-    materializes 8 B/id plus its n-1 chain-struct array (~40 B/id
-    total — LINEAR in the bucket, vs the C(cap,2) clique bound). A
-    10M-member pathological bucket (10M docs sharing one band value)
-    costs ~400 MB in one task — survivable but not streaming; corpora
-    where a single bucket approaches executor memory should flip
-    ``_STREAM_OVERCAP``, which keeps the r12 streaming two-branch
-    window shape below (one sorted run sizes buckets and lead()-chains
-    the over-cap rows row-by-row)."""
-    from pyspark.sql import Window
-
-    narrow = bucketed.select(*bucket_cols, "id")
-
-    if bucket_cap is not None and not _STREAM_OVERCAP:
-        ids = F.col("__ids__")
-        emit = F.when(
-            F.size(ids) <= bucket_cap,
-            # the clique side filters a < b INSIDE the array (parity with
-            # the two-branch shape, where only small_pairs filtered)
-            F.filter(_sorted_array_pairs(ids), lambda p: p.id_a < p.id_b),
-        ).otherwise(_chain_array_pairs(ids))
-        pairs = (
-            narrow.groupBy(*bucket_cols)
-            .agg(F.array_sort(F.collect_list("id")).alias("__ids__"))
-            .select(F.explode(emit).alias("p"))
-            .select("p.id_a", "p.id_b")
+    Over-cap memory limit: a bucket's sorted id array lives in ONE
+    aggregation row in one task, so an over-cap bucket costs about
+    40 B per id (8 B/id for the array plus its n-1 chain structs) —
+    linear in the bucket, not bounded by the cap. A 10M-member
+    pathological bucket (10M docs sharing one band value) needs ~400 MB
+    in one task; corpora where a single bucket approaches executor
+    memory need a coarser banding or a pre-split of that bucket."""
+    ids = F.col("__ids__")
+    # the clique side filters a < b INSIDE the array
+    emit = F.filter(_sorted_array_pairs(ids), lambda p: p.id_a < p.id_b)
+    if bucket_cap is not None:
+        emit = F.when(F.size(ids) <= bucket_cap, emit).otherwise(
+            _chain_array_pairs(ids)
         )
-        return pairs.dropDuplicates(["id_a", "id_b"])
-
-    if bucket_cap is None:
-        # guard explicitly disabled: whole-bucket cliques (test/audit use)
-        pairs = (
-            narrow.groupBy(*bucket_cols)
-            .agg(F.array_sort(F.collect_list("id")).alias("__ids__"))
-            .select(F.explode(_sorted_array_pairs(F.col("__ids__"))).alias("p"))
-            .select("p.id_a", "p.id_b")
-            .where(F.col("id_a") < F.col("id_b"))
-        )
-        return pairs.dropDuplicates(["id_a", "id_b"])
-
-    # ONE window spec (r13): the bucket size as a whole-frame count over
-    # the SAME ordered spec as the lead() — an unordered count window
-    # spec beside the ordered one planned a second Sort of every bucket
-    # in the chain branch (plans/r13/q49_minhash_lsh_before.txt nodes
-    # 20/22); with one spec both functions share one sorted run.
-    w_ord = Window.partitionBy(*bucket_cols).orderBy("id")
-    w_all = w_ord.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    sized = narrow.select(
-        *bucket_cols,
-        "id",
-        F.count(F.lit(1)).over(w_all).alias("__bsz__"),
-        F.lead("id").over(w_ord).alias("__nid__"),
-    )
-    small_pairs = (
-        sized.where(F.col("__bsz__") <= bucket_cap)
+    pairs = (
+        bucketed.select(*bucket_cols, "id")
         .groupBy(*bucket_cols)
         .agg(F.array_sort(F.collect_list("id")).alias("__ids__"))
-        .select(F.explode(_sorted_array_pairs(F.col("__ids__"))).alias("p"))
+        .select(F.explode(emit).alias("p"))
         .select("p.id_a", "p.id_b")
-        .where(F.col("id_a") < F.col("id_b"))
     )
-    chain = sized.where(
-        (F.col("__bsz__") > bucket_cap) & F.col("__nid__").isNotNull()
-    ).select(F.col("id").alias("id_a"), F.col("__nid__").alias("id_b"))
-
-    return small_pairs.unionByName(chain).dropDuplicates(["id_a", "id_b"])
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_lsh_pairs(

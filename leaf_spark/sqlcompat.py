@@ -26,6 +26,8 @@ import re
 from dataclasses import dataclass, field
 from functools import lru_cache
 
+from .module import split_statements
+
 # ---------------------------------------------------------------------------
 # Tokenizer — minimal SQL-aware scanning (strings, identifiers, parens)
 # ---------------------------------------------------------------------------
@@ -1918,24 +1920,15 @@ def _unquote_ident(tok: str) -> str | None:
     return None
 
 
-def split_statements(sql: str) -> list[str]:
-    """Split on top-level semicolons (never inside parens or strings —
-    strings are single tokens, so only paren depth matters). A compound
-    "select 1; drop table x" must authorize as TWO statements, not hide
-    the second behind the first's head keyword."""
-    toks = tokenize(sql)
-    stmts: list[list[str]] = [[]]
-    depth = 0
-    for t in toks:
-        if t == "(":
-            depth += 1
-        elif t == ")":
-            depth = max(0, depth - 1)
-        if t == ";" and depth == 0:
-            stmts.append([])
-        else:
-            stmts[-1].append(t)
-    return [" ".join(s) for s in stmts if s]
+def trigger_body(toks: list[str], lows: list[str], start: int = 0) -> tuple[str, ...]:
+    """The statements of a CREATE TRIGGER's BEGIN … END body: from the
+    first ``begin`` at or after ``start`` to the LAST ``end`` (the body
+    may contain CASE … END expressions)."""
+    begin_idx = lows.index("begin", start)
+    end_idx = len(lows) - 1 - lows[::-1].index("end")
+    return tuple(
+        s for s in split_statements(_j(toks[begin_idx + 1 : end_idx])) if s.strip()
+    )
 
 
 def classify(sql: str) -> StatementInfo:
@@ -2055,7 +2048,9 @@ class Authorizer:
         if not self.enforce:
             return
         # compound input authorizes per statement — "select 1; drop table x"
-        # must not hide the drop behind the select's head keyword
+        # must not hide the drop behind the select's head keyword. The
+        # module splitter is the one the engine executes with: quotes and
+        # a trigger's BEGIN … END body never split a statement.
         stmts = split_statements(sql)
         if len(stmts) > 1:
             for s in stmts:
@@ -2070,6 +2065,15 @@ class Authorizer:
                 if fn not in allowed:
                     raise AuthorizationError(f"{policy}: function {fn!r} not in allowlist")
         elif policy in ("materialize", "state_materialize"):
+            if info.kind == "create_trigger":
+                # the body runs whenever the trigger fires, with no
+                # authorizer call of its own — authorize each body
+                # statement now, under the creating policy
+                toks = tokenize(sql)
+                lows = [t.lower() if _is_word(t) else t for t in toks]
+                if "begin" in lows and "end" in lows:
+                    for body_stmt in trigger_body(toks, lows):
+                        self.check(body_stmt, policy)
             # every statement kind that creates/writes a table counts —
             # CREATE TABLE state.m is namespace squatting just as surely
             # as INSERT INTO state.m

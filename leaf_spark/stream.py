@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import drisl, localexec
-from .dml import DmlExecutor, TableStore
+from .dml import DmlExecutor, TableStore, flat_name, int_pk, qualified_name
 from .module import BasicModuleDef, split_statements, strip_comments
 from .sqlcompat import Authorizer, classify, tokenize, _is_word
 from .types import Event, IncomingEvent, LeafQuery, SqlValue, validate_params
@@ -160,6 +160,21 @@ class StreamState:
     latest_idx: int = 0
     module_cid: str | None = None
     module_event_cursor: int = 0
+
+
+@dataclass(frozen=True)
+class FoldStep:
+    """One materializer statement's place in a fold plan
+    (``Stream._fold_plan``). ``kind`` is ``plain`` (one set-wise
+    statement over the whole batch), ``roundwise`` (an accumulating
+    upsert applied in per-key occurrence rounds), ``compiled`` (the dedup
+    idiom or an event-keyed DELETE rewritten set-wise) or ``pooled`` (a
+    shared-target group applied in pooled per-key rounds)."""
+
+    kind: str
+    sql: str  # the statement as it executes (compiled / __ord__-injected)
+    target: str | None = None  # pooled: the group's flat target
+    group: list | None = None  # pooled: the group, on its FIRST member only
 
 
 class Stream:
@@ -918,35 +933,71 @@ class Stream:
 
     # -- fold execution ------------------------------------------------------
 
-    def _batch_safe(self, sql: str, ignore_accumulating: bool = False) -> bool:
-        """A materializer is batch-safe when every statement is
-        INSERT … SELECT … FROM event (optionally with ON CONFLICT): applying
-        the whole idx-ordered batch set-wise ≡ per-event sequential fold
-        (upserts keep the last event per conflict key via __ord__).
+    def _fold_plan(self, stmts: list[str]) -> list[FoldStep] | None:
+        """Plan a materializer script as one step per statement, or None
+        for the per-event fold (reference lib.rs:543-569). The first tier
+        that takes the WHOLE script wins:
 
-        Statements whose SELECT reads any store-managed table — e.g. the
-        dedup idiom ``INSERT INTO t SELECT … FROM event WHERE NOT EXISTS
-        (SELECT 1 FROM t …)`` — are NOT batch-safe: set-wise application
-        would evaluate every event against the pre-batch snapshot, missing
-        intra-batch effects the reference's sequential fold sees
-        (basic.rs:76-105). Any known table name at subquery depth (or a
-        ``state.``/``main.``-qualified one) disqualifies; the recognized
-        NOT-EXISTS-on-target shape is then compiled set-wise by
-        ``_compile_script`` and everything else folds per event."""
-        targets: list[tuple[str, bool]] = []  # (flat target, order-sensitive)
-        for stmt in split_statements(strip_comments(sql)):
-            got = self._stmt_batch_safe(stmt)
-            if got is None:
-                return False
-            if not ignore_accumulating and self._accumulating_upsert(stmt):
-                return False
-            targets.append(got)
-        return not self._shared_target_hazard(targets)
+        1. plain + round-wise: every statement is INSERT … SELECT … FROM
+           event (``_stmt_batch_safe``) and no two statements share an
+           order-visible target (``_shared_target_hazard``). Applying the
+           whole idx-ordered batch set-wise ≡ the per-event fold (upserts
+           keep the last event per conflict key via __ord__), except for
+           accumulating upserts (DO UPDATE reads the current row, e.g.
+           ``n = n + 1``): those apply the r-th occurrence of every key
+           per round — R = max per-key multiplicity bounded statements
+           instead of one per event. Statements whose SELECT reads a
+           managed table (e.g. the dedup idiom's NOT EXISTS probe) are
+           not batch-safe: set-wise they would see the pre-batch snapshot
+           and miss intra-batch effects (basic.rs:76-105).
+        2. compiled: the rest of the script is plain and at least one
+           statement compiles set-wise — the NOT-EXISTS-on-target dedup
+           idiom (first-occurrence election + pre-state probe) or an
+           event-keyed DELETE — with no shared target (a compiled probe
+           reads the pre-statement table, and a compiled DELETE's
+           set-wise OR is exact only while no other statement writes its
+           target).
+        3. pooled: shared-target groups run in pooled per-key rounds at
+           their first member's position (``_pooled_steps``).
 
-    def _known_table_names(self) -> set[str]:
-        return {n.lower() for n in self.store.defs} | {
-            n.lower() for n in self.store.views
-        }
+        Each of these replays in O(statements · rounds) Spark statements,
+        not O(events)."""
+        safe = [self._stmt_batch_safe(st) for st in stmts]
+        acc = [self._accumulating_upsert(st) for st in stmts]
+        if (
+            None not in safe
+            and not self._shared_target_hazard(safe)
+            and all(self._roundwise_ok(st) for st, a in zip(stmts, acc) if a)
+        ):
+            return [
+                FoldStep("roundwise", st) if a else self._plain_step(st)
+                for st, a in zip(stmts, acc)
+            ]
+        steps: list[FoldStep] = []
+        targets: list[tuple[str, bool]] = []
+        for st, got, a in zip(stmts, safe, acc):
+            if got is not None and not a:
+                steps.append(self._plain_step(st))
+                targets.append(got)
+                continue
+            cd = self._compile_dedup_idiom(st) or self._compile_delete_setwise(st)
+            if cd is None:
+                break
+            steps.append(FoldStep("compiled", cd[1]))
+            targets.append((cd[0], True))  # probe/interleave order visible
+        else:
+            if any(
+                st.kind == "compiled" for st in steps
+            ) and not self._shared_target_hazard(targets):
+                return steps
+        return self._pooled_steps(stmts, safe, acc)
+
+    def _plain_step(self, stmt: str) -> FoldStep:
+        # __ord__ rides along when conflict resolution or rowid
+        # auto-assignment makes event order visible
+        return FoldStep(
+            "plain", self._inject_ord(stmt) if self._ord_needed(stmt) else stmt
+        )
 
     def _stmt_batch_safe(self, stmt: str) -> tuple[str, bool] | None:
         """(flat target, order-sensitive) when ONE statement is
@@ -954,14 +1005,14 @@ class Stream:
         trigger; None otherwise. Order-sensitive = conflict-resolving
         (which execution sees a key first is visible in the result).
         Accumulating-upsert handling is the caller's concern."""
-        known = self._known_table_names()
+        known = self._known_tables()
         info = classify(stmt)
         if info.kind != "insert":
             return None
         # triggers on the insert target run their bodies per statement
         # execution; per-event application keeps their visibility
         # semantics identical to the reference's row-at-a-time fold
-        tgt = (info.target or "").replace("state.", "state_").replace("main.", "")
+        tgt = flat_name(info.target or "")
         if any(t.table == tgt for t in self.store.triggers.values()):
             return None
         toks = tokenize(stmt)
@@ -1048,14 +1099,7 @@ class Stream:
                     and (i + 1 >= len(toks) or toks[i + 1] != "(")
                 ):
                     return None
-        low = stmt.lower()
-        has_conflict = (
-            " conflict" in low
-            or re.search(r"^\s*replace\b", low) is not None
-            or re.search(r"\binsert\s+or\s+(replace|ignore)\b", low)
-            is not None
-        )
-        return tgt, has_conflict
+        return tgt, self._has_conflict_clause(stmt)
 
     def _shared_target_hazard(
         self, targets: list[tuple[str, bool]]
@@ -1078,20 +1122,21 @@ class Stream:
             if sensitive:
                 return True
             tdef = self.store.defs.get(tgt)
-            if tdef is not None and len(tdef.primary_key) == 1:
-                f_ = next(
-                    (
-                        f
-                        for f in tdef.schema.fields
-                        if f.name == tdef.primary_key[0]
-                    ),
-                    None,
-                )
-                if f_ is not None and isinstance(
-                    f_.dataType, (T.LongType, T.IntegerType)
-                ):
-                    return True  # rowid-alias assignment is order-visible
+            if tdef is not None and int_pk(tdef) is not None:
+                return True  # rowid-alias assignment is order-visible
         return False
+
+    @staticmethod
+    def _has_conflict_clause(stmt: str) -> bool:
+        """ON CONFLICT, REPLACE or INSERT OR REPLACE/IGNORE: which
+        execution sees a key first is visible in the result."""
+        low = stmt.lower()
+        return (
+            " conflict" in low
+            or re.search(r"^\s*replace\b", low) is not None
+            or re.search(r"\binsert\s+or\s+(replace|ignore)\b", low)
+            is not None
+        )
 
     @staticmethod
     def _find_on_conflict(toks: list[str], lows: list[str]) -> int:
@@ -1290,19 +1335,8 @@ class Stream:
         override' shape); pk-omitted inserts keep the dml path. None on
         a malformed shape (caller falls back to the Spark path)."""
         try:
-            into_i = lows.index("into")
-            j = into_i + 1
-            parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                parts += [".", toks[j + 1]]
-                j += 2
-            flat = (
-                "".join(parts)
-                .lower()
-                .replace("state.", "state_")
-                .replace("main.", "")
-            )
+            raw, j = qualified_name(toks, lows.index("into") + 1)
+            flat = flat_name(raw)
             tdef = self.store.defs.get(flat)
             if tdef is None:
                 # target didn't resolve under THIS parse (quoted names,
@@ -1313,15 +1347,8 @@ class Stream:
                 # the normal Spark path rather than pass unassigned rows
                 # through (ADVICE r11, dml.py preassigned-id exemption).
                 return None
-            if len(tdef.primary_key) != 1:
-                return rows
-            pk = tdef.primary_key[0]
-            f_ = next(
-                (f for f in tdef.schema.fields if f.name == pk), None
-            )
-            if f_ is None or not isinstance(
-                f_.dataType, (T.LongType, T.IntegerType)
-            ):
+            pk = int_pk(tdef)
+            if pk is None:
                 return rows
             if j < isel and toks[j] == "(":
                 cols = [
@@ -1374,16 +1401,8 @@ class Stream:
             isel, icut = split
             if icut < 0:
                 return None
-            into_i = lows.index("into")
-            j = into_i + 1
-            name_parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                name_parts += [".", toks[j + 1]]
-                j += 2
-            flat = "".join(name_parts).lower()
-            flat = flat.replace("state.", "state_").replace("main.", "")
-            tdef = self.store.defs.get(flat)
+            raw, j = qualified_name(toks, lows.index("into") + 1)
+            tdef = self.store.defs.get(flat_name(raw))
             if tdef is None:
                 return None
             if j < isel and toks[j] == "(":
@@ -1430,6 +1449,10 @@ class Stream:
     _DELETE_UNSAFE_FNS = frozenset({
         "random", "randomblob", "changes", "last_insert_rowid",
         "total_changes",
+    })
+    # aggregates re-scope from the single-row per-event table to the batch
+    _AGG_FNS = frozenset({
+        "count", "sum", "avg", "min", "max", "total", "group_concat",
     })
 
     def _compile_delete_setwise(self, stmt: str) -> tuple[str, str] | None:
@@ -1479,16 +1502,8 @@ class Stream:
                 or "returning" in lows
             ):
                 return None
-            j = 2
-            raw_parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                raw_parts += [".", toks[j + 1]]
-                j += 2
-            raw_target = "".join(raw_parts)
-            flat = raw_target.lower().replace("state.", "state_").replace(
-                "main.", ""
-            )
+            raw_target, j = qualified_name(toks, 2)
+            flat = flat_name(raw_target)
             tdef = self.store.defs.get(flat)
             if tdef is None:
                 return None
@@ -1510,7 +1525,7 @@ class Stream:
                 elif depth == 0 and lows[i] in ("order", "limit"):
                     return None
             # locate (select <expr> from event) spans; validate + rewrite
-            known = self._known_table_names()
+            known = self._known_tables()
             out: list[str] = []
             i = wlo
             n = len(toks)
@@ -1524,17 +1539,7 @@ class Stream:
                     # finding) — reject rather than emit invalid SQL
                     if out and out[-1].lower() == "exists":
                         return None
-                    # find the matching close paren
-                    d = 0
-                    k = i
-                    while k < n:
-                        if toks[k] == "(":
-                            d += 1
-                        elif toks[k] == ")":
-                            d -= 1
-                            if d == 0:
-                                break
-                        k += 1
+                    k = self._close_paren(toks, i)
                     if k >= n:
                         return None
                     sub = toks[i + 1 : k]
@@ -1573,10 +1578,7 @@ class Stream:
                             nxt = expr[m + 1] if m + 1 < len(expr) else ""
                             prv = expr[m - 1] if m > 0 else ""
                             if nxt == "(":
-                                if el in (
-                                    "count", "sum", "avg", "min", "max",
-                                    "total", "group_concat",
-                                ) or el in self._DELETE_UNSAFE_FNS:
+                                if el in self._AGG_FNS or el in self._DELETE_UNSAFE_FNS:
                                     return None
                                 rewritten.append(et)
                                 continue
@@ -1672,16 +1674,8 @@ class Stream:
                 or "returning" in lows
             ):
                 return None
-            j = 2
-            raw_parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                raw_parts += [".", toks[j + 1]]
-                j += 2
-            raw_target = "".join(raw_parts)
-            flat = raw_target.lower().replace("state.", "state_").replace(
-                "main.", ""
-            )
+            raw_target, j = qualified_name(toks, 2)
+            flat = flat_name(raw_target)
             tdef = self.store.defs.get(flat)
             if tdef is None:
                 return None
@@ -1702,7 +1696,7 @@ class Stream:
                     depth -= 1
                 elif depth == 0 and lows[i] in ("order", "limit"):
                     return None
-            known = self._known_table_names()
+            known = self._known_tables()
             key_expr: list[str] | None = None
             ev_conjs: list[list[str]] = []
             residual: list[list[str]] = []
@@ -1804,16 +1798,8 @@ class Stream:
                 or lows[1] in ("or",)  # UPDATE OR IGNORE/… conflict
             ):
                 return None
-            j = 1
-            raw_parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                raw_parts += [".", toks[j + 1]]
-                j += 2
-            raw_target = "".join(raw_parts)
-            flat = raw_target.lower().replace("state.", "state_").replace(
-                "main.", ""
-            )
+            raw_target, j = qualified_name(toks, 1)
+            flat = flat_name(raw_target)
             tdef = self.store.defs.get(flat)
             if tdef is None:
                 return None
@@ -1840,7 +1826,7 @@ class Stream:
                     break
             if where_i is None:
                 return None  # unkeyed UPDATE touches every row
-            known = self._known_table_names()
+            known = self._known_tables()
             # --- WHERE: find the key conjunct, split the rest ----------
             key_expr: list[str] | None = None
             key_col: str | None = None
@@ -1917,16 +1903,7 @@ class Stream:
                         and i2 + 1 < n2
                         and slows[i2 + 1] == "select"
                     ):
-                        d = 0
-                        k2 = i2
-                        while k2 < n2:
-                            if span[k2] == "(":
-                                d += 1
-                            elif span[k2] == ")":
-                                d -= 1
-                                if d == 0:
-                                    break
-                            k2 += 1
+                        k2 = self._close_paren(span, i2)
                         expr = self._scalar_event_subq(
                             span[i2 : k2 + 1], slows[i2 : k2 + 1]
                         )
@@ -2063,34 +2040,6 @@ class Stream:
         if not span:
             return None
         # --- key equality: <key> = (select <expr> from event) ----------
-        def _subq_expr(tokens: list[str], tl: list[str]):
-            """(select <expr> from event) → expr tokens, else None."""
-            if (
-                len(tokens) >= 5
-                and tokens[0] == "("
-                and tl[1] == "select"
-                and tokens[-1] == ")"
-            ):
-                d = 0
-                for m in range(1, len(tokens) - 1):
-                    if tokens[m] == "(":
-                        d += 1
-                    elif tokens[m] == ")":
-                        d -= 1
-                    elif d == 0 and tl[m] in (
-                        "from", "where", "group", "order", "limit",
-                        "union", "intersect", "except",
-                    ):
-                        if tl[m] != "from":
-                            return None
-                        if (
-                            m + 2 == len(tokens) - 1
-                            and tl[m + 1] == "event"
-                        ):
-                            return tokens[2:m]  # between select and from
-                        return None
-            return None
-
         def _is_key_ref(tokens: list[str], tl: list[str]) -> bool:
             if len(tokens) == 1 and tl[0] == key.lower():
                 return True
@@ -2116,7 +2065,7 @@ class Stream:
                     (right, lright, left, lleft),
                 ):
                     if _is_key_ref(a, la):
-                        expr = _subq_expr(b, lb)
+                        expr = self._scalar_event_subq(b, lb)
                         if expr is not None and self._event_expr_ok(
                             expr, known
                         ):
@@ -2133,17 +2082,8 @@ class Stream:
         while i < n:
             t = span[i]
             if t == "(" and i + 1 < n and slows[i + 1] == "select":
-                d = 0
-                k = i
-                while k < n:
-                    if span[k] == "(":
-                        d += 1
-                    elif span[k] == ")":
-                        d -= 1
-                        if d == 0:
-                            break
-                    k += 1
-                expr = _subq_expr(span[i : k + 1], slows[i : k + 1])
+                k = self._close_paren(span, i)
+                expr = self._scalar_event_subq(span[i : k + 1], slows[i : k + 1])
                 if expr is None or not self._event_expr_ok(expr, known):
                     subq_ok = False
                     break
@@ -2221,16 +2161,7 @@ class Stream:
         while i < n:
             t = span[i]
             if t == "(" and i + 1 < n and slows[i + 1] == "select":
-                d = 0
-                k = i
-                while k < n:
-                    if span[k] == "(":
-                        d += 1
-                    elif span[k] == ")":
-                        d -= 1
-                        if d == 0:
-                            break
-                    k += 1
+                k = self._close_paren(span, i)
                 expr = self._scalar_event_subq(
                     span[i : k + 1], slows[i : k + 1]
                 )
@@ -2249,10 +2180,7 @@ class Stream:
                 if low == "select":
                     return None  # non-event subquery
                 if nxt == "(":
-                    if low in self._DELETE_UNSAFE_FNS or low in (
-                        "count", "sum", "avg", "min", "max", "total",
-                        "group_concat",
-                    ):
+                    if low in self._DELETE_UNSAFE_FNS or low in self._AGG_FNS:
                         return None
                 elif prv == ".":
                     if low not in fields:
@@ -2288,10 +2216,7 @@ class Stream:
             nxt = expr[i + 1] if i + 1 < len(expr) else ""
             prv = expr[i - 1] if i > 0 else ""
             if nxt == "(":
-                if low in (
-                    "count", "sum", "avg", "min", "max", "total",
-                    "group_concat",
-                ) or low in self._DELETE_UNSAFE_FNS:
+                if low in self._AGG_FNS or low in self._DELETE_UNSAFE_FNS:
                     return False
                 continue
             if low in ("event",) and nxt == ".":
@@ -2303,6 +2228,20 @@ class Stream:
     # -- set-wise dedup-idiom compilation (round 9, VERDICT r8 #2) -----------
 
     _DEDUP_ALIASES = ("__dedupsrc__", "__dedupcand__", "__deduptgt__")
+
+    @staticmethod
+    def _close_paren(toks: list[str], i: int) -> int:
+        """Index of the ``)`` closing ``toks[i] == "("`` (len(toks) when
+        unbalanced)."""
+        d = 0
+        for k in range(i, len(toks)):
+            if toks[k] == "(":
+                d += 1
+            elif toks[k] == ")":
+                d -= 1
+                if d == 0:
+                    return k
+        return len(toks)
 
     @staticmethod
     def _top_spans(
@@ -2357,17 +2296,8 @@ class Stream:
             isel, icut = split
             if icut >= 0:  # ON CONFLICT is the upsert machinery's job
                 return None
-            into_i = lows.index("into")
-            j = into_i + 1
-            raw_parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                raw_parts += [".", toks[j + 1]]
-                j += 2
-            raw_target = "".join(raw_parts)
-            flat = raw_target.lower().replace("state.", "state_").replace(
-                "main.", ""
-            )
+            raw_target, j = qualified_name(toks, lows.index("into") + 1)
+            flat = flat_name(raw_target)
             tdef = self.store.defs.get(flat)
             if tdef is None:
                 return None
@@ -2533,22 +2463,14 @@ class Stream:
                 break
         if ifrom < 0:
             return None
-        j = ifrom + 1
-        if j >= len(inner):
+        if ifrom + 1 >= len(inner):
             return None
-        parts = [inner[j]]
-        j += 1
-        if j < len(inner) and inner[j] == ".":
-            parts += [".", inner[j + 1]]
-            j += 2
-        probe_flat = "".join(parts).lower().replace(
-            "state.", "state_"
-        ).replace("main.", "")
-        if probe_flat != flat:
+        probe, j = qualified_name(inner, ifrom + 1)
+        if flat_name(probe) != flat:
             return None
         if j >= len(inner) or inlows[j] != "where":  # no alias/join forms
             return None
-        tname = parts[-1].lower()
+        tname = inner[j - 1].lower()
         tcols = {f.name.lower() for f in tdef.schema.fields}
         colmap = {
             c.lower(): " ".join(
@@ -2615,37 +2537,6 @@ class Stream:
                 keys.append(c)
         return keys or None
 
-    def _compile_script(self, stmts: list[str]) -> list[str] | None:
-        """Script-level set-wise compilation: every statement must be
-        independently batch-safe (non-accumulating), the dedup idiom, or
-        an event-keyed DELETE (r10), with at least one compiled
-        statement and no shared-target hazard (a compiled probe reads
-        the pre-statement table, and a compiled DELETE's set-wise OR is
-        exact only while no other statement writes its target — so no
-        sharing). Returns the statement list with compiled statements
-        replaced, or None — the caller then folds per-event."""
-        out: list[str] = []
-        targets: list[tuple[str, bool]] = []
-        compiled_any = False
-        for stmt in stmts:
-            got = self._stmt_batch_safe(stmt)
-            if got is not None and not self._accumulating_upsert(stmt):
-                out.append(stmt)
-                targets.append(got)
-                continue
-            cd = self._compile_dedup_idiom(stmt)
-            if cd is None:
-                cd = self._compile_delete_setwise(stmt)
-            if cd is None:
-                return None
-            flat, ctext = cd
-            out.append(ctext)
-            targets.append((flat, True))  # probe/interleave order visible
-            compiled_any = True
-        if not compiled_any or self._shared_target_hazard(targets):
-            return None
-        return out
-
     def _exec_roundwise(
         self,
         ex: DmlExecutor,
@@ -2685,15 +2576,22 @@ class Stream:
                 is_state=is_state,
             )
 
-    def _pool_plan(
-        self, stmts: list[str]
-    ) -> dict[str, list[tuple[int, tuple]]] | None:
-        """Plan for the POOLED-ROUND tier (r10, VERDICT r9 #4): scripts
-        where two or more conflict-handling INSERT…SELECT FROM event
-        statements share a target — the shape `_shared_target_hazard`
-        otherwise forces per-event. Returns {target: [(stmt_idx,
-        upsert_shape), …]} for the shared targets, or None when the
-        script doesn't qualify.
+    def _pooled_steps(
+        self,
+        stmts: list[str],
+        safe: list[tuple[str, bool] | None],
+        acc: list[bool],
+    ) -> list[FoldStep] | None:
+        """The POOLED-ROUND tier of ``_fold_plan`` (r10, VERDICT r9 #4):
+        scripts where two or more conflict-handling INSERT…SELECT FROM
+        event statements share a target — the shape
+        `_shared_target_hazard` otherwise forces per-event. ``safe`` and
+        ``acc`` are the planner's per-statement ``_stmt_batch_safe`` and
+        ``_accumulating_upsert`` results. Every member of a shared group
+        becomes a ``pooled`` step; the first carries the group
+        [(stmt_idx, tagged shape), …], which runs there (cross-target
+        statements commute — sources read only event). Returns None when
+        the script doesn't qualify.
 
         Why rounds interleave correctly: each (event, statement) pair is
         an operation touching ONLY the rows of its conflict key (the
@@ -2720,8 +2618,7 @@ class Stream:
             return None
         # ("insert", tgt, conflict?) | ("delete", tgt) | ("update", tgt)
         per_stmt: list[tuple[str, str, bool]] = []
-        for stmt in stmts:
-            got = self._stmt_batch_safe(stmt)
+        for stmt, got in zip(stmts, safe):
             if got is not None:
                 per_stmt.append(("insert", got[0], got[1]))
                 continue
@@ -2747,8 +2644,8 @@ class Stream:
             if len(idxs) > 1
             or any(per_stmt[i][0] == "update" for i in idxs)
         }
-        # a LONE delete is Tier-A _compile_script territory; a lone
-        # delete here (reached because something ELSE made the script
+        # a LONE delete is the compiled tier's territory; a lone delete
+        # here (reached because something ELSE made the script
         # unpoolable by that tier, e.g. a shared group) compiles the
         # same way
         if not shared:
@@ -2771,7 +2668,7 @@ class Stream:
                 and all(not per_stmt[i][2] for i in ins_idxs)
             ):
                 # shared PLAIN inserts: only hazard is the rowid-alias
-                # id sequence (that's why _batch_safe rejected them) —
+                # id sequence (why the plain tier rejected them) —
                 # compile by assigning ids explicitly as max + global
                 # (idx, statement) rank
                 shapes = []
@@ -2811,24 +2708,11 @@ class Stream:
                     return None
                 # auto-assigned rowid-alias PK would number rows in
                 # pooled order — require it be explicitly inserted
-                if len(tdef.primary_key) == 1:
-                    pk = tdef.primary_key[0]
-                    f_ = next(
-                        (
-                            f
-                            for f in tdef.schema.fields
-                            if f.name == pk
-                        ),
-                        None,
-                    )
-                    if (
-                        f_ is not None
-                        and isinstance(
-                            f_.dataType, (T.LongType, T.IntegerType)
-                        )
-                        and pk.lower() not in {c.lower() for c in cols}
-                    ):
-                        return None
+                pk = int_pk(tdef)
+                if pk is not None and pk.lower() not in {
+                    c.lower() for c in cols
+                }:
+                    return None
                 shapes.append((i, ("upsert", shape)))
             if del_idxs or upd_idxs:
                 # interleaved delete/update ops must be keyed by ONE
@@ -2866,19 +2750,28 @@ class Stream:
         # unshared statements must be safe to run set-wise on their own:
         # non-accumulating (or round-wise-able) — accumulating singles
         # reuse the round-wise executor; unshared deletes compile via
-        # the Tier-A rewrite or refuse the plan
+        # the compiled tier's rewrite or refuse the plan
+        steps: list[FoldStep] = []
         for i, (kind, tgt, _) in enumerate(per_stmt):
-            if tgt in shared:
-                continue
-            if kind == "delete":
-                if self._compile_delete_setwise(stmts[i]) is None:
+            if tgt in plan:
+                first = plan[tgt][0][0] == i
+                steps.append(
+                    FoldStep(
+                        "pooled", stmts[i], tgt, plan[tgt] if first else None
+                    )
+                )
+            elif kind == "delete":
+                cd = self._compile_delete_setwise(stmts[i])
+                if cd is None:
                     return None
-                continue
-            if self._accumulating_upsert(stmts[i]) and not (
-                self._roundwise_ok(stmts[i])
-            ):
-                return None
-        return plan
+                steps.append(FoldStep("compiled", cd[1]))
+            elif acc[i]:
+                if not self._roundwise_ok(stmts[i]):
+                    return None
+                steps.append(FoldStep("roundwise", stmts[i]))
+            else:
+                steps.append(self._plain_step(stmts[i]))
+        return steps
 
     def _parse_plain_insert(
         self, stmt: str
@@ -2899,18 +2792,8 @@ class Stream:
             isel, icut = split
             if icut >= 0 or "returning" in lows:
                 return None
-            into_i = lows.index("into")
-            j = into_i + 1
-            parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                parts += [".", toks[j + 1]]
-                j += 2
-            raw_target = "".join(parts)
-            flat = raw_target.lower().replace("state.", "state_").replace(
-                "main.", ""
-            )
-            tdef = self.store.defs.get(flat)
+            raw_target, j = qualified_name(toks, lows.index("into") + 1)
+            tdef = self.store.defs.get(flat_name(raw_target))
             if tdef is None:
                 return None
             if j < isel and toks[j] == "(":
@@ -2919,15 +2802,7 @@ class Stream:
                 ]
             else:
                 cols = [f.name for f in tdef.schema.fields]
-            if len(tdef.primary_key) != 1:
-                return None
-            pk = tdef.primary_key[0]
-            f_ = next(
-                (f for f in tdef.schema.fields if f.name == pk), None
-            )
-            if f_ is None or not isinstance(
-                f_.dataType, (T.LongType, T.IntegerType)
-            ):
+            if int_pk(tdef) is None:
                 return None
             # pk listed in the insert columns is fine (r11): a runtime-NULL
             # id auto-assigns, an explicit one pins — the pooled executor
@@ -2944,15 +2819,7 @@ class Stream:
         lows = [t.lower() if _is_word(t) else t for t in toks]
         if len(lows) < 4 or lows[0] != "update" or lows[1] == "or":
             return None
-        parts = [toks[1]]
-        if len(toks) > 3 and toks[2] == ".":
-            parts += [".", toks[3]]
-        return (
-            "".join(parts)
-            .lower()
-            .replace("state.", "state_")
-            .replace("main.", "")
-        )
+        return flat_name(qualified_name(toks, 1)[0])
 
     @staticmethod
     def _delete_target(stmt: str) -> str | None:
@@ -2961,15 +2828,7 @@ class Stream:
         lows = [t.lower() if _is_word(t) else t for t in toks]
         if len(lows) < 3 or lows[0] != "delete" or lows[1] != "from":
             return None
-        parts = [toks[2]]
-        if len(toks) > 4 and toks[3] == ".":
-            parts += [".", toks[4]]
-        return (
-            "".join(parts)
-            .lower()
-            .replace("state.", "state_")
-            .replace("main.", "")
-        )
+        return flat_name(qualified_name(toks, 2)[0])
 
     def _pooled_source_df(
         self,
@@ -3015,7 +2874,7 @@ class Stream:
         local_rows: list[tuple] | None = None,
     ) -> None:
         """Apply one shared-target statement group in pooled per-key
-        occurrence rounds (see _pool_plan). Group entries are tagged:
+        occurrence rounds (see _pooled_steps). Group entries are tagged:
         ("upsert", upsert_shape), ("delete", (key, raw_target, src_sql,
         residual)) — a keyed delete ranked into the pool — or
         ("delcompiled", sql) for deletes-only groups, which commute and
@@ -3038,12 +2897,7 @@ class Stream:
             # single-partition like the dml layer's own assignment:
             # sequential ids are inherently serial, event-batch-sized
             # only.
-            raw0 = group[0][1][1][0]
-            flat0 = (
-                raw0.lower()
-                .replace("state.", "state_")
-                .replace("main.", "")
-            )
+            flat0 = flat_name(group[0][1][1][0])
             tdef0 = self.store.defs[flat0]
             pk = tdef0.primary_key[0]
             pk_type = next(
@@ -3132,7 +2986,7 @@ class Stream:
                 if tag == "update":
                     keys = [shape[0].lower()]
                     break
-        assert keys is not None  # _pool_plan guarantees a keyed statement
+        assert keys is not None  # _pooled_steps guarantees a keyed statement
         has_delete = any(tag == "delete" for _, (tag, _) in group)
         srcs: list[tuple[int, str, tuple, DataFrame]] = []
         key_frames = []
@@ -3335,48 +3189,20 @@ class Stream:
         without it FRAME order decides — which on a replayed multi-file
         log is size-sorted file order, not event order — r10 finding:
         replayed rowid tables came back with permuted ids)."""
-        low = stmt.lower()
-        if (
-            " conflict" in low
-            or re.search(r"^\s*replace\b", low) is not None
-            or re.search(r"\binsert\s+or\s+(replace|ignore)\b", low)
-            is not None
-        ):
+        if self._has_conflict_clause(stmt):
             return True
         try:
             toks = tokenize(stmt)
             lows = [t.lower() if _is_word(t) else t for t in toks]
             if not lows or lows[0] != "insert":
                 return False
-            into_i = lows.index("into")
-            j = into_i + 1
-            parts = [toks[j]]
-            j += 1
-            if j < len(toks) and toks[j] == ".":
-                parts += [".", toks[j + 1]]
-                j += 2
-            flat = (
-                "".join(parts)
-                .lower()
-                .replace("state.", "state_")
-                .replace("main.", "")
-            )
-            tdef = self.store.defs.get(flat)
-            if tdef is None or len(tdef.primary_key) != 1:
-                return False
-            pk = tdef.primary_key[0]
-            f_ = next(
-                (f for f in tdef.schema.fields if f.name == pk), None
-            )
-            if f_ is None or not isinstance(
-                f_.dataType, (T.LongType, T.IntegerType)
-            ):
-                return False
+            raw, _ = qualified_name(toks, lows.index("into") + 1)
+            tdef = self.store.defs.get(flat_name(raw))
             # rowid-alias targets ALWAYS carry __ord__: even with the pk
             # listed in the insert columns, a runtime-NULL id expression
             # auto-assigns, and the assignment sequence (dml.py's
             # sequential-fold closed form) is defined by event order
-            return True
+            return tdef is not None and int_pk(tdef) is not None
         except Exception:
             return False
 
@@ -3398,7 +3224,11 @@ class Stream:
         are driver-local (interactive commits); enables the sqlite
         fold-source fast path. Replay/catch-up folds read the parquet log
         distributed and pass None — at that scale the set-wise Spark path
-        is the right one."""
+        is the right one.
+
+        Every statement authorizes before the first one executes; then
+        ``_fold_plan``'s steps run in one loop, or — when the planner
+        returns None — the whole script folds per event."""
         if not fold_sql.strip():
             return
         is_state = policy == "state_materialize"
@@ -3411,108 +3241,31 @@ class Stream:
         needs_events = any(
             re.search(r"\bevents\b", st, re.IGNORECASE) for st in stmts
         )
-        if self._batch_safe(fold_sql):
+        plan = self._fold_plan(stmts)
+        for stmt in stmts:
+            self.sql_authorizer.check(stmt, policy)
+        if plan is not None:
             events.createOrReplaceTempView(ev_view)
             ex = self._executor(ev_view, with_events=needs_events)
-            for stmt in stmts:
-                self.sql_authorizer.check(stmt, policy)
-                # __ord__ rides along when conflict resolution or
-                # rowid auto-assignment makes event order visible
-                s = self._inject_ord(stmt) if self._ord_needed(stmt) else stmt
-                s = self._localize_insert(s, local_rows) or s
-                ex.execute(s, is_state=is_state)
-            return
-        if self._batch_safe(fold_sql, ignore_accumulating=True) and all(
-            self._roundwise_ok(st)
-            for st in stmts
-            if self._accumulating_upsert(st)
-        ):
-            # round-wise path: the ONLY disqualifier was an accumulating
-            # DO UPDATE (reads the current target row, e.g. n = n + 1).
-            # Same-key occurrences must fold sequentially, but different
-            # keys are independent (the SET/WHERE exprs are row-local by
-            # the accumulating gate's own definition), so applying the
-            # r-th occurrence of EVERY key set-wise per round is exact —
-            # R = max per-key multiplicity rounds (each one bounded Spark
-            # statement) instead of one statement per EVENT, which is the
-            # difference between replaying a log in O(max-multiplicity)
-            # jobs and O(events) jobs.
-            events.createOrReplaceTempView(ev_view)
-            ex = self._executor(ev_view, with_events=needs_events)
-            for stmt in stmts:
-                self.sql_authorizer.check(stmt, policy)
-                if self._accumulating_upsert(stmt):
-                    self._exec_roundwise(ex, stmt, is_state, local_rows)
-                    continue
-                s = self._inject_ord(stmt) if self._ord_needed(stmt) else stmt
-                s = self._localize_insert(s, local_rows) or s
-                ex.execute(s, is_state=is_state)
-            return
-        compiled = self._compile_script(stmts)
-        if compiled is not None:
-            # dedup-idiom path: the NOT-EXISTS-on-target statements were
-            # compiled set-wise (first-occurrence election + pre-state
-            # probe — exact per-event semantics in ONE statement); the
-            # rest of the script is plain batch-safe. Replay of such a
-            # module is O(statements) Spark jobs, not O(events).
-            events.createOrReplaceTempView(ev_view)
-            ex = self._executor(ev_view, with_events=needs_events)
-            for orig, s in zip(stmts, compiled):
-                self.sql_authorizer.check(orig, policy)
-                if s is not orig:
-                    s2 = self._localize_insert(s, local_rows) or s
-                    ex.execute(s2, is_state=is_state)
-                    continue
-                s = self._inject_ord(orig) if self._ord_needed(orig) else orig
-                s = self._localize_insert(s, local_rows) or s
-                ex.execute(s, is_state=is_state)
-            return
-        pooled = self._pool_plan(stmts)
-        if pooled is not None:
-            # pooled-round path (r10): shared-target conflict-handling
-            # scripts interleave exactly in per-key occurrence rounds —
-            # O(R·S) Spark statements, not O(events). Unshared statements
-            # keep their normal set-wise / round-wise treatment; shared
-            # groups execute at the position of their FIRST statement
-            # (cross-target statements commute — sources read only event).
-            events.createOrReplaceTempView(ev_view)
-            ex = self._executor(ev_view, with_events=needs_events)
-            shared_first: dict[int, str] = {}
-            shared_idxs: set[int] = set()
-            for tgt, grp in pooled.items():
-                shared_first[grp[0][0]] = tgt
-                shared_idxs |= {i for i, _ in grp}
-            for i, stmt in enumerate(stmts):
-                self.sql_authorizer.check(stmt, policy)
-            for i, stmt in enumerate(stmts):
-                if i in shared_idxs:
-                    if i in shared_first:
+            for step in plan:
+                if step.kind == "roundwise":
+                    self._exec_roundwise(ex, step.sql, is_state, local_rows)
+                elif step.kind == "pooled":
+                    if step.group is not None:
                         self._exec_pooled_rounds(
                             ex,
-                            pooled[shared_first[i]],
+                            step.group,
                             is_state,
-                            flat_target=shared_first[i],
+                            flat_target=step.target,
                             local_rows=local_rows,
                         )
-                    continue
-                if self._delete_target(stmt) is not None:
-                    # unshared delete: the Tier-A set-wise rewrite
-                    # (_pool_plan refused the plan unless it compiles)
-                    cd = self._compile_delete_setwise(stmt)
-                    ex.execute(cd[1], is_state=is_state)
-                    continue
-                if self._accumulating_upsert(stmt):
-                    self._exec_roundwise(ex, stmt, is_state, local_rows)
-                    continue
-                s = self._inject_ord(stmt) if self._ord_needed(stmt) else stmt
-                s = self._localize_insert(s, local_rows) or s
-                ex.execute(s, is_state=is_state)
+                else:
+                    s = self._localize_insert(step.sql, local_rows) or step.sql
+                    ex.execute(s, is_state=is_state)
             return
         # per-event sequential fold (reference lib.rs:543-569)
         rows = events.orderBy("idx").collect()
         cols = events.columns
-        for stmt in stmts:
-            self.sql_authorizer.check(stmt, policy)
         for r in rows:
             row = tuple(r[c] for c in cols)
             one = self._event_local_df([row], events.schema)

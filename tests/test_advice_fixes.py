@@ -1,8 +1,9 @@
 """Regression tests for the round-1 advisor findings (ADVICE.md):
 
-1. high   — _batch_safe must reject INSERT…SELECT FROM event statements whose
-            subqueries read managed tables (intra-batch dedup idiom), falling
-            back to the per-event sequential fold (basic.rs:76-105 semantics).
+1. high   — the fold planner must not run INSERT…SELECT FROM event
+            statements whose subqueries read managed tables (intra-batch
+            dedup idiom) as plain set-wise steps: they compile or fall back
+            to the per-event sequential fold (basic.rs:76-105 semantics).
 2. medium — add_state_events: deterministic fold order for multi-event
             batches + rollback on mid-fold failure (lib.rs:721-773).
 3. medium — add_events rollback drops batch-created tables/views (snapshot
@@ -18,7 +19,7 @@ import pytest
 
 from leaf_spark import drisl
 from leaf_spark.dml import DmlExecutor, TableStore
-from leaf_spark.module import BasicModuleDef, QueryDef
+from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
 
@@ -47,7 +48,8 @@ class TestBatchSafeTableRefs:
     def test_dedup_idiom_not_batch_safe(self, spark, tmp_root):
         s = Stream(spark, tmp_root, "did:plc:dedupmod")
         s.provide_module(DEDUP)
-        assert not s._batch_safe(DEDUP.materializer)
+        plan = s._fold_plan(split_statements(DEDUP.materializer))
+        assert [st.kind for st in plan] == ["compiled"]
 
     def test_intra_batch_duplicates_suppressed(self, spark, tmp_root):
         """All three events arrive in ONE batch; the second 'a' must see the
@@ -66,12 +68,13 @@ class TestBatchSafeTableRefs:
             "select idx, user, 'x', 0 from event where user in "
             "(select user from state.read_markers)"
         )
-        assert not s._batch_safe(sql)
+        assert s._fold_plan([sql]) is None
 
     def test_plain_insert_still_batch_safe(self, spark, tmp_root):
         s = Stream(spark, tmp_root, "did:plc:dedupmod4")
         s.provide_module(CHAT)
-        assert s._batch_safe(CHAT.materializer)
+        plan = s._fold_plan(split_statements(CHAT.materializer))
+        assert {st.kind for st in plan} == {"plain"}
 
 
 class TestStateEventBatches:

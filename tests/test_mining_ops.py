@@ -510,15 +510,15 @@ def test_pagerank_iters10_checkpointed_matches_numpy_reference(spark):
 
 
 # ---------------------------------------------------------------------------
-# r13.2 pair-generation internals: conditional emission vs streaming shape
+# r13.2 pair-generation internals: single-pass conditional emission
 # ---------------------------------------------------------------------------
 
 
 def test_bucketed_pairs_conditional_equals_streaming(spark):
-    """The default single-pass conditional emission (cliques <= cap,
+    """The single-pass conditional emission (cliques <= cap,
     sorted-consecutive chains over cap, no probe job) must produce
-    exactly the streaming two-branch window shape's output on a MIXED
-    corpus — some buckets under the cap, one over it."""
+    exactly the expected pairs on a MIXED corpus — some buckets under
+    the cap, one over it — from one aggregation."""
     from leaf_spark.operators import dedup as D
 
     rows = (
@@ -537,16 +537,6 @@ def test_bucketed_pairs_conditional_equals_streaming(spark):
         (r["id_a"], r["id_b"])
         for r in D._bucketed_pairs(bucketed, ["band", "bucket"], 3).collect()
     )
-    old = D._STREAM_OVERCAP
-    D._STREAM_OVERCAP = True
-    try:
-        ref = sorted(
-            (r["id_a"], r["id_b"])
-            for r in D._bucketed_pairs(bucketed, ["band", "bucket"], 3).collect()
-        )
-    finally:
-        D._STREAM_OVERCAP = old
-    assert got == ref
     # chain for the 7-member bucket, cliques for the 3-member ones
     expected = sorted(
         [(i, i + 1) for i in range(6)]          # over-cap chain (bucket A)
@@ -580,8 +570,8 @@ def test_connected_components_observe_convergence(spark):
 
 
 def test_bpe_totals_identical_eager_and_lazy(spark):
-    """track_totals must report the same corpus-size curve through the
-    observe-fused eager arm and the legacy lazy collect arm."""
+    """track_totals must report the corpus-size curve through the
+    observe-fused eager checkpoint: one total per merge."""
     from leaf_spark.operators import bpe as B
 
     docs = spark.createDataFrame(
@@ -589,11 +579,4 @@ def test_bpe_totals_identical_eager_and_lazy(spark):
         ["doc_id", "text"],
     )
     eager = B._learn(docs, 3, "text", 1)[1]
-    old = B._EAGER_LOOP_CKPT
-    B._EAGER_LOOP_CKPT = False
-    try:
-        lazy = B._learn(docs, 3, "text", 1)[1]
-    finally:
-        B._EAGER_LOOP_CKPT = old
-    assert eager == lazy
     assert all(r[5] is not None for r in eager)

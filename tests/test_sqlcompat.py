@@ -434,7 +434,7 @@ class TestAuthorizerRedTeam:
         a.check('insert into "state".m select 1', "state_materialize")
 
     def test_split_statements_respects_paren_depth_and_strings(self):
-        from leaf_spark.sqlcompat import split_statements
+        from leaf_spark.module import split_statements
 
         assert split_statements("select 1; drop table x") == [
             "select 1",
@@ -443,6 +443,29 @@ class TestAuthorizerRedTeam:
         # semicolon inside a string literal is data, not a separator
         assert len(split_statements("select 'a;b' from t")) == 1
         assert len(split_statements("select (select 1) from t")) == 1
+
+    def test_trigger_body_authorizes_under_creating_policy(self):
+        """A trigger body runs with no authorizer call of its own when the
+        trigger fires, so CREATE TRIGGER must authorize every body
+        statement: wrapping a denied write in a trigger must not pass."""
+        from leaf_spark.sqlcompat import AuthorizationError, Authorizer
+
+        a = Authorizer(enforce=True)
+        with pytest.raises(AuthorizationError):
+            a.check("insert into state.m values(1)", "materialize")
+        with pytest.raises(AuthorizationError):
+            a.check(
+                "create trigger t after insert on foo begin "
+                "insert into state.m values(1); end",
+                "materialize",
+            )
+        # a body that writes main passes, CASE … END inside it included
+        a.check(
+            "create trigger t after insert on foo begin "
+            "insert into audit values(case when new.x > 0 then 1 else 0 end); "
+            "delete from audit where x < 0; end",
+            "materialize",
+        )
 
 
 class TestAuthorizerNamespaceHardening:

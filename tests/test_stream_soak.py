@@ -18,11 +18,27 @@ import random
 import pytest
 
 from leaf_spark import drisl
-from leaf_spark.module import BasicModuleDef, QueryDef
+from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import BatchRejected, Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
 
 pytestmark = pytest.mark.slow
+
+
+def fold_kinds(s, script):
+    """Step kinds of the fold plan for a script (SQL text or statement
+    list); None = the per-event fold."""
+    stmts = split_statements(script) if isinstance(script, str) else script
+    plan = s._fold_plan(stmts)
+    return None if plan is None else [st.kind for st in plan]
+
+
+def pooled_groups(s, stmts):
+    """{flat target: group} of the plan's pooled steps (None = per-event)."""
+    plan = s._fold_plan(stmts)
+    if plan is None:
+        return None
+    return {st.target: st.group for st in plan if st.group is not None}
 
 
 # batch-safe: localized authorize (throw on empty key) + localized
@@ -262,18 +278,18 @@ class TestAccumulatingUpsertBatchSafety:
     application diverge from the reference's per-event fold when a batch
     repeats a conflict key."""
 
-    def _safe(self, spark, tmp_path, mod, stmt):
+    def _kinds(self, spark, tmp_path, mod, stmt):
         s = Stream(spark, str(tmp_path), "did:plc:bsafe")
         s.provide_module(mod)
-        return s._batch_safe(stmt)
+        return fold_kinds(s, [stmt])
 
     def test_excluded_only_set_stays_batch_safe(self, spark, tmp_path):
-        assert self._safe(
+        assert self._kinds(
             spark, tmp_path, KV,
             "insert into kv (k, v, n) select drisl_extract(payload, '.k'),"
             " 1, 1 from event where true"
             " on conflict(k) do update set v = excluded.v + 1",
-        )
+        ) == ["plain"]
 
     def test_target_reading_set_not_batch_safe(self, spark, tmp_path):
         for clause in (
@@ -281,19 +297,19 @@ class TestAccumulatingUpsertBatchSafety:
             "set v = kv.v + excluded.v",
             "set v = excluded.v where v > 2",
         ):
-            assert not self._safe(
+            assert self._kinds(
                 spark, tmp_path, KV,
                 "insert into kv (k, v, n) select"
                 " drisl_extract(payload, '.k'), 1, 1 from event where true"
                 f" on conflict(k) do update {clause}",
-            ), clause
+            ) == ["roundwise"], clause
 
     def test_do_nothing_stays_batch_safe(self, spark, tmp_path):
-        assert self._safe(
+        assert self._kinds(
             spark, tmp_path, KV,
             "insert into bans (user) select user from event where true"
             " on conflict(user) do nothing",
-        )
+        ) == ["plain"]
 
     def test_in_batch_duplicate_key_increments_per_event(
         self, spark, tmp_path
@@ -341,8 +357,7 @@ class TestRoundwiseUpsert:
         silently regress replay back to O(events)."""
         s = Stream(spark, str(tmp_path), "did:plc:rw2")
         s.provide_module(KV)
-        assert not s._batch_safe(KV.materializer)
-        assert s._batch_safe(KV.materializer, ignore_accumulating=True)
+        assert fold_kinds(s, KV.materializer) == ["roundwise", "plain"]
         stmts = [
             st for st in KV.materializer.split(";") if st.strip()
         ]
@@ -405,10 +420,9 @@ class TestStatementMajorHazard:
         would give ((1+1)*2)*2 = 8."""
         s = Stream(spark, str(tmp_path), "did:plc:smh1")
         s.provide_module(self.TWO_ACC)
-        assert not s._batch_safe(self.TWO_ACC.materializer)
-        assert not s._batch_safe(
-            self.TWO_ACC.materializer, ignore_accumulating=True
-        )
+        assert fold_kinds(s, self.TWO_ACC.materializer) == [
+            "pooled", "pooled",
+        ]
         s.add_events([ev("u", k="a"), ev("u", k="a")])
         assert s.query(None, LeafQuery("acc")) == [{"k": "a", "n": 6}]
         # replay reproduces the same interleaving
@@ -441,7 +455,7 @@ class TestStatementMajorHazard:
         )
         s = Stream(spark, str(tmp_path), "did:plc:smh2")
         s.provide_module(mod)
-        assert not s._batch_safe(mod.materializer)
+        assert fold_kinds(s, mod.materializer) == ["pooled", "pooled"]
         # key 'x' arrives via stmt2 in event 1 and stmt1 in event 2: the
         # reference's per-event interleaving means stmt2@e1 wins
         s.add_events([ev("u", b="x"), ev("u", a="x")])
@@ -452,7 +466,7 @@ class TestStatementMajorHazard:
         bans — different tables) must keep the round-wise dispatch."""
         s = Stream(spark, str(tmp_path), "did:plc:smh3")
         s.provide_module(KV)
-        assert s._batch_safe(KV.materializer, ignore_accumulating=True)
+        assert fold_kinds(s, KV.materializer) == ["roundwise", "plain"]
 
     def test_shared_target_plain_inserts_with_rowid_alias(
         self, spark, tmp_path
@@ -473,7 +487,7 @@ class TestStatementMajorHazard:
         )
         s = Stream(spark, str(tmp_path), "did:plc:smh4")
         s.provide_module(mod)
-        assert not s._batch_safe(mod.materializer)
+        assert fold_kinds(s, mod.materializer) == ["pooled", "pooled"]
         s.add_events([ev("u", v=1), ev("u", v=2)])
         assert s.query(None, LeafQuery("logb")) == [
             {"id": 1, "tag": "a1"}, {"id": 2, "tag": "b1"},
@@ -528,9 +542,9 @@ class TestDedupIdiomCompilation:
         stmts = [
             st.strip() for st in DEDUP.materializer.split(";") if st.strip()
         ]
-        compiled = s._compile_script(stmts)
-        assert compiled is not None and compiled[0] != stmts[0]
-        assert "row_number() over" in compiled[0]
+        plan = s._fold_plan(stmts)
+        assert [st.kind for st in plan] == ["compiled"]
+        assert "row_number() over" in plan[0].sql
 
     def test_replay_runs_one_statement_not_per_event(
         self, spark, tmp_path, monkeypatch
@@ -584,9 +598,7 @@ class TestDedupIdiomCompilation:
             ),
         )
         s = self._mk(spark, tmp_path, mod)
-        assert s._compile_script(
-            [mod.materializer.strip().rstrip(";")]
-        ) is not None
+        assert fold_kinds(s, mod.materializer) == ["compiled"]
         s.add_events([
             ev("u", other=1), ev("u", key="a"), ev("u", other=2),
             ev("u", key="a"),
@@ -618,9 +630,7 @@ class TestDedupIdiomCompilation:
             ),
         )
         s = self._mk(spark, tmp_path, mod)
-        assert s._compile_script(
-            [mod.materializer.strip().rstrip(";")]
-        ) is not None
+        assert fold_kinds(s, mod.materializer) == ["compiled"]
         s.add_events([
             ev("u", a="x", b="1"), ev("u", a="x", b="2"),
             ev("u", a="x", b="1"), ev("u", nothing=True),
@@ -653,9 +663,7 @@ class TestDedupIdiomCompilation:
             ),
         )
         s = self._mk(spark, tmp_path, mod)
-        assert s._compile_script(
-            [mod.materializer.strip().rstrip(";")]
-        ) is None
+        assert fold_kinds(s, mod.materializer) is None
         s.add_events([ev("u", key="a"), ev("u", key="A"), ev("u", key="a")])
         # per-event: 'a' inserts (probe 'A' absent); 'A' inserts (probe
         # 'A' != raw row 'a'); second 'a' probes 'A' — now present → blocked
@@ -682,8 +690,7 @@ class TestDedupIdiomCompilation:
             ),
         )
         s = self._mk(spark, tmp_path, mod)
-        stmts = [st.strip() for st in mod.materializer.split(";") if st.strip()]
-        assert s._compile_script(stmts) is None
+        assert fold_kinds(s, mod.materializer) is None
         s.add_events([ev("u", key="a"), ev("u", key="a")])
         assert s.query(None, LeafQuery("seen3")) == [
             {"key": "a", "idx": 1}, {"key": "marker", "idx": 1},
@@ -712,10 +719,7 @@ class TestDedupIdiomCompilation:
             ),
         )
         s = self._mk(spark, tmp_path, mod)
-        stmts = [st.strip() for st in mod.materializer.split(";") if st.strip()]
-        compiled = s._compile_script(stmts)
-        assert compiled is not None
-        assert compiled[0] != stmts[0] and compiled[1] is stmts[1]
+        assert fold_kinds(s, mod.materializer) == ["compiled", "plain"]
         s.add_events([ev("ua", key="a"), ev("ub", key="a")])
         assert s.query(None, LeafQuery("seen4")) == [{"key": "a", "idx": 1}]
         assert s.query(None, LeafQuery("log4")) == [
@@ -999,8 +1003,7 @@ class TestDeleteCompilation:
             for st in DELMOD.materializer.split(";")
             if st.strip()
         ]
-        compiled = s._compile_script(stmts)
-        assert compiled is not None and compiled[1] != stmts[1]
+        assert fold_kinds(s, stmts) == ["plain", "compiled"]
 
     def test_delete_gates_fall_back(self, spark, tmp_path):
         s = Stream(spark, str(tmp_path), "did:plc:delc2")
@@ -1091,7 +1094,7 @@ class TestDeleteCompilation:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._compile_script(stmts) is not None
+        assert fold_kinds(s, stmts) == ["compiled"]
         s.add_events([ev("u", below=2), ev("u", below=1)])
         assert [r["id"] for r in s.query(None, LeafQuery("items2"))] == [
             "c", "d"
@@ -1124,8 +1127,8 @@ class TestDeleteCompilation:
             for st in self.LIVE.materializer.split(";")
             if st.strip()
         ]
-        assert s._compile_script(stmts) is None  # Tier A refuses sharing
-        assert s._pool_plan(stmts) is not None  # pooled rounds take it
+        # the compiled tier refuses sharing; pooled rounds take it
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
         # add a, del a, add a  → a present (statement-major would drop it)
         s.add_events(
             [ev("u", add="a"), ev("u", **{"del": "a"}), ev("u", add="a")]
@@ -1202,7 +1205,7 @@ class TestDeleteCompilation:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
         # set a=5; delete a (v<10 → goes); set b=50; delete b (v<10
         # residual FALSE → stays)
         s.add_events(
@@ -1245,11 +1248,10 @@ class TestDeleteCompilation:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        plan = s._pool_plan(stmts)
-        assert plan is not None
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
         assert all(
             tag == "delcompiled"
-            for _, (tag, _) in plan["items3"]
+            for _, (tag, _) in pooled_groups(s, stmts)["items3"]
         )
         s.add_events([ev("u", id="d", grp="x")])
         assert [r["id"] for r in s.query(None, LeafQuery("items3"))] == [
@@ -1283,7 +1285,7 @@ class TestDeleteCompilation:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is None
+        assert fold_kinds(s, stmts) is None
         # per-event still correct: add k1(v=1), purge below 2 → gone;
         # add k2 afterwards → stays
         s.add_events(
@@ -1303,9 +1305,7 @@ class TestPooledRounds:
             for st in POOLMOD.materializer.split(";")
             if st.strip()
         ]
-        assert not s._batch_safe(POOLMOD.materializer)
-        assert s._compile_script(stmts) is None
-        assert s._pool_plan(stmts) is not None
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
         # k arrives via stmt2 (b) FIRST, then stmt1 (a): per-event order
         # means stmt1@e2 wins; statement-major would let stmt2 win
         s.add_events(
@@ -1433,7 +1433,7 @@ class TestPooledRounds:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is None
+        assert fold_kinds(s, stmts) is None
 
     def test_mismatched_keys_refuse_pool(self, spark, tmp_path):
         mod = BasicModuleDef(
@@ -1457,7 +1457,7 @@ class TestPooledRounds:
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
         # same key SET (order-insensitive) → pools fine
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
 
     def test_two_acc_takes_pooled_path_now(self, spark, tmp_path):
         """The TWO_ACC hazard module (n=n+1 / n=n*2) now pools — same
@@ -1469,7 +1469,7 @@ class TestPooledRounds:
             for st in TestStatementMajorHazard.TWO_ACC.materializer.split(";")
             if st.strip()
         ]
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
 
 
 class TestSetwiseDivergentTails:
@@ -1494,10 +1494,7 @@ class TestSetwiseDivergentTails:
         )
         s = Stream(spark, str(tmp_path), "did:plc:grp1")
         s.provide_module(mod)
-        assert not s._batch_safe(mod.materializer)
-        assert s._pool_plan(
-            [mod.materializer.strip().rstrip(";")]
-        ) is None
+        assert fold_kinds(s, mod.materializer) is None
         s.add_events([ev("u", x=1), ev("u", x=2), ev("v", x=3)])
         # reference per-event: each event sees a 1-row table → (user, 1)
         assert s.query(None, LeafQuery("tally")) == [
@@ -1518,7 +1515,7 @@ class TestSetwiseDivergentTails:
         )
         s = Stream(spark, str(tmp_path), "did:plc:grp2")
         s.provide_module(mod)
-        assert not s._batch_safe(mod.materializer)
+        assert fold_kinds(s, mod.materializer) is None
         s.add_events([ev("u", x=1), ev("u", x=2), ev("u", x=3)])
         assert s.query(None, LeafQuery("agg1")) == [
             {"n": 1}, {"n": 1}, {"n": 1},
@@ -1536,7 +1533,7 @@ class TestSetwiseDivergentTails:
         )
         s = Stream(spark, str(tmp_path), "did:plc:grp3")
         s.provide_module(mod)
-        assert not s._batch_safe(mod.materializer)
+        assert fold_kinds(s, mod.materializer) is None
         s.add_events([ev("u", x=1), ev("u", x=2)])
         # per-event: limit 1 of a single-row table = every event's row
         assert s.query(None, LeafQuery("lim1")) == [{"i": 1}, {"i": 2}]
@@ -1554,7 +1551,7 @@ class TestSetwiseDivergentTails:
         )
         s = Stream(spark, str(tmp_path), "did:plc:grp4")
         s.provide_module(mod)
-        assert s._batch_safe(mod.materializer)
+        assert fold_kinds(s, mod.materializer) == ["plain"]
         s.add_events([ev("u", v=-3), ev("u", v=7)])
         assert s.query(None, LeafQuery("mm")) == [{"v": 0}, {"v": 7}]
 
@@ -1577,7 +1574,7 @@ class TestPooledUpdates:
             for st in COUNTER.materializer.split(";")
             if st.strip()
         ]
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
         s.add_events([bump("u", "x", 1)])
         s.add_events(
             [bump("u", "x", 10), bump("u", "x", 100), bump("u", "y", 7)]
@@ -1621,7 +1618,7 @@ class TestPooledUpdates:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
         # non-commutative v*2+d per event, same key twice in one batch:
         # a: ((0*2+3)*2+5) = 11 — a single set-wise pass would get 5
         s.add_events([ev("u", g="a", d=3), ev("u", g="a", d=5)])
@@ -1656,8 +1653,8 @@ class TestPooledUpdates:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        plan = s._pool_plan(stmts)
-        assert plan is not None and len(plan["acct"]) == 3
+        assert fold_kinds(s, stmts) == ["pooled", "pooled", "pooled"]
+        assert len(pooled_groups(s, stmts)["acct"]) == 3
         # open a; pay a +5; pay a +7; close a; open a (fresh, bal 0)
         s.add_events(
             [
@@ -1726,7 +1723,7 @@ class TestPooledUpdates:
              "(select drisl_extract(payload, '.name') from event) "
              "returning name"],
         ]:
-            assert s._pool_plan(stmts) is None, stmts[0]
+            assert fold_kinds(s, stmts) is None, stmts[0]
 
     def test_update_event_conjunct_and_residual(self, spark, tmp_path):
         """Event-only conjunct gates which events generate ops; a
@@ -1752,7 +1749,7 @@ class TestPooledUpdates:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is not None
+        assert "pooled" in fold_kinds(s, stmts)
         s.add_events(
             [
                 ev("u", k="a", d=10, op="add"),   # 1 → 11
@@ -1846,9 +1843,10 @@ class TestPooledPlainInserts:
             for st in self.MOD.materializer.split(";")
             if st.strip()
         ]
-        plan = s._pool_plan(stmts)
-        assert plan is not None
-        assert all(tag == "plainins" for _, (tag, _) in plan["logb"])
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
+        assert all(
+            tag == "plainins" for _, (tag, _) in pooled_groups(s, stmts)["logb"]
+        )
         # event 1 fires both statements; event 2 only the first
         s.add_events([ev("u", b=1), ev("u", x=1)])
         assert s.query(None, LeafQuery("logb")) == [
@@ -1903,9 +1901,10 @@ class TestPooledPlainInserts:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        plan = s._pool_plan(stmts)
-        assert plan is not None
-        assert all(tag == "plainins" for _, (tag, _) in plan["logc"])
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
+        assert all(
+            tag == "plainins" for _, (tag, _) in pooled_groups(s, stmts)["logc"]
+        )
         # e1: auto a + b; e2: explicit 100 a; e3: auto a + b; e4: explicit
         # 5 a (below the running max); e5: auto a
         s.add_events(
@@ -2218,9 +2217,10 @@ class TestGuardedConjuncts:
             for st in self.GUARDED.materializer.split(";")
             if st.strip()
         ]
-        assert s._compile_script(stmts) is None
-        plan = s._pool_plan(stmts)
-        assert plan is not None and "gc" in plan
+        # the compiled tier refuses; pooled rounds take the script
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
+        plan = pooled_groups(s, stmts)
+        assert "gc" in plan
         tags = sorted(tag for _, (tag, _) in plan["gc"])
         assert tags == ["update", "upsert"]
 
@@ -2282,7 +2282,7 @@ class TestGuardedConjuncts:
             for st in self.GUARDED_DEL.materializer.split(";")
             if st.strip()
         ]
-        plan = s._pool_plan(stmts)
+        plan = pooled_groups(s, stmts)
         assert plan is not None and "gd" in plan
         tags = sorted(tag for _, (tag, _) in plan["gd"])
         assert tags == ["delete", "upsert"]
@@ -2389,9 +2389,10 @@ class TestUniqueKeyedUpdates:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._compile_script(stmts) is None
-        plan = s._pool_plan(stmts)
-        assert plan is not None and "accounts" in plan
+        # the compiled tier refuses; pooled rounds take the script
+        assert fold_kinds(s, stmts) == ["pooled", "pooled"]
+        plan = pooled_groups(s, stmts)
+        assert "accounts" in plan
         tags = sorted(tag for _, (tag, _) in plan["accounts"])
         assert tags == ["update", "upsert"]
 
@@ -2408,7 +2409,7 @@ class TestUniqueKeyedUpdates:
         stmts = [
             st.strip() for st in mod.materializer.split(";") if st.strip()
         ]
-        assert s._pool_plan(stmts) is None
+        assert fold_kinds(s, stmts) is None
         # … and the per-event fold still computes the right answer
         s.add_events([ev("u", reg="a"), ev("u", h="a", pts=3)])
         assert s.query(None, LeafQuery("accounts")) == [
@@ -2504,7 +2505,7 @@ class TestUniqueKeyedUpdates:
                 for st in mod.materializer.split(";")
                 if st.strip()
             ]
-            assert s2._pool_plan(stmts) is not None
+            assert "pooled" in fold_kinds(s2, stmts)
             s2.add_events([ev("u", h="a", pts=5)])
             assert s2.query(None, LeafQuery("accounts")) == [
                 {"handle": "a", "score": 7}

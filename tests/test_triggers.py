@@ -9,7 +9,7 @@ import pytest
 
 from leaf_spark import drisl
 from leaf_spark.dml import DmlExecutor, TableStore
-from leaf_spark.module import BasicModuleDef, QueryDef
+from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
 
@@ -153,7 +153,7 @@ class TestTriggersInModules:
         s = Stream(spark, tmp_root, "did:plc:trig")
         s.provide_module(TRIG_MOD)
         # trigger on the insert target forces the per-event fold path
-        assert not s._batch_safe(TRIG_MOD.materializer)
+        assert s._fold_plan(split_statements(TRIG_MOD.materializer)) is None
         s.add_events(
             [
                 IncomingEvent("u", drisl.encode({"b": "one"})),
