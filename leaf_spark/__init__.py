@@ -15,6 +15,9 @@ Layout
                            authorization (≈ reference authorizer, lib.rs:989+)
 - ``leaf_spark.stream``    Stream: open/append/authorize/materialize/replay/
                            query/subscribe (≈ reference leaf-stream/src/lib.rs)
+- ``leaf_spark.fold``      materializer fold compiler: ``plan`` (script →
+                           per-statement steps from table metadata) and
+                           ``execute`` (round-wise / pooled steps on Spark)
 - ``leaf_spark.catalog``   stream + module registry, GC
                            (≈ reference leaf-server/src/storage.rs)
 - ``leaf_spark.operators`` scale extensions: dedup, similarity search,

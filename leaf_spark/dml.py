@@ -23,7 +23,7 @@ job per statement per batch, not per event). Sequential per-event semantics
 are preserved by the upsert dedup (last event per conflict key wins, in idx
 order) and by falling back to a per-event loop for statements whose
 semantics genuinely depend on row-at-a-time application (see
-stream.py:_fold_batch).
+fold/plan.py).
 """
 
 from __future__ import annotations
@@ -36,7 +36,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import sqlcompat
-from .sqlcompat import SqlTranslationError, tokenize, trigger_body, _find_args, _is_word, _j
+from .sqlcompat import (
+    SqlTranslationError,
+    close_paren,
+    on_conflict_at,
+    split_top,
+    tokenize,
+    top_level,
+    trigger_body,
+    _find_args,
+    _is_word,
+    _j,
+)
 
 _SQLITE_TYPE_MAP = {
     "integer": T.LongType(),
@@ -69,7 +80,7 @@ class TableDef:
     # lowercased columns carrying a DDL-declared single-column UNIQUE
     # constraint (column-level UNIQUE or one-column table-level
     # UNIQUE(col)). Uniqueness is metadata for the fold compiler's
-    # keyed-update tier (stream.py pooled rounds accept these as
+    # keyed-update tier (fold/plan.py pooled rounds accept these as
     # conflict keys alongside the pk); like the pk it is not separately
     # enforced on plain inserts. CREATE UNIQUE INDEX columns live in
     # TableStore.unique_indexes (droppable, so tracked by index name).
@@ -287,6 +298,10 @@ class TableStore:
         # inherit (see create())
         self._snap_deltas[name] = None
         self.spark.catalog.dropTempView(self.view_name(name))
+
+    def known_tables(self) -> set[str]:
+        """Lowercased names of every managed table and view."""
+        return {n.lower() for n in self.defs} | {n.lower() for n in self.views}
 
     def unique_key_cols(self, name: str) -> set:
         """Lowercased columns of ``name`` with a declared single-column
@@ -695,13 +710,8 @@ class DmlExecutor:
     def _split_returning(toks: list[str]) -> tuple[list[str], list[str] | None]:
         """Split a top-level RETURNING clause off a DML statement; returns
         (body tokens, list of returning expressions or None)."""
-        depth = 0
-        for i, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_word(t) and t.lower() == "returning":
+        for i in top_level(toks):
+            if toks[i].lower() == "returning":
                 tail = toks[i + 1 :]
                 if tail == ["*"]:
                     return toks[:i], ["*"]
@@ -856,18 +866,6 @@ class DmlExecutor:
 
     # -- WITH RECURSIVE ------------------------------------------------------
 
-    @staticmethod
-    def _match_paren(toks: list[str], open_idx: int) -> int:
-        depth = 0
-        for i in range(open_idx, len(toks)):
-            if toks[i] == "(":
-                depth += 1
-            elif toks[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i
-        raise SqlTranslationError("unbalanced parentheses")
-
     def _with_recursive(self, toks: list[str], args: dict | None, is_state: bool):
         """Evaluate ``WITH RECURSIVE name [(cols)] AS (base UNION [ALL]
         step) [, more_ctes…] <main statement>``.
@@ -889,7 +887,7 @@ class DmlExecutor:
             i += 1
             cols: list[str] | None = None
             if i < len(toks) and toks[i] == "(":
-                close = self._match_paren(toks, i)
+                close = close_paren(toks, i)
                 cols = [t.lower() for t in toks[i + 1 : close] if _is_word(t)]
                 i = close + 1
             if i >= len(toks) or lows[i] != "as":
@@ -897,7 +895,9 @@ class DmlExecutor:
             i += 1
             if i >= len(toks) or toks[i] != "(":
                 raise SqlTranslationError("expected ( after AS")
-            close = self._match_paren(toks, i)
+            close = close_paren(toks, i)
+            if close >= len(toks):
+                raise SqlTranslationError("unbalanced parentheses")
             body = toks[i + 1 : close]
             i = close + 1
             vname = f"{self.store.view_prefix}cte_{name}"
@@ -927,22 +927,12 @@ class DmlExecutor:
             df = sub._sql(_j(body), args)
             return df.toDF(*cols) if cols else df
         # split base | step at the first top-level UNION [ALL]
-        depth = 0
-        u = None
-        union_all = False
-        for k, t in enumerate(body):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and lows[k] == "union":
-                u = k
-                union_all = k + 1 < len(body) and lows[k + 1] == "all"
-                break
+        u = next((k for k in top_level(body) if lows[k] == "union"), None)
         if u is None:
             raise SqlTranslationError(
                 f"recursive CTE {name} has no top-level UNION"
             )
+        union_all = u + 1 < len(body) and lows[u + 1] == "all"
         base = sub._sql(_j(body[:u]), args)
         if cols:
             base = base.toDF(*cols)
@@ -1273,18 +1263,8 @@ class DmlExecutor:
     def _insert(self, sql: str, args: dict | None) -> "DataFrame":
         toks = tokenize(sql)
         lows = [t.lower() if _is_word(t) else t for t in toks]
-        # split "on conflict" at top level
-        depth = 0
-        conflict_at = None
-        for i, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and lows[i] == "on" and i + 1 < len(toks) and lows[i + 1] == "conflict":
-                conflict_at = i
-                break
-        body, conflict = (toks[:conflict_at], toks[conflict_at:]) if conflict_at is not None else (toks, None)
+        conflict_at = on_conflict_at(toks, lows)
+        body, conflict = (toks[:conflict_at], toks[conflict_at:]) if conflict_at >= 0 else (toks, None)
         lows_b = [t.lower() if _is_word(t) else t for t in body]
 
         into = lows_b.index("into")
@@ -1394,7 +1374,7 @@ class DmlExecutor:
         # the pooled-round executor (``… from …__poolsrc__``) and the
         # localized fold path (``… from …__localsrc__``, which runs the
         # same sequential max+1 fold driver-side in
-        # Stream._assign_local_rowids precisely so its literal plan —
+        # fold.execute._assign_local_rowids precisely so its literal plan —
         # the LocalRelation the snapshot/mirror chains key on — is not
         # wrapped in assignment windows here). Exempting them skips a
         # table-max job per statement on the compiled-fold hot path.
@@ -1636,22 +1616,7 @@ class DmlExecutor:
     def _parse_assignments(toks: list[str]) -> dict[str, str]:
         """SET a = expr, b = expr — split on top-level commas."""
         out: dict[str, str] = {}
-        depth = 0
-        cur: list[str] = []
-        parts: list[list[str]] = []
-        for t in toks:
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            if t == "," and depth == 0:
-                parts.append(cur)
-                cur = []
-            else:
-                cur.append(t)
-        if cur:
-            parts.append(cur)
-        for p in parts:
+        for p in split_top(toks):
             eq = p.index("=")
             out[p[0].lower()] = _j(p[eq + 1 :])
         return out
@@ -1684,13 +1649,8 @@ class DmlExecutor:
     # -- UPDATE / DELETE -----------------------------------------------------
 
     def _split_where(self, toks: list[str]) -> tuple[list[str], list[str] | None]:
-        depth = 0
-        for i, t in enumerate(toks):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_word(t) and t.lower() == "where":
+        for i in top_level(toks):
+            if toks[i].lower() == "where":
                 return toks[:i], toks[i + 1 :]
         return toks, None
 
@@ -1704,16 +1664,9 @@ class DmlExecutor:
         set_idx = lows.index("set")
         rest = toks[set_idx + 1 :]
         # UPDATE … FROM (SQLite 3.33 join-update): split a top-level FROM
-        depth = 0
-        from_at = None
-        for i, t in enumerate(rest):
-            if t == "(":
-                depth += 1
-            elif t == ")":
-                depth -= 1
-            elif depth == 0 and _is_word(t) and t.lower() == "from":
-                from_at = i
-                break
+        from_at = next(
+            (i for i in top_level(rest) if rest[i].lower() == "from"), None
+        )
         if from_at is not None:
             assign_toks = rest[:from_at]
             tail, fwhere = self._split_where(rest[from_at + 1 :])

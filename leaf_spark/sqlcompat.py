@@ -80,6 +80,81 @@ def _is_word(tok: str) -> bool:
 
 
 # ---------------------------------------------------------------------------
+# Token scanner — the one paren-depth walk every token-level parser uses
+# ---------------------------------------------------------------------------
+
+
+def close_paren(toks: list[str], i: int) -> int:
+    """Index of the ``)`` closing ``toks[i] == "("`` (len(toks) when
+    unbalanced)."""
+    d = 0
+    for k in range(i, len(toks)):
+        if toks[k] == "(":
+            d += 1
+        elif toks[k] == ")":
+            d -= 1
+            if d == 0:
+                return k
+    return len(toks)
+
+
+def top_level(toks: list[str], start: int = 0, end: int | None = None):
+    """Yield the indices in [start, end) at paren depth 0 relative to
+    ``start``, stepping over parenthesized groups (their parens
+    included). An unmatched ``)`` is yielded and ends the walk."""
+    end = len(toks) if end is None else end
+    i = start
+    while i < end:
+        t = toks[i]
+        if t == "(":
+            i = close_paren(toks, i) + 1
+            continue
+        yield i
+        if t == ")":
+            return
+        i += 1
+
+
+def top_spans(
+    toks: list[str], sep: str, start: int = 0, end: int | None = None
+) -> list[tuple[int, int]]:
+    """[start, end) split on depth-0 occurrences of ``sep`` (a word
+    matches case-insensitively); returns (lo, hi) spans excluding the
+    separators."""
+    end = len(toks) if end is None else end
+    spans: list[tuple[int, int]] = []
+    lo = start
+    for i in top_level(toks, start, end):
+        if toks[i].lower() == sep:
+            spans.append((lo, i))
+            lo = i + 1
+    spans.append((lo, end))
+    return spans
+
+
+def on_conflict_at(toks: list[str], lows: list[str], start: int = 0) -> int:
+    """Index of the first depth-0 ``on conflict`` pair at or after
+    ``start`` (``lows``: the lowercased tokens), or -1."""
+    return next(
+        (
+            i
+            for i in top_level(toks, start)
+            if lows[i] == "on" and i + 1 < len(toks) and lows[i + 1] == "conflict"
+        ),
+        -1,
+    )
+
+
+def split_top(toks: list[str], sep: str = ",") -> list[list[str]]:
+    """``toks`` split on depth-0 ``sep`` as token lists; an empty last
+    item (trailing separator, empty input) is dropped."""
+    parts = [toks[lo:hi] for lo, hi in top_spans(toks, sep)]
+    if not parts[-1]:
+        parts.pop()
+    return parts
+
+
+# ---------------------------------------------------------------------------
 # Function-call rewriting with balanced parens
 # ---------------------------------------------------------------------------
 
@@ -87,27 +162,11 @@ def _is_word(tok: str) -> bool:
 def _find_args(tokens: list[str], open_idx: int) -> tuple[list[list[str]], int]:
     """tokens[open_idx] == '(' → ([arg token lists], index of closing ')')."""
     assert tokens[open_idx] == "("
-    depth, args, cur = 1, [], []
-    i = open_idx + 1
-    while i < len(tokens):
-        t = tokens[i]
-        if t == "(":
-            depth += 1
-            cur.append(t)
-        elif t == ")":
-            depth -= 1
-            if depth == 0:
-                if cur or args:
-                    args.append(cur)
-                return args, i
-            cur.append(t)
-        elif t == "," and depth == 1:
-            args.append(cur)
-            cur = []
-        else:
-            cur.append(t)
-        i += 1
-    raise ValueError("unbalanced parens in SQL")
+    close = close_paren(tokens, open_idx)
+    if close >= len(tokens):
+        raise ValueError("unbalanced parens in SQL")
+    args = [tokens[lo:hi] for lo, hi in top_spans(tokens, ",", open_idx + 1, close)]
+    return ([] if args == [[]] else args), close
 
 
 def _j(tokens: list[str]) -> str:
@@ -1178,22 +1237,15 @@ def _rewrite_prefix_not(toks: list[str], lows: list[str]) -> list[str]:
         and not (i + 1 < len(lows) and lows[i + 1] == "exists")
     ]
     for i in reversed(sites):
-        d = 0
-        j = i + 1
-        n = len(toks)
-        while j < n:
-            tj = toks[j]
-            if tj == "(":
-                d += 1
-            elif tj == ")":
-                if d == 0:
-                    break
-                d -= 1
-            elif tj in (",", ";") and d == 0:
-                break
-            elif d == 0 and _is_word(tj) and lows[j] in _NOT_OPERAND_STOPS:
-                break
-            j += 1
+        j = next(
+            (
+                k
+                for k in top_level(toks, i + 1)
+                if toks[k] in (")", ",", ";")
+                or (_is_word(toks[k]) and lows[k] in _NOT_OPERAND_STOPS)
+            ),
+            len(toks),
+        )
         op = " ".join(toks[i + 1 : j])
         if not op:
             continue
@@ -1213,23 +1265,15 @@ def _coerce_filter_tokens(toks: list[str], lows: list[str]) -> list[str]:
         t, low = toks[i], lows[i]
         out.append(t)
         if _is_word(t) and low in ("where", "having"):
-            d = 0
-            j = i + 1
-            while j < n:
-                tj = toks[j]
-                if tj == "(":
-                    d += 1
-                elif tj == ")":
-                    if d == 0:
-                        break
-                    d -= 1
-                elif (
-                    d == 0
-                    and _is_word(tj)
-                    and lows[j] in _FILTER_CLAUSE_ENDS
-                ):
-                    break
-                j += 1
+            j = next(
+                (
+                    k
+                    for k in top_level(toks, i + 1)
+                    if toks[k] == ")"
+                    or (_is_word(toks[k]) and lows[k] in _FILTER_CLAUSE_ENDS)
+                ),
+                n,
+            )
             inner = _coerce_filter_tokens(toks[i + 1 : j], lows[i + 1 : j])
             inner_lows = [
                 t.lower() if _is_word(t) else t for t in inner
@@ -1362,22 +1406,10 @@ def _scalar_subquery_limit(toks: list[str]) -> list[str]:
         if not scalar:
             continue
         # matching close paren + top-level LIMIT check inside the group
-        d = 0
-        j = i
-        has_limit = False
-        n = len(out)
-        while j < n:
-            tj = out[j]
-            if tj == "(":
-                d += 1
-            elif tj == ")":
-                d -= 1
-                if d == 0:
-                    break
-            elif d == 1 and _is_word(tj) and lows[j] == "limit":
-                has_limit = True
-            j += 1
-        if j >= n or has_limit:
+        j = close_paren(out, i)
+        if j >= len(out) or any(
+            lows[k] == "limit" for k in top_level(out, i + 1, j)
+        ):
             continue
         out[j:j] = ["limit", "1"]
         lows[j:j] = ["limit", "1"]
@@ -1465,16 +1497,7 @@ def _take_tier_operand(
             _is_word(t) and i + 1 < n and tokens[i + 1] == "("
             and t.lower() not in _NOT_FN_WORDS
         ):
-            start = i if t == "(" else i + 1
-            depth, j = 0, start
-            while j < n:
-                if tokens[j] == "(":
-                    depth += 1
-                elif tokens[j] == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j += 1
+            j = close_paren(tokens, i if t == "(" else i + 1)
             unit.extend(tokens[i : j + 1])
             i = j + 1
             first = False
@@ -1547,15 +1570,7 @@ def _take_operand(tokens: list[str], i: int) -> tuple[list[str], int]:
         unit.extend(tokens[i : close + 1])
         i = close + 1
     elif t == "(":
-        depth, j = 0, i
-        while j < len(tokens):
-            if tokens[j] == "(":
-                depth += 1
-            elif tokens[j] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            j += 1
+        j = close_paren(tokens, i)
         unit.extend(tokens[i : j + 1])
         i = j + 1
     else:
@@ -1577,25 +1592,6 @@ _COLLATE_FOLDS = {
     ),
     "rtrim": lambda e: f"rtrim({e})",
 }
-
-
-def _split_top_commas(toks: list[str]) -> list[list[str]]:
-    elems: list[list[str]] = []
-    cur: list[str] = []
-    d = 0
-    for tok in toks:
-        if tok == "(":
-            d += 1
-        elif tok == ")":
-            d -= 1
-        if tok == "," and d == 0:
-            elems.append(cur)
-            cur = []
-        else:
-            cur.append(tok)
-    if cur:
-        elems.append(cur)
-    return elems
 
 
 def _translate_tokens(tokens: list[str]) -> list[str]:
@@ -1664,18 +1660,10 @@ def _translate_tokens(tokens: list[str]) -> list[str]:
                 i = i3
                 continue
             if nxt_low == "in" and i + 1 < n and tokens[i + 1] == "(":
-                depth, j = 0, i + 1
-                while j < n:
-                    if tokens[j] == "(":
-                        depth += 1
-                    elif tokens[j] == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j += 1
+                j = close_paren(tokens, i + 1)
                 folded = ", ".join(
                     fold(f"({_j(_translate_tokens(e))})")
-                    for e in _split_top_commas(tokens[i + 2 : j])
+                    for e in split_top(tokens[i + 2 : j])
                 )
                 out.extend(tokenize(f"{fold(f'({lhs})')} in ({folded})"))
                 i = j + 1
@@ -1944,13 +1932,8 @@ def classify(sql: str) -> StatementInfo:
     if lows[0] == "with":
         verbs = {"select", "insert", "replace", "update", "delete",
                  "create", "drop", "alter"}
-        depth = 0
-        for i in range(1, len(toks)):
-            if toks[i] == "(":
-                depth += 1
-            elif toks[i] == ")":
-                depth -= 1
-            elif depth == 0 and lows[i] in verbs:
+        for i in top_level(toks, 1):
+            if lows[i] in verbs:
                 if lows[i] == "select":
                     break
                 inner = classify(" ".join(toks[i:]))

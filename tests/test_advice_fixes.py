@@ -19,6 +19,8 @@ import pytest
 
 from leaf_spark import drisl
 from leaf_spark.dml import DmlExecutor, TableStore
+from leaf_spark.fold import execute as fold_exec
+from leaf_spark.fold import plan as fold_plan
 from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
@@ -48,7 +50,7 @@ class TestBatchSafeTableRefs:
     def test_dedup_idiom_not_batch_safe(self, spark, tmp_root):
         s = Stream(spark, tmp_root, "did:plc:dedupmod")
         s.provide_module(DEDUP)
-        plan = s._fold_plan(split_statements(DEDUP.materializer))
+        plan = fold_plan.plan(split_statements(DEDUP.materializer), s.store)
         assert [st.kind for st in plan] == ["compiled"]
 
     def test_intra_batch_duplicates_suppressed(self, spark, tmp_root):
@@ -68,12 +70,12 @@ class TestBatchSafeTableRefs:
             "select idx, user, 'x', 0 from event where user in "
             "(select user from state.read_markers)"
         )
-        assert s._fold_plan([sql]) is None
+        assert fold_plan.plan([sql], s.store) is None
 
     def test_plain_insert_still_batch_safe(self, spark, tmp_root):
         s = Stream(spark, tmp_root, "did:plc:dedupmod4")
         s.provide_module(CHAT)
-        plan = s._fold_plan(split_statements(CHAT.materializer))
+        plan = fold_plan.plan(split_statements(CHAT.materializer), s.store)
         assert {st.kind for st in plan} == {"plain"}
 
 
@@ -935,14 +937,15 @@ class TestRound11Advice:
         toks = tokenize(stmt)
         lows = [t.lower() if _is_word(t) else t for t in toks]
         isel = lows.index("select")
-        out = s._assign_local_rowids(
-            toks, lows, isel, ["id", "v"], [(None, 1)]
+        ex = DmlExecutor(s.store)
+        out = fold_exec._assign_local_rowids(
+            ex, toks, lows, isel, ["id", "v"], [(None, 1)]
         )
         assert out is None  # quoted target → unresolved → Spark fallback
         # sanity: the unquoted shape still resolves and assigns
         toks2 = tokenize("insert into items ( id , v ) select null , 1")
         lows2 = [t.lower() if _is_word(t) else t for t in toks2]
-        out2 = s._assign_local_rowids(
-            toks2, lows2, lows2.index("select"), ["id", "v"], [(None, 1)]
+        out2 = fold_exec._assign_local_rowids(
+            ex, toks2, lows2, lows2.index("select"), ["id", "v"], [(None, 1)]
         )
         assert out2 == [(1, 1)]

@@ -14,10 +14,15 @@ divergence between the paths shows up as a model mismatch here.
 """
 
 import random
+from types import SimpleNamespace
 
 import pytest
+from pyspark.sql import types as T
 
 from leaf_spark import drisl
+from leaf_spark.dml import TableDef, TableStore
+from leaf_spark.fold import execute as fold_exec
+from leaf_spark.fold import plan as fold_plan
 from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import BatchRejected, Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
@@ -29,16 +34,39 @@ def fold_kinds(s, script):
     """Step kinds of the fold plan for a script (SQL text or statement
     list); None = the per-event fold."""
     stmts = split_statements(script) if isinstance(script, str) else script
-    plan = s._fold_plan(stmts)
+    plan = fold_plan.plan(stmts, s.store)
     return None if plan is None else [st.kind for st in plan]
 
 
 def pooled_groups(s, stmts):
     """{flat target: group} of the plan's pooled steps (None = per-event)."""
-    plan = s._fold_plan(stmts)
+    plan = fold_plan.plan(stmts, s.store)
     if plan is None:
         return None
     return {st.target: st.group for st in plan if st.group is not None}
+
+
+def test_plan_reads_table_metadata_only():
+    """The planner needs no SparkSession: a store holding only hand-made
+    table definitions plans the CHAT, COUNTER and DEDUP materializers."""
+    from .fixtures import CHAT, COUNTER
+
+    def tdef(table, pk, **cols):
+        fields = [T.StructField(c, t) for c, t in cols.items()]
+        return TableDef(table, T.StructType(fields), pk)
+
+    L, S = T.LongType(), T.StringType()
+    store = TableStore(spark=None, view_prefix="p_")
+    for d in (
+        tdef("messages", ("idx",), idx=L, sender=S, content=S, sent_at=L),
+        tdef("counters", ("name",), name=S, value=L),
+        tdef("seen", (), key=S, idx=L),
+    ):
+        store.defs[d.name] = d
+    s = SimpleNamespace(store=store)
+    assert fold_kinds(s, CHAT.materializer) == ["plain"]
+    assert fold_kinds(s, COUNTER.materializer) == ["pooled", "pooled"]
+    assert fold_kinds(s, DEDUP.materializer) == ["compiled"]
 
 
 # batch-safe: localized authorize (throw on empty key) + localized
@@ -352,17 +380,17 @@ class TestRoundwiseUpsert:
         assert s2.query(None, LeafQuery("kv")) == live
 
     def test_script_takes_roundwise_not_per_event(self, spark, tmp_path):
-        """The KV materializer must route through _exec_roundwise (not
-        the per-event loop) — pin the dispatch so a refactor can't
-        silently regress replay back to O(events)."""
+        """The KV materializer must route through exec_roundwise (not the
+        per-event loop) — pin the dispatch so a refactor can't silently
+        regress replay back to O(events)."""
         s = Stream(spark, str(tmp_path), "did:plc:rw2")
         s.provide_module(KV)
         assert fold_kinds(s, KV.materializer) == ["roundwise", "plain"]
         stmts = [
             st for st in KV.materializer.split(";") if st.strip()
         ]
-        acc = [st for st in stmts if s._accumulating_upsert(st)]
-        assert len(acc) == 1 and s._roundwise_ok(acc[0])
+        acc = [st for st in stmts if fold_plan._accumulating_upsert(st)]
+        assert len(acc) == 1 and fold_plan._roundwise_ok(acc[0], s.store)
 
     def test_defaulted_conflict_key_falls_back_per_event(
         self, spark, tmp_path
@@ -384,7 +412,9 @@ class TestRoundwiseUpsert:
         )
         s = Stream(spark, str(tmp_path), "did:plc:rw3")
         s.provide_module(mod)
-        assert not s._roundwise_ok(mod.materializer.strip().rstrip(";"))
+        assert not fold_plan._roundwise_ok(
+            mod.materializer.strip().rstrip(";"), s.store
+        )
         s.add_events([ev("u", v=5), ev("u", v=7)])
         assert s.query(None, LeafQuery("t2")) == [{"k": "fixed", "v": 12}]
 
@@ -519,8 +549,8 @@ class TestRoundsrcCollision:
         s = Stream(spark, str(tmp_path), "did:plc:rsc")
         s.provide_module(mod)
         stmt = mod.materializer.strip().rstrip(";")
-        assert s._accumulating_upsert(stmt)
-        assert not s._roundwise_ok(stmt)
+        assert fold_plan._accumulating_upsert(stmt)
+        assert not fold_plan._roundwise_ok(stmt, s.store)
         s.add_events([ev("u", k="a"), ev("u", k="a")])
         assert s.query(None, LeafQuery("rs")) == [{"k": "a", "n": 2}]
 
@@ -542,7 +572,7 @@ class TestDedupIdiomCompilation:
         stmts = [
             st.strip() for st in DEDUP.materializer.split(";") if st.strip()
         ]
-        plan = s._fold_plan(stmts)
+        plan = fold_plan.plan(stmts, s.store)
         assert [st.kind for st in plan] == ["compiled"]
         assert "row_number() over" in plan[0].sql
 
@@ -991,9 +1021,10 @@ class TestDeleteCompilation:
     def test_delete_statement_compiles(self, spark, tmp_path):
         s = Stream(spark, str(tmp_path), "did:plc:delc1")
         s.provide_module(DELMOD)
-        got = s._compile_delete_setwise(
+        got = fold_plan._compile_delete_setwise(
             "delete from items where id = "
-            "(select drisl_extract(payload, '.del') from event)"
+            "(select drisl_extract(payload, '.del') from event)",
+            s.store,
         )
         assert got is not None
         flat, sql = got
@@ -1038,7 +1069,7 @@ class TestDeleteCompilation:
             "delete from items where not exists "
             "(select user from event)",
         ]:
-            assert s._compile_delete_setwise(stmt) is None, stmt
+            assert fold_plan._compile_delete_setwise(stmt, s.store) is None, stmt
 
     def test_lone_delete_end_to_end_and_replay_setwise(
         self, spark, tmp_path, monkeypatch
@@ -1351,9 +1382,9 @@ class TestPooledRounds:
 
         monkeypatch.setattr(s2, "_event_local_df", no_single_row)
         execs = []
-        orig = Stream._exec_pooled_rounds
+        orig = fold_exec.exec_pooled_rounds
 
-        def counting(self_, ex, group, is_state, **kw):
+        def counting(ex, le, group, is_state, **kw):
             real_execute = ex.execute
 
             def spy(sql, *a, **k):
@@ -1363,11 +1394,11 @@ class TestPooledRounds:
 
             ex.execute = spy
             try:
-                return orig(self_, ex, group, is_state, **kw)
+                return orig(ex, le, group, is_state, **kw)
             finally:
                 ex.execute = real_execute
 
-        monkeypatch.setattr(Stream, "_exec_pooled_rounds", counting)
+        monkeypatch.setattr(fold_exec, "exec_pooled_rounds", counting)
         s2.provide_module(POOLMOD)
         s2.catch_up()
         assert s2.query(None, LeafQuery("reg")) == expect
@@ -1802,15 +1833,18 @@ class TestRowidReplayOrder:
     def test_ord_needed_classifier(self, spark, tmp_path):
         s = Stream(spark, str(tmp_path), "did:plc:rowidord2")
         s.provide_module(self.MOD)
-        assert s._ord_needed(
-            "insert into logx (tag) select user from event"
+        assert fold_plan._ord_needed(
+            "insert into logx (tag) select user from event",
+            s.store,
         )  # auto id
-        assert s._ord_needed(
+        assert fold_plan._ord_needed(
             "insert into logx (id, tag) select idx, user from event "
-            "on conflict(id) do nothing"
+            "on conflict(id) do nothing",
+            s.store,
         )  # conflict
-        assert s._ord_needed(
-            "insert into logx (id, tag) select idx, user from event"
+        assert fold_plan._ord_needed(
+            "insert into logx (id, tag) select idx, user from event",
+            s.store,
         )  # r11: explicit id expressions may be NULL at runtime —
         # auto-assignment order is event order, so __ord__ rides along
 

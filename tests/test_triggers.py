@@ -9,6 +9,7 @@ import pytest
 
 from leaf_spark import drisl
 from leaf_spark.dml import DmlExecutor, TableStore
+from leaf_spark.fold import plan as fold_plan
 from leaf_spark.module import BasicModuleDef, QueryDef, split_statements
 from leaf_spark.stream import Stream
 from leaf_spark.types import IncomingEvent, LeafQuery
@@ -153,7 +154,7 @@ class TestTriggersInModules:
         s = Stream(spark, tmp_root, "did:plc:trig")
         s.provide_module(TRIG_MOD)
         # trigger on the insert target forces the per-event fold path
-        assert s._fold_plan(split_statements(TRIG_MOD.materializer)) is None
+        assert fold_plan.plan(split_statements(TRIG_MOD.materializer), s.store) is None
         s.add_events(
             [
                 IncomingEvent("u", drisl.encode({"b": "one"})),
