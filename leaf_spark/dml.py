@@ -155,6 +155,14 @@ class TableStore:
     DataFrames are lazily chained within a fold; ``checkpoint_all`` truncates
     lineage at commit points (localCheckpoint keeps them in executor memory —
     the parquet persistence of committed state is stream.py's job).
+
+    Literal-segment rule: a pure append onto a clean (not dirty) table
+    whose delta's optimized plan is a literal (``_is_literal_plan``)
+    leaves the table as ``checkpointed base ∪ literal deltas`` and keeps
+    it clean — the delta's values already sit in the plan, so there is
+    nothing for a checkpoint job to evaluate. The
+    ``_LITERAL_SEGMENT_CAP + 1``-th such segment marks the table dirty,
+    so ``checkpoint_all`` cuts the union once per that many appends.
     """
 
     spark: SparkSession
@@ -163,27 +171,32 @@ class TableStore:
     tables: dict[str, DataFrame] = field(default_factory=dict)
     views: dict[str, str] = field(default_factory=dict)  # name → select SQL
     triggers: dict[str, TriggerDef] = field(default_factory=dict)
-    _mutations: int = 0
     # tables mutated since the last checkpoint_all — checkpointing is
     # O(table), so only dirty tables get re-materialized per batch
     _dirty: set = field(default_factory=set)
+    # literal deltas unioned onto each clean table since its last lineage
+    # cut (see the literal-segment rule above); bounds the union depth
+    _segments: dict = field(default_factory=dict)
+    _LITERAL_SEGMENT_CAP = 32
     # per-table monotone registration counter (see register())
     _table_versions: dict = field(default_factory=dict)
     # pure-insert deltas since the last snapshot: name → list of the
     # appended DataFrames (driver-local literal plans only), or None
-    # once any non-append mutation poisoned the table. Consumed by
-    # Stream.persist_state to write O(delta) incremental snapshots for
-    # append-only tables (the common fold shape); anything it can't
-    # prove append-only falls back to the full rewrite — the safe
-    # direction. Missing key = untouched since the last snapshot.
+    # once any non-append mutation or non-literal delta poisoned the
+    # table. Consumed by Stream.persist_state to write O(delta)
+    # incremental snapshots for append-only tables (the common fold
+    # shape); anything it can't prove append-only falls back to the full
+    # rewrite — the safe direction. Missing key = untouched since the
+    # last snapshot.
     _snap_deltas: dict = field(default_factory=dict)
     # mirror append chain: name → list of (lo_ver, hi_ver, delta_df | None)
-    # entries — each advances a mirror at version lo to hi — or None once
-    # poisoned by a non-append registration. Like _snap_deltas but keyed
-    # by VERSION instead of "since last snapshot", so the localexec sqlite
-    # mirrors (Stream._mirror_tables) can advance a mirror staged at any
-    # version by inserting only the delta rows — the O(delta) read-path
-    # analogue of the incremental snapshot. A None delta records a
+    # entries — each advances a mirror at version lo to hi, every delta a
+    # proven literal — or None once poisoned by a non-append
+    # registration. Like _snap_deltas but keyed by VERSION instead of
+    # "since last snapshot", so the localexec sqlite mirrors
+    # (Stream._mirror_tables) can advance a mirror staged at any version
+    # by inserting only the delta rows — the O(delta) read-path analogue
+    # of the incremental snapshot. A None delta records a
     # content-preserving re-registration (checkpoint/persist re-point).
     # r12: past _MIRROR_CHAIN_CAP entries the chain FOLDS its two oldest
     # entries into one (delta = union of the two LocalRelations) instead
@@ -297,6 +310,7 @@ class TableStore:
         # snapshot", which a recreate under the same name must not
         # inherit (see create())
         self._snap_deltas[name] = None
+        self._segments.pop(name, None)
         self.spark.catalog.dropTempView(self.view_name(name))
 
     def known_tables(self) -> set[str]:
@@ -315,30 +329,42 @@ class TableStore:
         self._snap_deltas[name] = None  # not provably append-only
         self.register(name, df)
         self._dirty.add(name)
-        self._mutations += 1
-        # bound lineage growth inside long per-event folds
-        if self._mutations % 32 == 0:
-            self.tables[name].localCheckpoint(eager=False)
 
     def appended(self, name: str, df: DataFrame, delta: DataFrame) -> None:
         """Like ``mutated`` but for a PURE append: ``df`` is exactly the
-        previous table unioned with ``delta``. Records the delta for the
-        incremental snapshot; whether the delta is actually usable (a
-        driver-local literal plan) is checked lazily in ``snap_deltas``
-        — on the persist path, not on every fold statement."""
+        previous table unioned with ``delta``. The delta is proved literal
+        once, here: a literal delta extends the snapshot and mirror
+        chains and, onto a clean table, skips the checkpoint (the
+        literal-segment rule); any other delta poisons the snapshot chain
+        and restarts the mirror chain at the new version (no mirror staged
+        before it can advance past an unprovable delta)."""
+        try:  # pure planning: analysis ran when the frame was built
+            plan = delta._jdf.queryExecution().optimizedPlan()
+            literal = _is_literal_plan(plan)
+        except Exception:  # a plan that fails to optimize is not literal
+            literal = False
         cur = self._snap_deltas.get(name, [])
         if cur is not None:
-            self._snap_deltas[name] = cur + [delta]
+            self._snap_deltas[name] = cur + [delta] if literal else None
         chain = self._mirror_chain.get(name)
         self.register(name, df)  # poisons the chain; repaired just below
         if chain is not None:
-            ver = self._table_versions[name]
-            chain.append((ver - 1, ver, delta))
-            self._mirror_chain[name] = self._fold_chain(name, chain)
-        self._dirty.add(name)
-        self._mutations += 1
-        if self._mutations % 32 == 0:
-            self.tables[name].localCheckpoint(eager=False)
+            if literal:
+                ver = self._table_versions[name]
+                chain.append((ver - 1, ver, delta))
+                chain = self._fold_chain(name, chain)
+            else:
+                chain = []
+            self._mirror_chain[name] = chain
+        segs = self._segments.get(name, 0)
+        if (
+            literal
+            and name not in self._dirty
+            and segs < self._LITERAL_SEGMENT_CAP
+        ):
+            self._segments[name] = segs + 1
+        else:
+            self._dirty.add(name)
 
     def reregister_preserving(self, name: str, df: DataFrame) -> None:
         """Re-register ``df`` as the SAME content under a new plan
@@ -347,6 +373,7 @@ class TableStore:
         chain records a no-op entry instead of poisoning."""
         chain = self._mirror_chain.get(name)
         self.register(name, df)
+        self._segments.pop(name, None)  # the new plan has no literal unions
         if chain is not None:
             ver = self._table_versions[name]
             chain.append((ver - 1, ver, None))
@@ -354,12 +381,12 @@ class TableStore:
 
     def _fold_chain(self, name: str, chain: list) -> list | None:
         """Bound chain length by FOLDING the two oldest entries into one
-        (their deltas union — LocalRelation ∪ LocalRelation optimizes
-        back to a LocalRelation, so the mirror_deltas proof still holds)
-        instead of dropping history. Returns the chain, or None when a
-        fold is impossible (column drift) or the oldest entry's version
-        span passed _MIRROR_FOLD_SPAN (pathological no-reader chain —
-        restaging beats an ever-wider union's analysis cost)."""
+        (their deltas union — a Union of LocalRelations is still a
+        literal plan, see ``_is_literal_plan``) instead of dropping
+        history. Returns the chain, or None when a fold is impossible
+        (column drift) or the oldest entry's version span passed
+        _MIRROR_FOLD_SPAN (pathological no-reader chain — restaging beats
+        an ever-wider union's analysis cost)."""
         while len(chain) > self._MIRROR_CHAIN_CAP:
             l1, h1, d1 = chain[0]
             l2, h2, d2 = chain[1]
@@ -396,14 +423,14 @@ class TableStore:
 
     def mirror_deltas(self, name: str, since_ver: int):
         """Deltas that advance a mirror staged at ``since_ver`` to the
-        current version, or None when not provable (poisoned chain,
-        trimmed history, or a delta whose optimized plan is not a literal
-        LocalRelation — same proof the incremental snapshot uses, see
-        ``snap_deltas``). [] means only no-op re-registrations happened."""
+        current version, or None when not provable (poisoned chain, or
+        history folded/restarted past the mirror). Every delta on the
+        chain was proved literal by ``appended``, so its collect() is a
+        driver-side values read. [] means only no-op re-registrations
+        happened."""
         chain = self._mirror_chain.get(name)
         if chain is None:
             return None
-        cur = self.table_version(name)
         pos = since_ver
         out = []
         for lo, hi, d in chain:
@@ -415,54 +442,30 @@ class TableStore:
                 # folded delta contains rows the mirror already holds
                 return None
             pos = hi
-            if d is None:
-                continue  # content-preserving re-registration
-            try:
-                if not _is_literal_plan(
-                    d._jdf.queryExecution().optimizedPlan()
-                ):
-                    self._mirror_chain[name] = None
-                    return None
-            except Exception:
-                self._mirror_chain[name] = None
-                return None
-            out.append(d)
-        if pos != cur:
+            if d is not None:  # None: content-preserving re-registration
+                out.append(d)
+        if pos != self.table_version(name):
             return None  # chain does not reach the current version
         return out
 
     def snap_deltas(self, name: str) -> list | None:
-        """Deltas since the last snapshot ([] = untouched, None = must
-        fully rewrite). A delta qualifies only when its OPTIMIZED plan
-        is a literal ``LocalRelation`` — values captured in the plan,
-        no lineage that could re-execute against since-changed temp
-        views. (``DataFrame.isLocal()`` tests the ANALYZED plan, which
-        a temp-view Project fails; analysis happened eagerly at
-        creation, so optimizing here is pure planning, no execution.)
-        Any non-local delta poisons the whole chain → full rewrite."""
-        cur = self._snap_deltas.get(name, [])
-        if cur is None or not cur:
-            return cur
-        for d in cur:
-            try:
-                if (
-                    d._jdf.queryExecution().optimizedPlan().nodeName()
-                    != "LocalRelation"
-                ):
-                    self._snap_deltas[name] = None
-                    return None
-            except Exception:
-                self._snap_deltas[name] = None
-                return None
-        return cur
+        """Literal deltas since the last snapshot ([] = untouched, None =
+        must fully rewrite). ``appended`` admits only deltas whose
+        OPTIMIZED plan is a literal — values captured in the plan, no
+        lineage that could re-execute against since-changed temp views —
+        and poisons the table on anything else."""
+        return self._snap_deltas.get(name, [])
 
     def snapshot_written(self, name: str) -> None:
         self._snap_deltas[name] = []
 
     def checkpoint_all(self) -> None:
-        """Materialize (and lineage-truncate) every table mutated since the
-        last call. Untouched tables are already evaluated — re-checkpointing
-        them would cost O(table) per batch for nothing."""
+        """Materialize (and lineage-truncate) every dirty table. Untouched
+        tables are already evaluated — re-checkpointing them would cost
+        O(table) per batch for nothing — and so are clean tables grown by
+        literal appends (a checkpointed base ∪ at most
+        ``_LITERAL_SEGMENT_CAP`` LocalRelations): an interactive commit
+        whose fold only appends literal rows runs no job here."""
         for name in sorted(self._dirty):
             if name in self.tables:
                 self.reregister_preserving(
@@ -475,29 +478,41 @@ class TableStore:
 
     # -- transactional snapshot (rollback support for event-batch folds) -----
 
-    def snapshot(self) -> tuple[dict, dict, dict, dict, tuple[int, int, int]]:
+    def snapshot(self) -> tuple:
         return (
             dict(self.defs),
             dict(self.tables),
             dict(self.views),
             dict(self.triggers),
             (self.last_rowid, self.changes, self.total_changes),
+            # commit bookkeeping, restored as-is: the reinstated tables are
+            # the same DataFrame objects, so it stays exact for them
+            (
+                set(self._dirty),
+                dict(self._segments),
+                dict(self._table_versions),
+                {
+                    n: c if c is None else list(c)
+                    for n, c in self._mirror_chain.items()
+                },
+                dict(self._mirror_base),
+            ),
         )
 
     def restore(self, snap) -> None:
         """Restore a snapshot taken before a failed fold: drop tables/views
         created since (incl. their temp views), then reinstate the saved
-        DataFrame versions."""
-        defs, tables, views, triggers, counters = snap
+        DataFrame versions with the dirty set, literal-segment counts and
+        mirror chains they had at snapshot time."""
+        defs, tables, views, triggers, counters, marks = snap
+        dirty, segments, versions, chains, bases = marks
         self.last_rowid, self.changes, self.total_changes = counters
-        # conservatively treat every restored table as dirty: the reinstated
-        # DataFrames may carry pre-fold lineage
-        self._dirty = set(tables)
+        self._dirty = set(dirty)
+        self._segments = dict(segments)
+        self._mirror_base = dict(bases)
         # deltas recorded during the failed fold are no longer part of the
         # table; poison so the next snapshot fully rewrites (safe direction)
         self._snap_deltas = {n: None for n in tables}
-        # same for the mirror chains: the reinstated content predates them
-        self._mirror_chain = {n: None for n in tables}
         self.triggers = dict(triggers)
         for gone in set(self.tables) - set(tables):
             self.tables.pop(gone, None)
@@ -515,6 +530,15 @@ class TableStore:
         self.views = dict(views)
         for name, df in tables.items():
             self.register(name, df)
+            chain = chains.get(name)
+            if chain is not None and name in versions:
+                # the restored version holds exactly the snapshot-time
+                # content: a no-op entry bridges the two. A mirror staged
+                # mid-fold straddles it and restages (the safe direction).
+                self._mirror_chain[name] = self._fold_chain(
+                    name,
+                    [*chain, (versions[name], self._table_versions[name], None)],
+                )
 
 
 # ---------------------------------------------------------------------------
@@ -860,6 +884,8 @@ class DmlExecutor:
         if old in self.store._dirty:
             self.store._dirty.discard(old)
             self.store._dirty.add(new)
+        if old in self.store._segments:
+            self.store._segments[new] = self.store._segments.pop(old)
         for tg in self.store.triggers.values():
             if tg.table == old:
                 tg.table = new

@@ -1353,7 +1353,12 @@ class Stream:
                     "materialize",
                     local_rows=[(e.idx, e.user, e.payload) for e in staged],
                 )
-                self.store.checkpoint_all()  # force evaluation pre-commit
+                # force evaluation pre-commit: a lazy error must reject
+                # the batch here, not surface in a later read. Tables
+                # grown only by literal appends stay clean and cost no
+                # job — a LocalRelation delta was already evaluated on
+                # the driver when the optimizer built it
+                self.store.checkpoint_all()
             except Exception:
                 # rollback: restore pre-batch table/view versions (nothing was
                 # written to the log yet — mirrors SQLite txn rollback)

@@ -962,3 +962,111 @@ class TestMirrorChainLongevity:
         assert s.store._mirror_chain["messages"] is None
         q = LeafQuery("message_stats", limit=1000)
         assert s.query("a", q) == self._spark_rows(s, "a", q)
+
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        """Spark jobs ``fn`` ran on this thread (one job group around it;
+        the listener bus is drained before the status tracker is read)."""
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"literal-append-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_literal_append_commits_run_no_job(self, spark, tmp_path):
+        """A commit whose fold only appends literal rows leaves the table
+        clean: no checkpoint job. The _LITERAL_SEGMENT_CAP + 1-th literal
+        segment marks the table dirty, and that commit runs exactly the
+        one checkpoint job that cuts the union."""
+        from leaf_spark.dml import TableStore
+
+        from .fixtures import msg
+
+        s = self._chat(spark, tmp_path)  # the seed commit: segment 1
+        cap = 32
+        jobs = [
+            self._jobs(spark, lambda i=i: s.add_events([msg("b", f"f{i}", i)]))
+            for i in range(cap - 1)
+        ]
+        assert jobs == [0] * (cap - 1)
+        assert TableStore._LITERAL_SEGMENT_CAP == cap
+        assert s.store._segments["messages"] == cap
+        assert self._jobs(spark, lambda: s.add_events([msg("b", "cut", 99)])) == 1
+        assert "messages" not in s.store._segments
+        q = LeafQuery("messages", limit=1000)
+        rows = s.query("a", q)
+        assert rows == self._spark_rows(s, "a", q)
+        assert len(rows) == cap + 1
+
+    @pytest.mark.parametrize("bulk", [1, Stream._MIRROR_CAP + 1])
+    def test_rejected_batch_keeps_mirror_chain(self, spark, tmp_path, bulk):
+        """A rolled-back batch restores the pre-batch chain plus one no-op
+        entry: the next query advances the mirror by the accepted delta
+        alone — no restage, no Spark. Past _MIRROR_CAP rows a restage
+        is impossible, so a lost chain would pin every later query on
+        the Spark path."""
+        import unittest.mock as mock
+
+        from .fixtures import msg
+
+        s = self._chat(spark, tmp_path)
+        q = LeafQuery("message_stats", limit=1000)
+        s.add_events([msg("b", f"x{i}", 100 + i) for i in range(bulk)])
+        s.query("a", q)
+        staged = s._mirror_rows["messages"]
+        assert staged == bulk + 1
+        with pytest.raises(Exception, match="missing content"):
+            s.add_events(
+                [msg("b", "lost", 500), IncomingEvent("b", drisl.encode({"x": 1}))]
+            )
+        s.add_events([msg("b", "after", 501)])
+        expect = self._spark_rows(s, "a", q)
+        with mock.patch.object(
+            Stream, "query_df", side_effect=AssertionError("spark path used")
+        ), mock.patch.object(
+            LocalEval, "stage_table", side_effect=AssertionError("restaged")
+        ):
+            got = s.query("a", q)
+        assert got == expect
+        assert s._mirror_rows["messages"] == staged + 1
+
+    def test_failed_fold_append_never_reaches_mirror(self, spark, tmp_path):
+        """A fold that appended to one table and then failed on the next
+        statement: the restored chain must not carry the rolled-back
+        delta, or the next advance would insert rows the table lost."""
+        import unittest.mock as mock
+
+        mod = BasicModuleDef(
+            init_sql=(
+                "create table if not exists log "
+                "(idx integer primary key, v integer); "
+                "create table if not exists strict "
+                "(idx integer primary key, w integer not null);"
+            ),
+            materializer=(
+                "insert into log (idx, v) "
+                "select idx, drisl_extract_int(payload, '.v') from event; "
+                "insert into strict (idx, w) "
+                "select idx, drisl_extract_int(payload, '.w') from event;"
+            ),
+            queries=(QueryDef("log", "select idx, v from log order by idx"),),
+        )
+        s = Stream(spark, str(tmp_path), "did:plc:foldfail")
+        s.provide_module(mod)
+        s.add_events([ev("u", v=1, w=1)])
+        q = LeafQuery("log")
+        s.query(None, q)  # stages the mirror
+        with pytest.raises(Exception, match="NOT NULL"):
+            s.add_events([ev("u", v=2)])
+        s.add_events([ev("u", v=3, w=3)])
+        with mock.patch.object(
+            Stream, "query_df", side_effect=AssertionError("spark path used")
+        ):
+            got = s.query(None, q)
+        assert [r["v"] for r in got] == [1, 3]

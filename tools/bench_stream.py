@@ -5,7 +5,9 @@ Measures, with the chat fixture module (FIXTURES.md F2 — authorizer +
 batch-safe INSERT…SELECT materializer):
 
 - ingest:   events/sec through add_events (authorize → materialize →
-            atomic log append), across several batch sizes;
+            atomic log append), across several batch sizes, and the
+            Spark jobs per commit (spark_jobs_per_commit, one job group
+            around the ingest loop);
 - replay:   events/sec to rebuild materialized state from the log
             (fresh Stream on the same root, snapshot disabled by removal);
 - reopen:   seconds to reopen with the persisted state snapshot (the
@@ -45,15 +47,22 @@ def main() -> None:
         s = Stream(spark, root, "did:plc:bench")
         s.provide_module(CHAT)
 
-        # ingest
+        # ingest, under one job group so its Spark jobs can be counted
+        sc = spark.sparkContext
+        sc.setJobGroup("bench-ingest", "ingest loop")
         t0 = time.time()
-        i = 0
+        i = commits = 0
         while i < n_events:
             events = [msg("did:plc:u", f"m{j}", j) for j in range(i, min(i + batch, n_events))]
             s.add_events(events)
             i += len(events)
+            commits += 1
         ingest_s = time.time() - t0
+        sc.setLocalProperty("spark.jobGroup.id", None)
         out["ingest_events_per_sec"] = round(n_events / ingest_s, 1)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        ingest_jobs = len(sc.statusTracker().getJobIdsForGroup("bench-ingest"))
+        out["spark_jobs_per_commit"] = round(ingest_jobs / max(commits, 1), 3)
 
         # query round-trips over materialized state
         t0 = time.time()
