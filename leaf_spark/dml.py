@@ -366,6 +366,21 @@ class TableStore:
         else:
             self._dirty.add(name)
 
+    def replaced(self, name: str, df: DataFrame) -> int:
+        """Register ``df`` — a literal (LocalRelation) holding the whole
+        new content of ``name``, computed outside Spark by the mirror
+        fold (Stream._mirror_fold) — and return the new version. The
+        values already sit in the plan, so the table is registered clean
+        (``checkpoint_all`` runs no job for it); the snapshot chain is
+        poisoned (not an append) and the mirror chain restarts at the new
+        version, where the caller's mirror already is."""
+        self._snap_deltas[name] = None
+        self.register(name, df)
+        self._dirty.discard(name)
+        self._segments.pop(name, None)
+        self._mirror_chain[name] = []
+        return self._table_versions[name]
+
     def reregister_preserving(self, name: str, df: DataFrame) -> None:
         """Re-register ``df`` as the SAME content under a new plan
         (localCheckpoint / read-of-snapshot re-point): the version bumps,
@@ -561,10 +576,13 @@ class DmlExecutor:
     """Executes one translated module statement against a TableStore.
 
     ``sql_args`` are named parameters for spark.sql; ``extra_views`` maps
-    logical names (``event``, ``events``) to already-registered view names.
+    logical names (``event``, ``events``) to already-registered view names,
+    or to an idempotent callable that registers the view and returns its
+    name — called only when a statement references the name, so a fold
+    whose statements never reach Spark stages no event frame.
     """
 
-    def __init__(self, store: TableStore, extra_views: dict[str, str] | None = None):
+    def __init__(self, store: TableStore, extra_views: dict | None = None):
         self.store = store
         self.extra_views = extra_views or {}
         # SQLite-dialect error semantics (1/0 → NULL, invalid cast → NULL)
@@ -596,7 +614,8 @@ class DmlExecutor:
                 and (i + 1 >= len(toks) or toks[i + 1] != "(")
             ):
                 if low in self.extra_views:
-                    out.append(self.extra_views[low])
+                    view = self.extra_views[low]
+                    out.append(view if isinstance(view, str) else view())
                 else:
                     out.append(self.store.view_name(low))
             else:
@@ -1358,27 +1377,33 @@ class DmlExecutor:
             src = self._sql(" union all ".join(selects), args)
             if conflict is None:
                 src = src.drop("__ord__")
+            src_cols = src.columns
+            has_ord = "__ord__" in src_cols
         else:
             src = self._sql(src_sql, args)
             # a trailing __ord__ column (batch-upsert ordering) rides along
-            if src.columns and src.columns[-1] == "__ord__":
-                src = src.toDF(*target_cols, "__ord__")
-            else:
-                src = src.toDF(*target_cols)
+            got = src.columns
+            has_ord = bool(got) and got[-1] == "__ord__"
+            src_cols = [*target_cols, *(["__ord__"] if has_ord else [])]
+            if got != src_cols:
+                src = src.toDF(*src_cols)
 
-        # align to full schema (missing cols → NULL), cast to declared types
+        # align to full schema in ONE projection: missing columns take
+        # their declared DEFAULT (SQLite) or NULL, every column casts to
+        # its declared type; __ord__ rides along for the upsert dedup
+        def q(c: str) -> str:
+            return "`" + c.replace("`", "``") + "`"
+
         existing = self.store.tables[name]
-        aligned = src.select(
+        aligned = src.selectExpr(
             *[
-                (
-                    F.col(f.name)
-                    if f.name in src.columns
-                    # SQLite: omitted columns take their declared DEFAULT
-                    else F.expr(tdef.defaults.get(f.name, "null"))
-                ).cast(f.dataType).alias(f.name)
+                f"cast({q(f.name)} as {f.dataType.simpleString()}) as {q(f.name)}"
+                if f.name in src_cols
+                else f"cast(({tdef.defaults.get(f.name, 'null')}) as "
+                f"{f.dataType.simpleString()}) as {q(f.name)}"
                 for f in tdef.schema.fields
             ],
-            *([F.col("__ord__")] if "__ord__" in src.columns else []),
+            *(["__ord__"] if has_ord else []),
         )
 
         # INTEGER PRIMARY KEY auto-assignment (the SQLite rowid alias):
@@ -1427,7 +1452,7 @@ class DmlExecutor:
             ) or 0
             order_col = (
                 F.col("__ord__")
-                if "__ord__" in aligned.columns
+                if has_ord
                 else F.monotonically_increasing_id()
             )
             w = Window.orderBy(order_col).rowsBetween(
@@ -1478,9 +1503,7 @@ class DmlExecutor:
                 )
 
         if conflict is None:
-            inserted = aligned.drop(
-                *(["__ord__"] if "__ord__" in aligned.columns else [])
-            )
+            inserted = aligned.drop("__ord__") if has_ord else aligned
             self._fire_triggers("before", "insert", name, inserted, None, args)
             if self._has_triggers(name, "insert"):
                 # trigger bodies may have interleaved their own writes to

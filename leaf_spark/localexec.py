@@ -14,16 +14,27 @@ translation layer is the approximation, differential-tested against this
 very engine in tests/test_sqlite_differential.py).
 
 Safety model: a statement takes the local path only when
-  * every table it references is the staged ``event`` view (any known
-    store table, ``state.``/``main.`` qualifier, or the raw ``events``
-    log forces the Spark path), and
+  * every table it references is the staged ``event`` view or a
+    mirrored managed table (any other known store table, a
+    ``state.``/``main.`` qualifier left after ``flatten_namespaces``,
+    or the raw ``events`` log forces the Spark path), and
   * every function it calls is on the curated allowlist below — names
     where native-SQLite semantics and our Spark translation are the
     same tested surface — and is actually available in the linked
     SQLite (checked against ``pragma_function_list`` once), and
   * any sqlite error during evaluation (unknown column, syntax we
-    mis-gated) falls back to the Spark path — the local path never
-    WRITES, so falling back mid-way is always safe.
+    mis-gated) falls back to the Spark path.
+
+Reads (authorize, fold sources, named queries) never write. The one
+write path is ``LocalEval.fold``, the mirror fold of small tables
+(``Stream._mirror_fold``): it runs inside a SAVEPOINT on the mirror
+connection, and any sqlite error or abort, a written table past the
+mirror cap, or a value whose Python type is not exactly its declared
+Spark field's rolls the SAVEPOINT back — the mirrors are left as they
+were and nothing has reached Spark, so falling back to the Spark fold
+is always safe. Where the two engines disagree by raising (a UNIQUE or
+NOT NULL violation the Spark path does not enforce), the Spark path's
+result or error is the one that comes out.
 
 The drisl_* registrations share the exact conversion functions of the
 pandas UDFs (_drisl_udfs.conv_extract_*), so both paths are
@@ -132,23 +143,42 @@ def _available_fns() -> frozenset[str]:
 _AVAILABLE_FNS = _available_fns()
 
 
+def write_target(lows: list[str]) -> str | None:
+    """Target table of a plain INSERT INTO / UPDATE / DELETE FROM
+    (``lows``: lowercased tokens); None for any other statement,
+    including OR-clause conflict resolution and REPLACE."""
+    if len(lows) < 3:
+        return None
+    if lows[0] == "update" and lows[1] != "or":
+        return lows[1]
+    if (lows[0], lows[1]) in (("insert", "into"), ("delete", "from")):
+        return lows[2]
+    return None
+
+
 def eligible(
     stmt: str,
     known_tables: set[str],
     allow_abort: bool,
     toks: list[str] | None = None,
     mirrorable: frozenset[str] | set[str] = frozenset(),
+    write: bool = False,
 ) -> bool:
-    """True when ``stmt`` (a SELECT) provably touches only the staged
-    ``event`` table (plus tables in ``mirrorable``, which the caller
-    promises to stage as literal rows) and allowlisted functions.
+    """True when ``stmt`` provably touches only the staged ``event``
+    table (plus tables in ``mirrorable``, which the caller promises to
+    stage as literal rows) and allowlisted functions. ``stmt`` is a
+    SELECT, or with ``write`` an INSERT/UPDATE/DELETE (``write_target``)
+    whose target is in ``mirrorable``.
     Conservative: anything unrecognized (an unmirrored managed-table
     name, a ``state.`` qualifier, the raw ``events`` log, an
     un-allowlisted function, RETURNING) says False and the caller uses
     the Spark path."""
     toks = tokenize(stmt) if toks is None else toks
     lows = [t.lower() if _is_word(t) else t for t in toks]
-    if not lows or lows[0] != "select":
+    if write:
+        if write_target(lows) not in mirrorable:
+            return False
+    elif not lows or lows[0] != "select":
         return False
     fn_ok = _AVAILABLE_FNS | _DRISL_FNS
     if allow_abort:
@@ -167,6 +197,9 @@ def eligible(
             return False
         if nxt == "(":
             if low in _KEYWORDS:
+                continue
+            # INSERT INTO t (cols…) / ON CONFLICT (keys…)
+            if write and (low == "conflict" or (i and lows[i - 1] == "into")):
                 continue
             if low not in fn_ok:
                 return False
@@ -244,6 +277,61 @@ def table_refs(stmt: str, known_tables: set[str]) -> set[str]:
 # semantics and disqualifies the mirror.
 _MIRRORABLE_TYPES = (int, float, str, bytes, bool, type(None))
 
+# Spark field type (dml._SQLITE_TYPE_MAP's image) → (declared sqlite
+# type of a typed mirror column, the exact Python type sqlite3 returns
+# for a value the Spark field can hold)
+_DECL = {
+    "bigint": ("integer", int),
+    "double": ("real", float),
+    "string": ("text", str),
+    "binary": ("blob", bytes),
+}
+
+# DEFAULT clauses a typed mirror declares: literals only, which both
+# engines evaluate identically (an expression default — unixepoch(),
+# current_timestamp — is evaluated by each engine its own way)
+_LITERAL_DEFAULT = re.compile(r"^(null|[+-]?\d+(\.\d+)?|'([^']|'')*')$", re.I)
+
+
+def _typed_ddl(name: str, tdef, unique: set[str]) -> str | None:
+    """CREATE TABLE for a mirror that carries what sqlite needs to fold
+    the table natively: declared types (affinity), INTEGER PRIMARY KEY
+    (rowid auto-assignment), the primary key and UNIQUE columns (ON
+    CONFLICT targets), NOT NULL and literal DEFAULTs — the constraints
+    the Spark insert path applies from the same ``TableDef``. Key
+    columns get no NOT NULL: the Spark path exempts them too (SQLite's
+    NULL-in-PRIMARY-KEY quirk). Declared affinity converts values as the
+    reference's SQLite does; the one known difference from the Spark
+    cast is a REAL stored into a TEXT column (sqlite's 15-digit text
+    form, not Java's). None when a field type or a default has no exact
+    declaration here (the mirror is then staged untyped)."""
+    pk = tuple(tdef.primary_key)
+    ipk = None
+    if len(pk) == 1:
+        f0 = next((f for f in tdef.schema.fields if f.name == pk[0]), None)
+        if f0 is not None and f0.dataType.simpleString() == "bigint":
+            ipk = f0.name
+    cols = []
+    for f in tdef.schema.fields:
+        decl = _DECL.get(f.dataType.simpleString())
+        default = tdef.defaults.get(f.name)
+        if decl is None or (
+            default is not None and not _LITERAL_DEFAULT.match(default.strip())
+        ):
+            return None
+        col = f'"{f.name}" {decl[0]}'
+        if f.name == ipk:
+            col += " primary key"
+        elif not f.nullable and f.name not in pk:
+            col += " not null"
+        if default is not None:
+            col += f" default ({default})"
+        cols.append(col)
+    if pk and ipk is None:
+        cols.append("primary key (" + ", ".join(f'"{c}"' for c in pk) + ")")
+    cols += [f'unique ("{c}")' for c in sorted(unique)]
+    return f'create table "{name}" ({", ".join(cols)})'
+
 
 def _spark_str(v) -> str | None:
     """Mirror Spark's cast(x AS STRING) for abort-message args."""
@@ -271,6 +359,8 @@ class LocalEval:
         # size-bounded (cleared wholesale) instead of per-batch so the
         # authorize staging and the fold's run_select share hits.
         self._dcache: dict[bytes, object] = {}
+        # mirrors staged with their declared types and constraints
+        self._typed: set[str] = set()
         # check_same_thread=False: the owning Stream serializes access
         # under its RLock, but server threads rotate — the sqlite default
         # would refuse the (safe) cross-thread reuse
@@ -407,28 +497,55 @@ class LocalEval:
             raise LocalEvalError(str(e)) from e
 
     def stage_table(
-        self, name: str, columns: list[str], rows: list[tuple]
+        self,
+        name: str,
+        columns: list[str],
+        rows: list[tuple],
+        tdef=None,
+        unique: set[str] = frozenset(),
     ) -> bool:
         """Mirror a small managed table as literal rows. Returns False
         when any value's type has engine-specific comparison semantics —
         any previously staged mirror is dropped either way, so a stale
         version can never answer (absence surfaces as a sqlite error →
-        Spark fallback)."""
+        Spark fallback).
+
+        With the table's ``TableDef`` (and its ``unique`` columns) the
+        mirror is TYPED (``_typed_ddl``), which ``fold`` requires of
+        every table it writes. Rows the typed declaration rejects — the
+        Spark path does not enforce UNIQUE on plain inserts, so a table
+        can hold duplicate keys — stage untyped instead."""
         con = self._con
         con.execute(f'drop table if exists "{name}"')
+        self._typed.discard(name)
         for r in rows:
             for v in r:
                 if not isinstance(v, _MIRRORABLE_TYPES):
                     return False
+        ph = ", ".join("?" for _ in columns)
+        rows = [tuple(r) for r in rows]
+        ddl = (
+            _typed_ddl(name, tdef, unique)
+            if tdef is not None and tdef.schema.fieldNames() == list(columns)
+            else None
+        )
+        if ddl is not None:
+            try:
+                con.execute(ddl)
+                con.executemany(f'insert into "{name}" values ({ph})', rows)
+                self._typed.add(name)
+                return True
+            except sqlite3.Error:
+                con.execute(f'drop table if exists "{name}"')
         cols = ", ".join(f'"{c}"' for c in columns)
         con.execute(f'create table "{name}" ({cols})')
         if rows:
-            ph = ", ".join("?" for _ in columns)
-            con.executemany(
-                f'insert into "{name}" values ({ph})',
-                [tuple(r) for r in rows],
-            )
+            con.executemany(f'insert into "{name}" values ({ph})', rows)
         return True
+
+    def typed(self, name: str) -> bool:
+        """True when ``name``'s mirror was staged typed (``stage_table``)."""
+        return name in self._typed
 
     def insert_rows(
         self, name: str, columns: list[str], rows: list[tuple]
@@ -457,6 +574,7 @@ class LocalEval:
 
     def drop_table(self, name: str) -> None:
         self._con.execute(f'drop table if exists "{name}"')
+        self._typed.discard(name)
 
     def authorize(self, stmts: list[str], rows: list[tuple]) -> None:
         """Per-event authorizer evaluation: each statement sees a
@@ -494,6 +612,58 @@ class LocalEval:
         self._stage_event(["user", "payload"], rows)
         for stmt in stmts:
             self._execute(stmt)
+
+    def fold(
+        self, stmts: list[str], rows: list[tuple], written: dict, cap: int
+    ) -> dict[str, list[tuple]] | None:
+        """Fold the (idx, user, payload) ``rows`` through the write
+        statements (``eligible(write=True)``, names flattened) over the
+        typed mirrors, event-major: per event a single-row ``event``
+        table, then every statement in order — the reference's fold
+        order (lib.rs:543-569), with native ON CONFLICT, rowid
+        assignment and NOT NULL.
+
+        Runs inside one SAVEPOINT. Returns each table in ``written``
+        (name → Spark schema) as rows in rowid order, with the SAVEPOINT
+        released: the mirrors now hold the result. Returns None with the
+        SAVEPOINT rolled back — every mirror as it was — on any sqlite
+        error or abort, a written table past ``cap`` rows, or a value
+        whose Python type is not exactly its field's (``_DECL``)."""
+        want = {
+            name: [_DECL.get(f.dataType.simpleString()) for f in schema.fields]
+            for name, schema in written.items()
+        }
+        if any(None in w for w in want.values()):
+            return None
+        con = self._con
+        self._stage_event(["idx", "user", "payload"], [])
+        con.execute("savepoint mirror_fold")
+        try:
+            for row in rows:
+                con.execute("delete from event")
+                con.execute("insert into event values (?, ?, ?)", row)
+                for stmt in stmts:
+                    self._execute(stmt)
+            out = {}
+            for name, schema in written.items():
+                q = f'"{name}"'
+                if con.execute(f"select count(*) from {q}").fetchone()[0] > cap:
+                    raise LocalEvalError(f"{name} holds more than {cap} rows")
+                cols = ", ".join(f'"{c}"' for c in schema.fieldNames())
+                got = con.execute(
+                    f"select {cols} from {q} order by rowid"
+                ).fetchall()
+                for r in got:
+                    for v, (_, t) in zip(r, want[name]):
+                        if v is not None and type(v) is not t:
+                            raise LocalEvalError(f"{name}: {v!r} is not {t}")
+                out[name] = got
+        except (sqlite3.Error, LocalEvalError, LocalAbort):
+            con.execute("rollback to mirror_fold")
+            con.execute("release mirror_fold")
+            return None
+        con.execute("release mirror_fold")
+        return out
 
     def run_readonly(
         self, stmts: list[str], args: dict

@@ -39,6 +39,7 @@ Architecture (Spark-first, not a port):
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -59,7 +60,8 @@ from .dml import DmlExecutor, TableStore
 from .fold import execute as fold_exec
 from .fold import plan as fold_plan
 from .module import BasicModuleDef, split_statements, strip_comments
-from .sqlcompat import Authorizer, tokenize, top_level, _is_word
+from .localdf import arrow_local_df
+from .sqlcompat import Authorizer, on_conflict_at, tokenize, top_level, _is_word
 from .types import Event, IncomingEvent, LeafQuery, SqlValue, validate_params
 
 EVENT_SCHEMA = T.StructType(
@@ -255,8 +257,6 @@ class Stream:
         3-5 actions per commit, so this is most of the single-event
         commit latency. Falls back to the classic path on any Arrow
         conversion failure (never a correctness dependency)."""
-        from .localdf import arrow_local_df
-
         return arrow_local_df(self.spark, rows, schema)
 
     def _scheduler_pool(self):
@@ -317,8 +317,6 @@ class Stream:
         not)."""
         files = [p for _, _, p in self._log_files()]
         if not files:
-            from .localdf import arrow_local_df
-
             return arrow_local_df(self.spark, [], EVENT_SCHEMA)
         return self.spark.read.schema(EVENT_SCHEMA).parquet(*files).where(
             F.col("idx") <= self.state.latest_idx
@@ -865,13 +863,16 @@ class Stream:
 
     # -- A6 replay / catch-up -----------------------------------------------
 
-    def _executor(self, event_view: str | None, stmts: list[str]) -> DmlExecutor:
+    def _executor(
+        self, event_view: str | Callable[[], str] | None, stmts: list[str]
+    ) -> DmlExecutor:
         """ONE executor per script, and the raw-log view only when some
         statement references ``events``: re-reading the parquet log +
         re-registering its temp view per statement was ~80 ms of driver
         round-trips on every fold statement and subscription re-query
         that never touches the raw log (a literal-string false positive
-        merely over-registers — harmless)."""
+        merely over-registers — harmless). ``event_view`` may be a
+        callable that registers the view on first reference."""
         extra = {}
         if any(re.search(r"\bevents\b", s, re.IGNORECASE) for s in stmts):
             extra["events"] = self._events_view()
@@ -918,7 +919,7 @@ class Stream:
 
     def _fold_df(
         self,
-        events: DataFrame,
+        events: DataFrame | Callable[[], DataFrame],
         fold_sql: str,
         policy: str,
         local_rows: list[tuple] | None = None,
@@ -928,30 +929,44 @@ class Stream:
         The staged ``event`` view exposes exactly the reference's
         materializer columns (idx, user, payload — basic.rs:60-74);
         signature is log-only, and a module doing ``SELECT * FROM event``
-        must see the same arity as it would on the reference.
+        must see the same arity as it would on the reference. ``events``
+        may be a zero-argument callable: the frame is then built, and the
+        view registered, only when a Spark statement reads ``event``.
 
         ``local_rows`` — the staged (idx, user, payload) tuples when they
-        are driver-local (interactive commits); enables the sqlite
-        fold-source fast path. Replay/catch-up folds read the parquet log
+        are driver-local (interactive commits); enables the mirror fold
+        of small tables (``_mirror_fold``) and the sqlite fold-source
+        fast path. Replay/catch-up folds read the parquet log
         distributed and pass None — at that scale the set-wise Spark path
         is the right one.
 
         Every statement authorizes before the first one executes; then
-        the steps of ``fold.plan.plan`` run in one loop, or — when the
-        planner returns None — the whole script folds per event."""
+        the mirror fold, or the steps of ``fold.plan.plan`` in one loop,
+        or — when the planner returns None — the per-event fold."""
         if not fold_sql.strip():
             return
         is_state = policy == "state_materialize"
-        ev_view = self.store.view_prefix + "event"
-        events = events.select("idx", "user", "payload")
         stmts = split_statements(strip_comments(fold_sql))
-        steps = fold_plan.plan(stmts, self.store)
         for stmt in stmts:
             self.sql_authorizer.check(stmt, policy)
+        if local_rows is not None and self._mirror_fold(stmts, local_rows):
+            return
+        ev_view = self.store.view_prefix + "event"
+        source = (lambda: events) if isinstance(events, DataFrame) else events
+
+        @functools.cache
+        def events_df() -> DataFrame:
+            return source().select("idx", "user", "payload")
+
+        @functools.cache
+        def staged_view() -> str:
+            events_df().createOrReplaceTempView(ev_view)
+            return ev_view
+
+        steps = fold_plan.plan(stmts, self.store)
         le = self._local_eval
         if steps is not None:
-            events.createOrReplaceTempView(ev_view)
-            ex = self._executor(ev_view, stmts)
+            ex = self._executor(staged_view, stmts)
             for step in steps:
                 if step.kind == "roundwise":
                     fold_exec.exec_roundwise(ex, step.sql, is_state)
@@ -973,11 +988,11 @@ class Stream:
                     ex.execute(s, is_state=is_state)
             return
         # per-event sequential fold (reference lib.rs:543-569)
-        rows = events.orderBy("idx").collect()
-        cols = events.columns
+        rows = events_df().orderBy("idx").collect()
+        cols = events_df().columns
         for r in rows:
             row = tuple(r[c] for c in cols)
-            one = self._event_local_df([row], events.schema)
+            one = self._event_local_df([row], events_df().schema)
             one.createOrReplaceTempView(ev_view)
             ex = self._executor(ev_view, stmts)
             for stmt in stmts:
@@ -986,6 +1001,74 @@ class Stream:
                 # the statement's own managed-table reads stay in Spark
                 s2 = fold_exec.localize_insert(ex, le, stmt, [row[:3]]) or stmt
                 ex.execute(s2, is_state=is_state)
+
+    def _mirror_fold(self, stmts: list[str], local_rows: list[tuple]) -> bool:
+        """Fold an interactive batch in the localexec sqlite mirror when
+        it writes only small mirrored tables — the reference folds in
+        process in SQLite (lib.rs:543-569; state events lib.rs:721-773)
+        — and hand each written table to Spark as one literal: no Spark
+        DML plan, join, window or checkpoint job.
+
+        Applies when some statement is not a plain append (a pure-append
+        script keeps the literal-append path), every statement passes
+        ``localexec.eligible(write=True)``, every table it reads or
+        writes is managed, trigger-free and mirrored at its current
+        version (``_mirror_tables``, which re-probes no table whose
+        staging failed before), every written mirror is typed, and
+        connection-state tracking is off. ``LocalEval.fold`` then runs
+        the batch in a SAVEPOINT; a written table past ``_MIRROR_CAP``
+        rows, a value of the wrong type, or any sqlite error or abort
+        rolls it back. Returns False — nothing written anywhere — for
+        the caller's Spark fold."""
+        store = self.store
+        if store.track_changes:
+            return False
+        known = store.known_tables()
+        flat: list[str] = []
+        refs: set[str] = set()
+        written: list[str] = []
+        appends_only = True
+        for s_ in stmts:
+            s2 = localexec.flatten_namespaces(s_)
+            toks = tokenize(s2)
+            lows = [t.lower() if _is_word(t) else t for t in toks]
+            r = localexec.table_refs(s2, known)
+            if not localexec.eligible(
+                s2, known, allow_abort=False, toks=toks, mirrorable=r, write=True
+            ):
+                return False
+            appends_only &= lows[0] == "insert" and on_conflict_at(toks, lows) < 0
+            written.append(localexec.write_target(lows))
+            flat.append(s2)
+            refs |= r
+        if (
+            appends_only
+            or not refs <= store.defs.keys()
+            or any(t.table in refs for t in store.triggers.values())
+        ):
+            return False
+        self._purge_stale_mirrors()
+        le = self._local_eval
+        if not self._mirror_tables(refs, retry_failed=False) or not all(
+            le.typed(t) for t in written
+        ):
+            return False
+        schemas = {
+            t: T.StructType(
+                [T.StructField(f.name, f.dataType) for f in store.defs[t].schema]
+            )
+            for t in written
+        }
+        out = le.fold(flat, local_rows, schemas, self._MIRROR_CAP)
+        if out is None:
+            return False
+        for name, rows in out.items():
+            ver = store.replaced(
+                name, arrow_local_df(self.spark, rows, schemas[name])
+            )
+            self._mirror_versions[name] = ver
+            self._mirror_rows[name] = len(rows)
+        return True
 
     # -- A3 authorize --------------------------------------------------------
 
@@ -1067,12 +1150,17 @@ class Stream:
                 le.drop_table(name)
                 del self._mirror_versions[name]
 
-    def _mirror_tables(self, names: set[str]) -> bool:
+    def _mirror_tables(self, names: set[str], retry_failed: bool = True) -> bool:
         """Stage each named managed table into the local evaluator as
         literal rows, cached per TableStore registration version (any
         mutation/rollback/restore re-registers and bumps it, so a stale
-        mirror can never answer). Returns False when any table exceeds
-        the cap or carries unmirrorable value types."""
+        mirror can never answer). Mirrors are typed from the table's
+        ``TableDef`` (``LocalEval.stage_table``). Returns False when any
+        table exceeds the cap or carries unmirrorable value types.
+        Without ``retry_failed`` a table whose staging failed before, at
+        any version, is not probed again with a ``take()`` job — the
+        mirror fold's rule: a table past the cap would otherwise pay
+        that job on every commit."""
         le = self._local_eval
         for name in sorted(names):
             ver = self.store.table_version(name)
@@ -1088,16 +1176,17 @@ class Stream:
             df = self.store.tables.get(name)
             if df is None:
                 return False
-            if staged is None:
-                # never staged, but the append chain may be complete since
-                # CREATE (provably empty base): bootstrap by replaying the
+            if staged is None or self.store.mirror_deltas(name, staged) is None:
+                # never staged (or the chain from the staged version is
+                # lost), but the append chain may be complete since CREATE
+                # (provably empty base): bootstrap by replaying the
                 # deltas into an empty mirror — no take(), no Spark job,
                 # and no 256-row ceiling on the first look
                 base = self.store.mirror_base(name)
                 if (
                     base is not None
                     and self.store.mirror_deltas(name, base) is not None
-                    and le.stage_table(name, df.columns, [])
+                    and le.stage_table(name, df.columns, [], *self._mirror_def(name))
                 ):
                     self._mirror_rows[name] = 0
                     staged = base
@@ -1110,6 +1199,8 @@ class Stream:
                 # "restage" falls through to the full path below
                 self._mirror_versions.pop(name, None)
                 self._mirror_rows.pop(name, None)
+            if not retry_failed and name in self._mirror_failed:
+                return False
             rows = df.take(self._MIRROR_CAP + 1)
             if len(rows) > self._MIRROR_CAP:
                 self._mirror_versions.pop(name, None)
@@ -1118,7 +1209,10 @@ class Stream:
                 return False
             cols = df.columns
             if not le.stage_table(
-                name, cols, [tuple(r[c] for c in cols) for r in rows]
+                name,
+                cols,
+                [tuple(r[c] for c in cols) for r in rows],
+                *self._mirror_def(name),
             ):
                 self._mirror_versions.pop(name, None)
                 self._mirror_failed[name] = ver
@@ -1127,6 +1221,10 @@ class Stream:
             self._mirror_rows[name] = len(rows)
             self.store.mirror_synced(name, ver)
         return True
+
+    def _mirror_def(self, name: str) -> tuple:
+        """(TableDef, UNIQUE columns) a typed mirror of ``name`` declares."""
+        return self.store.defs.get(name), self.store.unique_key_cols(name)
 
     def _advance_mirror(self, name: str, df, staged: int, ver: int) -> str:
         """Try to advance an already-staged mirror to ``ver`` by inserting
@@ -1176,7 +1274,9 @@ class Stream:
         self.store.mirror_synced(name, ver)
         return "advanced"
 
-    def _authorize(self, staged: list[Event], staged_df: DataFrame) -> None:
+    def _authorize(
+        self, staged: list[Event], staged_df: Callable[[], DataFrame]
+    ) -> None:
         """Run the authorizer for every staged event.
 
         Statements that touch only the staged ``event`` table evaluate
@@ -1189,7 +1289,9 @@ class Stream:
         no per-event driver→JVM data transfer — and forcing evaluation in
         chunked unions: ~N/32 Spark jobs per batch instead of multiple jobs
         per event. Any ``throw``/``unauthorized`` fires during evaluation
-        and rejects the whole batch (reference lib.rs:592-595)."""
+        and rejects the whole batch (reference lib.rs:592-595).
+        ``staged_df`` builds the staged batch frame; only that Spark
+        branch calls it."""
         if self.module is None or not self.module.authorizer.strip():
             return
         stmts = split_statements(strip_comments(self.module.authorizer))
@@ -1250,6 +1352,7 @@ class Stream:
                 pass  # mis-gated: evaluate everything through Spark
         if not stmts:
             return
+        staged_df = staged_df()
         if not staged_df.isLocal():
             # lineage-truncate non-local staging so the N lazy branches
             # don't re-run an upstream scan each; Arrow-local staging
@@ -1343,8 +1446,11 @@ class Stream:
             ]
             snap = self.store.snapshot()
             try:
-                staged_df = self._event_local_df(
-                    [(e.idx, e.user, e.payload, e.signature) for e in staged]
+                # built only if a Spark branch reads the batch
+                staged_df = functools.cache(
+                    lambda: self._event_local_df(
+                        [(e.idx, e.user, e.payload, e.signature) for e in staged]
+                    )
                 )
                 self._authorize(staged, staged_df)
                 self._fold_df(
@@ -1390,19 +1496,14 @@ class Stream:
         if not events:
             return
         with self._lock:
-            staged_df = self._event_local_df(
-                [(i + 1, e.user, e.payload, b"") for i, e in enumerate(events)]
-            )
+            rows = [(i + 1, e.user, e.payload) for i, e in enumerate(events)]
             snap = self.store.snapshot()
             try:
                 self._fold_df(
-                    staged_df,
+                    lambda: self._event_local_df([(*r, b"") for r in rows]),
                     self.module.state_materializer,
                     "state_materialize",
-                    local_rows=[
-                        (i + 1, e.user, e.payload)
-                        for i, e in enumerate(events)
-                    ],
+                    local_rows=rows,
                 )
                 self.store.checkpoint_all()
             except Exception:

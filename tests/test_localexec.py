@@ -1070,3 +1070,108 @@ class TestMirrorChainLongevity:
         ):
             got = s.query(None, q)
         assert [r["v"] for r in got] == [1, 3]
+
+
+class TestMirrorFold:
+    """Small tables fold in the sqlite mirror (Stream._mirror_fold): a
+    read-marker commit runs no Spark job, a fold the engines disagree on
+    by raising leaves mirror and Spark rows at their pre-batch contents,
+    and a batch past _MIRROR_CAP takes the Spark path."""
+
+    _jobs = staticmethod(TestMirrorChainLongevity._jobs)
+
+    @staticmethod
+    def _rows(s, name):
+        spark_rows = sorted(tuple(r) for r in s.store.tables[name].collect())
+        mirror = sorted(
+            s._local_eval._con.execute(f'select * from "{name}"').fetchall()
+        )
+        return spark_rows, mirror
+
+    def test_chat_read_marker_runs_no_job(self, spark, tmp_path):
+        from .fixtures import marker, msg
+
+        s = Stream(spark, str(tmp_path), "did:plc:mfold")
+        s.provide_module(CHAT)
+        s.add_events([msg("a", f"m{i}", i) for i in range(4)])
+        jobs = [
+            self._jobs(
+                spark, lambda i=i: s.add_state_events([marker(f"u{i % 3}", i)])
+            )
+            for i in range(6)
+        ]
+        assert jobs == [0] * 6
+        name = "state_read_markers"
+        assert s._mirror_versions[name] == s.store.table_version(name)
+        spark_rows, mirror = self._rows(s, name)
+        assert spark_rows == mirror == [("u0", 3), ("u1", 4), ("u2", 5)]
+        assert s.query("u1", LeafQuery("my_unread")) == [{"unread": 0}]
+
+    def test_not_null_violation_rejects_and_keeps_rows(self, spark, tmp_path):
+        """An event without .v upserts NULL into a NOT NULL column: sqlite
+        raises, the SAVEPOINT rolls back, and the Spark path raises its
+        own error for the whole batch. Both copies keep the pre-batch
+        rows, and the mirror stays usable — the next batch folds there
+        again, with no job."""
+        mod = BasicModuleDef(
+            state_init_sql=(
+                "create table if not exists state.t "
+                "(user text primary key, v integer not null);"
+            ),
+            state_materializer=(
+                "insert into state.t (user, v) select user, "
+                "drisl_extract_int(payload, '.v') from event where true "
+                "on conflict(user) do update set v = excluded.v;"
+            ),
+            queries=(QueryDef("t", "select user, v from state.t order by user"),),
+        )
+        s = Stream(spark, str(tmp_path), "did:plc:mfoldnn")
+        s.provide_module(mod)
+        s.add_state_events([ev("a", v=1), ev("b", v=2)])
+        before = [("a", 1), ("b", 2)]
+        assert self._rows(s, "state_t") == (before, before)
+        with pytest.raises(Exception, match="NOT NULL constraint failed"):
+            s.add_state_events([ev("a", v=5), ev("c")])
+        assert self._rows(s, "state_t") == (before, before)
+        assert self._jobs(spark, lambda: s.add_state_events([ev("c", v=3)])) == 0
+        after = [*before, ("c", 3)]
+        assert self._rows(s, "state_t") == (after, after)
+
+    def test_batch_past_cap_takes_spark_path(self, spark, tmp_path):
+        from .fixtures import marker
+
+        s = Stream(spark, str(tmp_path), "did:plc:mfoldcap")
+        s.provide_module(CHAT)
+        name = "state_read_markers"
+        first = [marker(f"u{i}", i) for i in range(200)]
+        assert self._jobs(spark, lambda: s.add_state_events(first)) == 0
+        crossing = [marker(f"u{i}", i + 1000) for i in range(150, 260)]
+        assert self._jobs(spark, lambda: s.add_state_events(crossing)) > 0
+        want = {f"u{i}": i for i in range(150)}
+        want.update({f"u{i}": i + 1000 for i in range(150, 260)})
+        assert len(want) > Stream._MIRROR_CAP
+        got = dict(tuple(r) for r in s.store.tables[name].collect())
+        assert got == want
+        assert s._mirror_versions.get(name) != s.store.table_version(name)
+        assert s.query("u255", LeafQuery("my_unread")) == [{"unread": 0}]
+
+    def test_reopen_and_clear_return_to_the_mirror(self, spark, tmp_path):
+        """After a reopen from the snapshot the state table's mirror is
+        staged once (one take job) and the fold returns to the mirror;
+        after clear_state the recreated table bootstraps from its empty
+        base with no job at all."""
+        from .fixtures import marker, msg
+
+        s = Stream(spark, str(tmp_path), "did:plc:mfoldre")
+        s.provide_module(CHAT)
+        s.add_events([msg("a", "m", 1)])  # a fold cursor, so reopen loads
+        s.add_state_events([marker("a", 1)])
+        s.persist_state()
+        s2 = Stream(spark, str(tmp_path), "did:plc:mfoldre")
+        s2.provide_module(CHAT)
+        assert self._jobs(spark, lambda: s2.add_state_events([marker("a", 2)])) == 1
+        assert self._jobs(spark, lambda: s2.add_state_events([marker("b", 3)])) == 0
+        s2.clear_state()
+        assert self._jobs(spark, lambda: s2.add_state_events([marker("c", 4)])) == 0
+        spark_rows, mirror = self._rows(s2, "state_read_markers")
+        assert spark_rows == mirror == [("c", 4)]

@@ -1097,6 +1097,102 @@ def test_dml_state_matches_sqlite_on_random_scripts(spark, stmts, seq):
 
 
 # ---------------------------------------------------------------------------
+# the mirror fold (Stream._mirror_fold) against the forced Spark fold: the
+# upsert / update / delete shapes of _dml_stmt as one state materializer
+# whose event payload picks the statement that bites
+# ---------------------------------------------------------------------------
+
+
+def _state_fold_module():
+    from leaf_spark.module import BasicModuleDef, QueryDef
+
+    ev = "(select drisl_extract_int(payload, '.{}') from event)"
+    return BasicModuleDef(
+        state_init_sql=(
+            "create table if not exists state.u (k integer primary key, "
+            "n integer default 0, s text default 'd');"
+        ),
+        state_materializer=(
+            "insert into state.u (k, n) select drisl_extract_int(payload, '.k'), "
+            "drisl_extract_int(payload, '.n') from event "
+            "where drisl_exists(payload, '.up') "
+            "on conflict(k) do update set n = n + excluded.n; "
+            f"update state.u set n = n * 2 + {ev.format('t')} "
+            f"where k % 2 = 0 and {ev.format('dbl')} = 1; "
+            f"update state.u set s = s || 'x' where n > {ev.format('t')} "
+            f"and {ev.format('cat')} = 1; "
+            f"delete from state.u where n < {ev.format('t')} "
+            f"and {ev.format('del')} = 1;"
+        ),
+        queries=(QueryDef("u", "select k, n, s from state.u order by k"),),
+    )
+
+
+@st.composite
+def _state_fold_event(draw):
+    from leaf_spark import drisl
+    from leaf_spark.types import IncomingEvent
+
+    kind = draw(st.sampled_from(["up", "up", "dbl", "cat", "del"]))
+    p = {kind: 1, "t": draw(_dml_t)}
+    if kind == "up":
+        p.update(k=draw(_dml_k), n=draw(_dml_n))
+    return IncomingEvent("did:plc:u", drisl.encode(p))
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    batches=st.lists(
+        st.lists(_state_fold_event(), min_size=1, max_size=4),
+        min_size=1,
+        max_size=3,
+    )
+)
+def test_mirror_fold_matches_spark_fold(spark, tmp_path_factory, batches):
+    """Each batch folds in the sqlite mirror on one stream and through
+    the Spark fold on another (the mirror fold patched off): every table
+    state must be identical, and the mirror fold must have taken every
+    batch."""
+    import unittest.mock as mock
+
+    from leaf_spark.stream import Stream
+    from leaf_spark.types import LeafQuery
+
+    mod = _state_fold_module()
+    root = tmp_path_factory.mktemp("mfold")
+    took = []
+    fold = Stream._mirror_fold
+
+    def recording(self, stmts, rows):
+        took.append(fold(self, stmts, rows))
+        return took[-1]
+
+    local = Stream(spark, str(root / "mirror"), "did:plc:mfdiff")
+    local.provide_module(mod)
+    forced = Stream(spark, str(root / "spark"), "did:plc:mfdiff")
+    forced.provide_module(mod)
+    for batch in batches:
+        with mock.patch.object(Stream, "_mirror_fold", recording):
+            local.add_state_events(batch)
+        with mock.patch.object(
+            Stream, "_mirror_fold", lambda self, stmts, rows: False
+        ):
+            forced.add_state_events(batch)
+        got, want = (
+            sorted(tuple(r) for r in s_.store.tables["state_u"].collect())
+            for s_ in (local, forced)
+        )
+        assert got == want, batches
+    assert took == [True] * len(batches)
+    q = LeafQuery("u", limit=100)
+    assert local.query(None, q) == forced.query(None, q)
+
+
+# ---------------------------------------------------------------------------
 # fuzz: COLLATE NOCASE comparisons and ordering against sqlite3
 # ---------------------------------------------------------------------------
 

@@ -807,6 +807,7 @@ class TestSoakMirrorBoundary:
         cur = KV
         m = KvModel()
         next_ban = [0]
+        next_mark = [0]
 
         def commit(events):
             pre_bans = len(m.bans)
@@ -844,6 +845,12 @@ class TestSoakMirrorBoundary:
                 # _authorize call), so a banned sender still marks
                 s.add_state_events([ev(sender, m=i)])
                 m.marks[sender] = i
+            elif op == "mark_many":
+                # three new users: grows state.marks across the cap
+                users = [f"w{next_mark[0] + j}" for j in range(3)]
+                next_mark[0] += 3
+                s.add_state_events([ev(u, m=i) for u in users])
+                m.marks.update((u, i) for u in users)
             elif op == "persist":
                 # snapshot under the schedule: untouched tables skip,
                 # mutated ones rewrite/chain; mirrors of skipped tables
@@ -1012,6 +1019,46 @@ class TestSoakMirrorBoundary:
                 self._mirror_rows_match(s)
 
         run()
+
+    def test_state_table_cap_crossing(self, spark, tmp_path):
+        """state.marks folds in the sqlite mirror (Stream._mirror_fold)
+        while it fits the (patched) cap; the batch that carries it past
+        the cap rolls the mirror fold back and takes the Spark path.
+        Interleaved rejections, persist and reopen must keep query
+        results equal to the model and every current mirror equal to
+        Spark's rows on both sides of the crossing."""
+        import unittest.mock as mock
+
+        from leaf_spark.localexec import LocalEval
+        from leaf_spark.stream import Stream as S
+
+        outcomes = []
+        fold = LocalEval.fold
+
+        def recording(le, stmts, rows, written, cap):
+            out = fold(le, stmts, rows, written, cap)
+            if "state_marks" in written:
+                outcomes.append(out is not None)
+            return out
+
+        old = S._MIRROR_CAP
+        S._MIRROR_CAP = 6
+        try:
+            with mock.patch.object(LocalEval, "fold", recording):
+                s, m = self._run_schedule(
+                    spark,
+                    str(tmp_path / "mcross"),
+                    "did:plc:mcross",
+                    ["mark", "mark_many", "kv", "throw", "mark_many",
+                     "persist", "mark", "mark_many", "kv", "mark",
+                     "reopen", "mark_many", "mark"],
+                )
+        finally:
+            S._MIRROR_CAP = old
+        assert len(m.marks) > 6
+        # folded in the mirror under the cap, rolled back past it
+        assert True in outcomes and False in outcomes
+        assert outcomes.index(False) > outcomes.index(True)
 
     def test_real_cap_crossing(self, spark, tmp_path):
         """Cross the production _MIRROR_CAP=256 once: the mirror must

@@ -434,75 +434,6 @@ def test_disorder_monitor_matches_batch_q130(spark, events_src_dir, tmp_path):
     assert sum(v[0] for v in last.values()) > 0
 
 
-def _write_gate_corpus(spark, src):
-    """Source parquet with a known pass/fail mix: passing docs are 54
-    stopword-bearing tokens; failing docs are 2-token stubs (r_len)."""
-    good = ("the quick brown fox jumps over with lazy dogs and " * 6).strip()
-    rows = [(i, good, "en", "s", len(good)) for i in range(6)]
-    rows += [(100 + i, "x y", "en", "s", 3) for i in range(4)]
-    spark.createDataFrame(
-        rows,
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    ).coalesce(2).write.parquet(src)
-    return {i for i in range(6)}, {100 + i for i in range(4)}
-
-
-def test_gated_corpus_ingest_matches_batch_gate(spark, tmp_path):
-    """The streaming gate must partition the corpus EXACTLY as the batch
-    gopher_filter: survivors + quarantined = all docs, disjoint, and the
-    quarantine side carries the same per-rule verdicts."""
-    from leaf_spark.operators.text import gopher_filter
-    from leaf_spark.streaming.pipeline import gated_corpus_ingest
-
-    src, out, quar, ckpt = (
-        str(tmp_path / d) for d in ("src", "out", "quar", "ckpt")
-    )
-    want_keep, want_drop = _write_gate_corpus(spark, src)
-
-    q = gated_corpus_ingest(spark, src, out, quar, ckpt, max_files=1)
-    q.awaitTermination(120)
-
-    batch = spark.read.parquet(src)
-    expect = {r["doc_id"]: r["keep"] for r in gopher_filter(batch).collect()}
-    assert {d for d, k in expect.items() if k} == want_keep  # gate sanity
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    quarantined = {r["doc_id"]: r for r in spark.read.parquet(quar).collect()}
-    assert kept == want_keep
-    assert set(quarantined) == want_drop
-    # verdicts survive into the quarantine sink for audit
-    some = next(iter(quarantined.values()))
-    for col in ("r_len", "r_stopword", "keep"):
-        assert col in some.asDict()
-
-
-def test_gated_ingest_replay_is_idempotent(spark, tmp_path):
-    """Restarting from the same checkpoint must not duplicate sink rows:
-    the per-batch-id dynamic partition overwrite makes replays no-ops."""
-    from leaf_spark.streaming.pipeline import gated_corpus_ingest
-
-    src, out, quar, ckpt = (
-        str(tmp_path / d) for d in ("src", "out", "quar", "ckpt")
-    )
-    _write_gate_corpus(spark, src)
-
-    gated_corpus_ingest(spark, src, out, quar, ckpt).awaitTermination(120)
-    n_out = spark.read.parquet(out).count()
-    n_q = spark.read.parquet(quar).count()
-    assert n_out == 6 and n_q == 4
-    # second availableNow run over the SAME checkpoint: no new files -> no
-    # new batches; sink contents unchanged
-    gated_corpus_ingest(spark, src, out, quar, ckpt).awaitTermination(120)
-    assert spark.read.parquet(out).count() == n_out
-    assert spark.read.parquet(quar).count() == n_q
-    # the dynamic-overwrite mode is a per-write option, NOT leaked into
-    # the session conf (a session-wide change would flip other
-    # overwrite+partitionBy writes from truncate to merge semantics)
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower()
-        == "static"
-    )
-
-
 def test_transition_counts_match_batch_lead_window(spark, events_src_dir, tmp_path):
     """The streaming per-user transition state, summed over users, must
     equal the batch lead()-window transition matrix in the same

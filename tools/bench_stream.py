@@ -7,7 +7,11 @@ batch-safe INSERT…SELECT materializer):
 - ingest:   events/sec through add_events (authorize → materialize →
             atomic log append), across several batch sizes, and the
             Spark jobs per commit (spark_jobs_per_commit, one job group
-            around the ingest loop);
+            around the ingest loop) and py4j round trips per commit
+            (py4j_calls_per_commit, a counting wrapper on
+            ClientServerConnection.send_command);
+- state:    the same two counts per single read-marker commit
+            (spark_jobs_per_state_commit, py4j_calls_per_state_commit);
 - replay:   events/sec to rebuild materialized state from the log
             (fresh Stream on the same root, snapshot disabled by removal);
 - reopen:   seconds to reopen with the persisted state snapshot (the
@@ -32,7 +36,28 @@ from leaf_spark.session import get_spark
 from leaf_spark.stream import Stream
 from leaf_spark.types import IncomingEvent, LeafQuery, SqlValue
 
-from tests.fixtures import CHAT, msg  # chat module + event factory
+from tests.fixtures import CHAT, marker, msg  # chat module + event factories
+
+
+def _count_py4j_calls() -> list[int]:
+    """Count every py4j round trip from here on; returns the counter."""
+    from py4j.clientserver import ClientServerConnection
+
+    calls = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        calls[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    return calls
+
+
+def _group_jobs(sc, group: str) -> int:
+    """Spark jobs run under ``group`` (listener bus drained first)."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def main() -> None:
@@ -40,6 +65,7 @@ def main() -> None:
     batch = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
     spark = get_spark("leaf-stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    py4j_calls = _count_py4j_calls()
 
     root = tempfile.mkdtemp(prefix="stream_bench_")
     out: dict = {"n_events": n_events, "batch_size": batch}
@@ -51,6 +77,7 @@ def main() -> None:
         sc = spark.sparkContext
         sc.setJobGroup("bench-ingest", "ingest loop")
         t0 = time.time()
+        c0 = py4j_calls[0]
         i = commits = 0
         while i < n_events:
             events = [msg("did:plc:u", f"m{j}", j) for j in range(i, min(i + batch, n_events))]
@@ -58,11 +85,26 @@ def main() -> None:
             i += len(events)
             commits += 1
         ingest_s = time.time() - t0
+        ingest_calls = py4j_calls[0] - c0
         sc.setLocalProperty("spark.jobGroup.id", None)
         out["ingest_events_per_sec"] = round(n_events / ingest_s, 1)
-        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-        ingest_jobs = len(sc.statusTracker().getJobIdsForGroup("bench-ingest"))
+        ingest_jobs = _group_jobs(sc, "bench-ingest")
         out["spark_jobs_per_commit"] = round(ingest_jobs / max(commits, 1), 3)
+        out["py4j_calls_per_commit"] = round(ingest_calls / max(commits, 1), 1)
+
+        # single read-marker commits (state events fold in the sqlite
+        # mirror while the state table is small)
+        n_state = 20
+        sc.setJobGroup("bench-state", "state commits")
+        c0 = py4j_calls[0]
+        for k in range(n_state):
+            s.add_state_events([marker(f"did:plc:r{k % 4}", k)])
+        state_calls = py4j_calls[0] - c0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        out["spark_jobs_per_state_commit"] = round(
+            _group_jobs(sc, "bench-state") / n_state, 3
+        )
+        out["py4j_calls_per_state_commit"] = round(state_calls / n_state, 1)
 
         # query round-trips over materialized state
         t0 = time.time()
