@@ -29,6 +29,7 @@ fold/plan.py).
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -180,40 +181,35 @@ class TableStore:
     _LITERAL_SEGMENT_CAP = 32
     # per-table monotone registration counter (see register())
     _table_versions: dict = field(default_factory=dict)
-    # pure-insert deltas since the last snapshot: name → list of the
-    # appended DataFrames (driver-local literal plans only), or None
-    # once any non-append mutation or non-literal delta poisoned the
-    # table. Consumed by Stream.persist_state to write O(delta)
-    # incremental snapshots for append-only tables (the common fold
-    # shape); anything it can't prove append-only falls back to the full
-    # rewrite — the safe direction. Missing key = untouched since the
-    # last snapshot.
-    _snap_deltas: dict = field(default_factory=dict)
-    # mirror append chain: name → list of (lo_ver, hi_ver, delta_df | None)
-    # entries — each advances a mirror at version lo to hi, every delta a
-    # proven literal — or None once poisoned by a non-append
-    # registration. Like _snap_deltas but keyed by VERSION instead of
-    # "since last snapshot", so the localexec sqlite mirrors
-    # (Stream._mirror_tables) can advance a mirror staged at any version
-    # by inserting only the delta rows — the O(delta) read-path analogue
-    # of the incremental snapshot. A None delta records a
-    # content-preserving re-registration (checkpoint/persist re-point).
-    # r12: past _MIRROR_CHAIN_CAP entries the chain FOLDS its two oldest
-    # entries into one (delta = union of the two LocalRelations) instead
-    # of dropping history — dropping silently forced a full restage on
-    # long-running append-only tables, and a mirror grown past
-    # Stream._MIRROR_CAP cannot restage at all (permanent Spark floor).
-    # Consumed entries are pruned by mirror_synced(); the fold-span bound
-    # caps pathological no-reader chains (the union's ANALYSIS cost is
-    # linear in folded entry count — beyond the bound a restage is
-    # cheaper than the plan walk).
+    # append chain: name → list of (lo_ver, hi_ver, delta_df | None)
+    # entries — each advances a reader at version lo to hi, every delta a
+    # proven literal — or None once poisoned by a registration that is
+    # not a proven append (``register``, the only poisoning rule). A None
+    # delta records a content-preserving re-registration (checkpoint /
+    # snapshot re-point). Two readers consume it through
+    # ``deltas_since``, each from its own version (``chain_readers``):
+    # Stream's localexec sqlite mirror advances by inserting the delta
+    # rows, and persist_state writes them as an O(delta) incremental
+    # snapshot. Pruning and folding (``_fold_chain``) keep every entry
+    # and boundary a reader still needs: past _MIRROR_CHAIN_CAP entries
+    # the oldest pair no reader sits between FOLDS into one entry (delta
+    # = union of the two LocalRelations) instead of dropping history —
+    # a mirror grown past Stream._MIRROR_CAP cannot restage at all. A
+    # fold wider than _MIRROR_FOLD_SPAN versions (a reader that stopped
+    # reading; the union's ANALYSIS cost is linear in folded entries)
+    # cuts the chain at the next reader instead.
     _mirror_chain: dict = field(default_factory=dict)
     _MIRROR_CHAIN_CAP = 64
-    _MIRROR_FOLD_SPAN = 16384  # matches Stream._MIRROR_CAP_APPEND
+    # widest fold, in versions; also the most rows an append-grown mirror
+    # holds (Stream._MIRROR_CAP_APPEND reads this)
+    _MIRROR_FOLD_SPAN = 16384
     # version at which the table was provably EMPTY (set by create): lets a
     # never-staged mirror bootstrap by replaying the full append chain from
     # an empty base instead of a take() over the grown table
     _mirror_base: dict = field(default_factory=dict)
+    # versions the chain of a table is read from (set by Stream); a store
+    # without readers keeps no history behind the current version
+    chain_readers: Callable[[str], list] = lambda name: []
     # SQLite connection-state functions (last_insert_rowid / changes /
     # total_changes). Tracking costs one count job per DML statement, so it
     # is enabled only when module SQL actually references the functions
@@ -269,9 +265,9 @@ class TableStore:
         # be GC-reusable, and restore()/clear_state re-register too
         self._table_versions[name] = self._table_versions.get(name, 0) + 1
         # poison-by-default: every registration is assumed content-changing
-        # unless the caller (appended / _reregister_preserving) repairs the
-        # chain right after — the safe direction for ALTER/restore/ad-hoc
-        # register callers that know nothing about mirrors
+        # unless the caller (appended / reregister_preserving / replaced /
+        # restore) repairs the chain right after — the safe direction for
+        # ALTER/RENAME/ad-hoc register callers that know nothing of readers
         self._mirror_chain[name] = None
         df.createOrReplaceTempView(self.view_name(name))
 
@@ -284,14 +280,10 @@ class TableStore:
                 return
             raise ValueError(f"table {tdef.name} already exists")
         self.defs[tdef.name] = tdef
-        # poison the snapshot-delta chain: after DROP + CREATE with the
-        # same schema, the previous manifest still holds the DROPPED
-        # table's files under this name — chaining an insert delta onto
-        # them would resurrect the dropped rows. None forces the first
-        # persist after a (re)create to take the full-rewrite path.
-        self._snap_deltas[tdef.name] = None
         self.register(tdef.name, self._empty_df(tdef.schema))
-        # a fresh empty table is a valid mirror base: the chain starts here
+        # a fresh empty table is a valid mirror base: the chain starts
+        # here, so no reader of a DROPPED table under this name (a prior
+        # snapshot's files) can chain onto it and resurrect its rows
         self._mirror_chain[tdef.name] = []
         self._mirror_base[tdef.name] = self._table_versions[tdef.name]
 
@@ -306,10 +298,6 @@ class TableStore:
         self.unique_indexes = {
             ix: tc for ix, tc in self.unique_indexes.items() if tc[0] != name
         }
-        # None, not pop: a missing key means "untouched since last
-        # snapshot", which a recreate under the same name must not
-        # inherit (see create())
-        self._snap_deltas[name] = None
         self._segments.pop(name, None)
         self.spark.catalog.dropTempView(self.view_name(name))
 
@@ -326,36 +314,30 @@ class TableStore:
         return cols
 
     def mutated(self, name: str, df: DataFrame) -> None:
-        self._snap_deltas[name] = None  # not provably append-only
-        self.register(name, df)
+        self.register(name, df)  # not provably append-only: poisons
         self._dirty.add(name)
 
     def appended(self, name: str, df: DataFrame, delta: DataFrame) -> None:
         """Like ``mutated`` but for a PURE append: ``df`` is exactly the
         previous table unioned with ``delta``. The delta is proved literal
-        once, here: a literal delta extends the snapshot and mirror
-        chains and, onto a clean table, skips the checkpoint (the
-        literal-segment rule); any other delta poisons the snapshot chain
-        and restarts the mirror chain at the new version (no mirror staged
-        before it can advance past an unprovable delta)."""
+        once, here: a literal delta extends the append chain and, onto a
+        clean table, skips the checkpoint (the literal-segment rule); any
+        other delta restarts the chain at the new version (no reader
+        positioned before it can advance past an unprovable delta)."""
         try:  # pure planning: analysis ran when the frame was built
             plan = delta._jdf.queryExecution().optimizedPlan()
             literal = _is_literal_plan(plan)
         except Exception:  # a plan that fails to optimize is not literal
             literal = False
-        cur = self._snap_deltas.get(name, [])
-        if cur is not None:
-            self._snap_deltas[name] = cur + [delta] if literal else None
         chain = self._mirror_chain.get(name)
         self.register(name, df)  # poisons the chain; repaired just below
+        ver = self._table_versions[name]
         if chain is not None:
-            if literal:
-                ver = self._table_versions[name]
-                chain.append((ver - 1, ver, delta))
-                chain = self._fold_chain(name, chain)
-            else:
-                chain = []
-            self._mirror_chain[name] = chain
+            self._mirror_chain[name] = (
+                self._fold_chain(name, [*chain, (ver - 1, ver, delta)])
+                if literal
+                else []
+            )
         segs = self._segments.get(name, 0)
         if (
             literal
@@ -367,14 +349,13 @@ class TableStore:
             self._dirty.add(name)
 
     def replaced(self, name: str, df: DataFrame) -> int:
-        """Register ``df`` — a literal (LocalRelation) holding the whole
-        new content of ``name``, computed outside Spark by the mirror
-        fold (Stream._mirror_fold) — and return the new version. The
-        values already sit in the plan, so the table is registered clean
-        (``checkpoint_all`` runs no job for it); the snapshot chain is
-        poisoned (not an append) and the mirror chain restarts at the new
-        version, where the caller's mirror already is."""
-        self._snap_deltas[name] = None
+        """Register ``df`` — the whole new content of ``name``, already
+        evaluated (a literal computed by the mirror fold,
+        Stream._mirror_fold, or a read of snapshot files) — and return
+        the new version. Nothing is left to evaluate, so the table is
+        registered clean (``checkpoint_all`` runs no job for it); not
+        being an append, it restarts the chain at the new version, where
+        the caller's reader already is."""
         self.register(name, df)
         self._dirty.discard(name)
         self._segments.pop(name, None)
@@ -384,67 +365,79 @@ class TableStore:
     def reregister_preserving(self, name: str, df: DataFrame) -> None:
         """Re-register ``df`` as the SAME content under a new plan
         (localCheckpoint / read-of-snapshot re-point): the version bumps,
-        but a mirror staged at the previous version is still exact — the
-        chain records a no-op entry instead of poisoning."""
+        but a reader at the previous version is still exact — the chain
+        records a no-op entry instead of poisoning. A poisoned chain
+        restarts here: the content at the new version is settled, so a
+        reader positioned at it can follow later appends."""
         chain = self._mirror_chain.get(name)
         self.register(name, df)
         self._segments.pop(name, None)  # the new plan has no literal unions
-        if chain is not None:
-            ver = self._table_versions[name]
-            chain.append((ver - 1, ver, None))
-            self._mirror_chain[name] = self._fold_chain(name, chain)
+        ver = self._table_versions[name]
+        self._mirror_chain[name] = (
+            [] if chain is None
+            else self._fold_chain(name, [*chain, (ver - 1, ver, None)])
+        )
 
     def _fold_chain(self, name: str, chain: list) -> list | None:
-        """Bound chain length by FOLDING the two oldest entries into one
+        """Prune the entries below every reader, then bound chain length
+        by FOLDING the oldest pair of entries no reader sits between
         (their deltas union — a Union of LocalRelations is still a
         literal plan, see ``_is_literal_plan``) instead of dropping
-        history. Returns the chain, or None when a fold is impossible
-        (column drift) or the oldest entry's version span passed
-        _MIRROR_FOLD_SPAN (pathological no-reader chain — restaging beats
-        an ever-wider union's analysis cost)."""
+        history. A fold wider than _MIRROR_FOLD_SPAN versions cuts the
+        chain at the next reader above it, so only the readers below
+        that one read None (a snapshot rewrites in full, a mirror
+        restages); with no reader above, or on column drift, the chain
+        is poisoned (None)."""
+        cur = self.table_version(name)
+        start = chain[0][0] if chain else cur
+        # a reader below the chain's start has lost its path already
+        readers = {p for p in self.chain_readers(name) if p >= start}
+        chain = [e for e in chain if e[1] > min(readers, default=cur)]
         while len(chain) > self._MIRROR_CHAIN_CAP:
-            l1, h1, d1 = chain[0]
-            l2, h2, d2 = chain[1]
+            # the few readers leave most of the > CAP boundaries free
+            i = next(i for i, e in enumerate(chain[:-1]) if e[1] not in readers)
+            (l1, _, d1), (_, h2, d2) = chain[i], chain[i + 1]
             if h2 - l1 > self._MIRROR_FOLD_SPAN:
-                return None
-            if d1 is None:
-                merged = d2
-            elif d2 is None:
-                merged = d1
-            else:
+                cut = min((p for p in readers if p > l1), default=None)
+                if cut is None:
+                    return None
+                chain = [e for e in chain if e[0] >= cut]
+                continue
+            if d1 is not None and d2 is not None:
                 cols = self.tables[name].columns
                 try:
-                    if d1.columns != cols:
-                        d1 = d1.select(*cols)
-                    if d2.columns != cols:
-                        d2 = d2.select(*cols)
-                    merged = d1.unionAll(d2)
+                    d1, d2 = (
+                        d if d.columns == cols else d.select(*cols)
+                        for d in (d1, d2)
+                    )
+                    d2 = d1.unionAll(d2)
                 except Exception:
                     return None  # column drift across the fold boundary
-            chain[:2] = [(l1, h2, merged)]
+            chain[i : i + 2] = [(l1, h2, d1 if d2 is None else d2)]
         return chain
 
-    def mirror_synced(self, name: str, ver: int) -> None:
-        """The (single) mirror consumer is staged at ``ver``: entries that
-        only advance OLDER versions can never be consumed again — prune
-        them so the fold bound is spent on live history, not dead."""
+    def synced(self, name: str) -> None:
+        """A reader of ``name``'s chain moved (see ``chain_readers``):
+        drop the entries no reader can consume any more, so the fold
+        bound is spent on live history, not dead."""
         chain = self._mirror_chain.get(name)
         if chain:
-            self._mirror_chain[name] = [e for e in chain if e[1] > ver]
+            self._mirror_chain[name] = self._fold_chain(name, chain)
 
     def mirror_base(self, name: str) -> int | None:
         """Version at which ``name`` was empty (its CREATE), if known."""
         return self._mirror_base.get(name)
 
-    def mirror_deltas(self, name: str, since_ver: int):
-        """Deltas that advance a mirror staged at ``since_ver`` to the
-        current version, or None when not provable (poisoned chain, or
-        history folded/restarted past the mirror). Every delta on the
-        chain was proved literal by ``appended``, so its collect() is a
-        driver-side values read. [] means only no-op re-registrations
-        happened."""
+    def deltas_since(self, name: str, since_ver: int | None):
+        """Deltas that advance a reader at ``since_ver`` to the current
+        version, or None when not provable (no position, poisoned chain,
+        or history folded/restarted past the reader). Every delta on the
+        chain was proved literal by ``appended`` — values captured in the
+        plan, no lineage that could re-execute against since-changed
+        temp views — so its collect() is a driver-side values read. []
+        means only no-op re-registrations happened."""
         chain = self._mirror_chain.get(name)
-        if chain is None:
+        if chain is None or since_ver is None:
             return None
         pos = since_ver
         out = []
@@ -452,9 +445,9 @@ class TableStore:
             if hi <= pos:
                 continue  # already consumed (pruned lazily)
             if lo != pos:
-                # lo > pos: gap (history folded/trimmed past the mirror);
-                # lo < pos: the entry STRADDLES the mirror's version — its
-                # folded delta contains rows the mirror already holds
+                # lo > pos: gap (history folded/trimmed past the reader);
+                # lo < pos: the entry STRADDLES the reader's version — its
+                # folded delta contains rows the reader already holds
                 return None
             pos = hi
             if d is not None:  # None: content-preserving re-registration
@@ -462,17 +455,6 @@ class TableStore:
         if pos != self.table_version(name):
             return None  # chain does not reach the current version
         return out
-
-    def snap_deltas(self, name: str) -> list | None:
-        """Literal deltas since the last snapshot ([] = untouched, None =
-        must fully rewrite). ``appended`` admits only deltas whose
-        OPTIMIZED plan is a literal — values captured in the plan, no
-        lineage that could re-execute against since-changed temp views —
-        and poisons the table on anything else."""
-        return self._snap_deltas.get(name, [])
-
-    def snapshot_written(self, name: str) -> None:
-        self._snap_deltas[name] = []
 
     def checkpoint_all(self) -> None:
         """Materialize (and lineage-truncate) every dirty table. Untouched
@@ -525,9 +507,6 @@ class TableStore:
         self._dirty = set(dirty)
         self._segments = dict(segments)
         self._mirror_base = dict(bases)
-        # deltas recorded during the failed fold are no longer part of the
-        # table; poison so the next snapshot fully rewrites (safe direction)
-        self._snap_deltas = {n: None for n in tables}
         self.triggers = dict(triggers)
         for gone in set(self.tables) - set(tables):
             self.tables.pop(gone, None)
@@ -548,8 +527,10 @@ class TableStore:
             chain = chains.get(name)
             if chain is not None and name in versions:
                 # the restored version holds exactly the snapshot-time
-                # content: a no-op entry bridges the two. A mirror staged
-                # mid-fold straddles it and restages (the safe direction).
+                # content: a no-op entry bridges the two, so deltas
+                # recorded during the failed fold never reach a reader. A
+                # mirror staged mid-fold straddles it and restages (the
+                # safe direction).
                 self._mirror_chain[name] = self._fold_chain(
                     name,
                     [*chain, (versions[name], self._table_versions[name], None)],

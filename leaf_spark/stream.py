@@ -205,12 +205,11 @@ class Stream:
         # deployments schedule it off-peak instead).
         self.compact_files = compact_files
         self._snap_cursor = 0
-        # table registration version at the last persisted snapshot —
-        # persist_state skips rewriting (and re-registering) tables whose
-        # version is unchanged, referencing the prior snapshot files in
-        # the new manifest instead. Any mutation, rollback-restore, or
-        # checkpoint re-registration bumps the store version and forces a
-        # rewrite (the safe direction).
+        # table version each table's last persisted snapshot holds — the
+        # snapshot's reader position on the store's append chain:
+        # persist_state references the prior files for a table with no
+        # delta since it, writes only the deltas of a pure-append table,
+        # and rewrites anything the chain cannot prove (the safe direction)
         self._snap_table_versions: dict[str, int] = {}
         self._lock = threading.RLock()
         # per-stream FAIR scheduler pool (pools are created on demand by
@@ -226,6 +225,7 @@ class Stream:
         self.module: BasicModuleDef | None = None
         prefix = "leaf_" + hashlib.sha256(stream_did.encode()).hexdigest()[:10] + "_"
         self.store = TableStore(spark, prefix)
+        self.store.chain_readers = self._chain_readers
         self._update_listeners: list[Callable[[int], None]] = []
         # driver-side sqlite evaluator for event-only statements (lazy;
         # see localexec.py — removes the per-commit Python-runner jobs)
@@ -531,10 +531,12 @@ class Stream:
                 with open(self._snapshot_manifest_path()) as f:
                     prev = json.load(f)
             seq = (prev["seq"] + 1) if prev else 1
-            vdir = os.path.join(base, f"v{seq:06d}")
             prev_tables = (prev or {}).get("tables", {})
             prev_seq_dir = f"v{prev['seq']:06d}" if prev else ""
             tables_meta: dict[str, dict] = {}
+            # each table's new snapshot version — the snapshot reader
+            # moves only once the manifest is published
+            synced: dict[str, int] = {}
             for name, tdef in self.store.defs.items():
                 schema_json = tdef.schema.json()
                 pm = prev_tables.get(name)
@@ -548,82 +550,58 @@ class Stream:
                         for p in prev_paths
                     ):
                         prev_paths = None
-                deltas = self.store.snap_deltas(name)
-                if (
-                    prev_paths is not None
-                    and deltas == []
-                    and self._snap_table_versions.get(name)
-                    == self.store.table_version(name)
-                ):
-                    # untouched since the last persist: the new manifest
-                    # references the existing files (no rewrite, no
-                    # re-register → the table's version stays stable, so
-                    # localexec mirrors keyed on it stay valid too)
-                    tables_meta[name] = {
-                        **pm,
-                        "paths": prev_paths,
-                        # schema metadata refreshes from the live def even
-                        # when the data is untouched (a pre-fix manifest
-                        # may lack these keys)
-                        "defaults": dict(tdef.defaults),
-                        "unique_cols": sorted(tdef.unique_cols),
-                    }
-                    continue
-                rel = f"v{seq:06d}/{name}"
-                path = os.path.join(base, rel)
-                if (
-                    prev_paths is not None
-                    and deltas
-                    and len(prev_paths) < self._SNAPSHOT_CHAIN_CAP
-                ):
-                    # incremental snapshot: every mutation since the last
-                    # persist was a pure driver-local append — write ONLY
-                    # the delta rows as a new chain link; the table is the
-                    # union of all chain dirs. O(delta) per persist
-                    # regardless of table size (the SQLite-txn analogue).
-                    d = deltas[0]
-                    for extra in deltas[1:]:
-                        d = d.unionByName(extra)
-                    if self._write_snapshot_table(name, tdef, path, df=d):
-                        paths = prev_paths + [rel]
-                        tables_meta[name] = {
-                            "schema": schema_json,
-                            "primary_key": list(tdef.primary_key),
-                            "is_state": tdef.is_state,
-                            "defaults": dict(tdef.defaults),
-                            "unique_cols": sorted(tdef.unique_cols),
-                            "paths": paths,
-                        }
-                        self.store.reregister_preserving(
-                            name, self._read_chain(tdef.schema, paths)
-                        )
-                        self._snap_table_versions[name] = (
-                            self.store.table_version(name)
-                        )
-                        self.store.snapshot_written(name)
-                        continue
-                    # delta too big / unconvertible → full rewrite below
-                if not self._write_snapshot_table(name, tdef, path):
-                    self.store.tables[name].write.mode(
-                        "overwrite"
-                    ).parquet(path)
-                tables_meta[name] = {
+                deltas = self.store.deltas_since(
+                    name, self._snap_table_versions.get(name)
+                )
+                # schema metadata always comes from the live def, even
+                # when the data is untouched (a pre-fix manifest may lack
+                # some of these keys)
+                meta = {
                     "schema": schema_json,
                     "primary_key": list(tdef.primary_key),
                     "is_state": tdef.is_state,
                     "defaults": dict(tdef.defaults),
                     "unique_cols": sorted(tdef.unique_cols),
-                    "paths": [rel],
                 }
+                if prev_paths is not None and deltas == []:
+                    # untouched since the last persist (at most no-op
+                    # re-registrations, e.g. a rejected batch): the new
+                    # manifest references the existing files (no rewrite,
+                    # no re-register → the table's version stays stable,
+                    # so localexec mirrors keyed on it stay valid too)
+                    tables_meta[name] = {**meta, "paths": prev_paths}
+                    synced[name] = self.store.table_version(name)
+                    continue
+                rel = f"v{seq:06d}/{name}"
+                path = os.path.join(base, rel)
+                paths = [rel]
+                if (
+                    prev_paths is not None
+                    and deltas
+                    and len(prev_paths) < self._SNAPSHOT_CHAIN_CAP
+                    # incremental snapshot: every change since the last
+                    # persist was a pure driver-local append — write ONLY
+                    # the delta rows as a new chain link; the table is the
+                    # union of all chain dirs. O(delta) per persist
+                    # regardless of table size (the SQLite-txn analogue).
+                    and self._write_snapshot_table(
+                        name, tdef, path,
+                        df=functools.reduce(DataFrame.unionByName, deltas),
+                    )
+                ):
+                    paths = prev_paths + [rel]
+                elif not self._write_snapshot_table(name, tdef, path):
+                    # (a delta too big / unconvertible lands here too)
+                    self.store.tables[name].write.mode(
+                        "overwrite"
+                    ).parquet(path)
+                tables_meta[name] = {**meta, "paths": paths}
                 # re-point the live DataFrame at the durable copy: truncates
                 # lineage and drops references to the previous snapshot files
                 self.store.reregister_preserving(
-                    name, self.spark.read.schema(tdef.schema).parquet(path)
+                    name, self._read_chain(tdef.schema, paths)
                 )
-                self._snap_table_versions[name] = self.store.table_version(
-                    name
-                )
-                self.store.snapshot_written(name)
+                synced[name] = self.store.table_version(name)
             manifest = {
                 "module_cid": self.state.module_cid,
                 "cursor": self.state.module_event_cursor,
@@ -644,6 +622,7 @@ class Stream:
             with open(tmp, "w") as f:
                 json.dump(manifest, f)
             os.replace(tmp, self._snapshot_manifest_path())
+            self._snap_table_versions.update(synced)
             # GC superseded table snapshots at per-table granularity —
             # unchanged tables reference files possibly several seqs old,
             # so a v<seq> dir stays only as long as some table still
@@ -681,6 +660,19 @@ class Stream:
             )
             df = part if df is None else df.unionByName(part)
         return df
+
+    def _chain_readers(self, name: str) -> list[int]:
+        """Versions ``name``'s append chain is read from
+        (``TableStore.chain_readers``): the last persisted snapshot, and
+        the sqlite mirror — at its staged version, or at the CREATE base
+        when that is newer (never staged, or staged for a dropped table
+        of the same name), since the mirror then bootstraps from it."""
+        mirror = self._mirror_versions.get(name)
+        base = self.store.mirror_base(name)
+        if mirror is None or (base is not None and base > mirror):
+            mirror = base
+        snap = self._snap_table_versions.get(name)
+        return [v for v in (mirror, snap) if v is not None]
 
     def _drop_snapshot(self) -> None:
         shutil.rmtree(self._snapshot_base(), ignore_errors=True)
@@ -730,9 +722,8 @@ class Stream:
             ]
             df = self._read_chain(schema, rels)
             self.store.defs[name] = tdef
-            self.store.register(name, df)
-            self._snap_table_versions[name] = self.store.table_version(name)
-            self.store.snapshot_written(name)
+            # the loaded files are settled content: the chain starts here
+            self._snap_table_versions[name] = self.store.replaced(name, df)
         self.store.views = dict(manifest.get("views", {}))
         self.store.unique_indexes = {
             ix: tuple(tc)
@@ -1126,13 +1117,13 @@ class Stream:
     # Spark path (broadcast joins are what Spark is FOR at that size)
     _MIRROR_CAP = 256
     # a mirror that is ALREADY staged keeps serving while the table grows
-    # by provable pure appends (TableStore.mirror_deltas): each commit
+    # by provable pure appends (TableStore.deltas_since): each commit
     # inserts only the delta rows — O(delta) maintenance, no Spark job —
     # up to this many rows. Chat-message-sized live state stays on the
     # ~3,000 rt/s local path instead of dropping to the ~100 ms Spark
     # floor at 257 rows; any non-append mutation poisons the chain and
     # the next version check falls back to Spark (the safe direction).
-    _MIRROR_CAP_APPEND = 16384
+    _MIRROR_CAP_APPEND = TableStore._MIRROR_FOLD_SPAN
 
     def _purge_stale_mirrors(self) -> None:
         """Drop mirrors whose table left the store (module swap, DROP):
@@ -1176,7 +1167,7 @@ class Stream:
             df = self.store.tables.get(name)
             if df is None:
                 return False
-            if staged is None or self.store.mirror_deltas(name, staged) is None:
+            if self.store.deltas_since(name, staged) is None:
                 # never staged (or the chain from the staged version is
                 # lost), but the append chain may be complete since CREATE
                 # (provably empty base): bootstrap by replaying the
@@ -1185,7 +1176,7 @@ class Stream:
                 base = self.store.mirror_base(name)
                 if (
                     base is not None
-                    and self.store.mirror_deltas(name, base) is not None
+                    and self.store.deltas_since(name, base) is not None
                     and le.stage_table(name, df.columns, [], *self._mirror_def(name))
                 ):
                     self._mirror_rows[name] = 0
@@ -1219,7 +1210,7 @@ class Stream:
                 return False
             self._mirror_versions[name] = ver
             self._mirror_rows[name] = len(rows)
-            self.store.mirror_synced(name, ver)
+            self.store.synced(name)
         return True
 
     def _mirror_def(self, name: str) -> tuple:
@@ -1228,13 +1219,13 @@ class Stream:
 
     def _advance_mirror(self, name: str, df, staged: int, ver: int) -> str:
         """Try to advance an already-staged mirror to ``ver`` by inserting
-        only the append-delta rows (TableStore.mirror_deltas) — no Spark
+        only the append-delta rows (TableStore.deltas_since) — no Spark
         job, O(delta) sqlite inserts. Returns "advanced" (mirror now at
         ``ver``), "restage" (chain unprovable → caller re-stages fully,
         which re-applies the 256-row cap), or "toobig" (growth passed
         _MIRROR_CAP_APPEND / unmirrorable values → mirror dropped and the
         version negative-cached, caller uses Spark)."""
-        deltas = self.store.mirror_deltas(name, staged)
+        deltas = self.store.deltas_since(name, staged)
         if deltas is None:
             return "restage"
         le = self._local_eval
@@ -1255,7 +1246,7 @@ class Stream:
                     d = d.select(*cols)
                 else:
                     return "restage"
-            # LocalRelation plans (proved in mirror_deltas): collect() is a
+            # LocalRelation plans (proved in appended): collect() is a
             # driver-side literal read, not a cluster scan
             drows = d.collect()
             total += len(drows)
@@ -1271,7 +1262,7 @@ class Stream:
         self._mirror_rows[name] = total
         # prune consumed history so the chain's fold budget covers LIVE
         # entries only (r12 chain-longevity: fold, never drop unconsumed)
-        self.store.mirror_synced(name, ver)
+        self.store.synced(name)
         return "advanced"
 
     def _authorize(

@@ -565,7 +565,7 @@ class TestReadPath:
         """r11: a mirror staged under _MIRROR_CAP keeps serving while the
         table grows by provable pure appends — each commit advances the
         sqlite mirror by inserting only the delta rows (no Spark job,
-        TableStore.mirror_deltas), up to _MIRROR_CAP_APPEND."""
+        TableStore.deltas_since), up to _MIRROR_CAP_APPEND."""
         import unittest.mock as mock
 
         from .fixtures import msg
@@ -907,7 +907,7 @@ class TestMirrorChainLongevity:
         chain = s.store._mirror_chain["messages"]
         assert chain is not None and len(chain) <= cap
         # contiguous coverage survived the folds
-        deltas = s.store.mirror_deltas(
+        deltas = s.store.deltas_since(
             "messages", s._mirror_versions["messages"]
         )
         assert deltas is not None
@@ -962,6 +962,86 @@ class TestMirrorChainLongevity:
         assert s.store._mirror_chain["messages"] is None
         q = LeafQuery("message_stats", limit=1000)
         assert s.query("a", q) == self._spark_rows(s, "a", q)
+
+    def test_fold_respects_reader_positions(self):
+        """Spark-free (no-op entries): folds never merge across a reader,
+        and a fold past _MIRROR_FOLD_SPAN cuts the chain at the next
+        reader — only the readers below it lose their path — or poisons
+        it when no reader is above."""
+        import unittest.mock as mock
+
+        from leaf_spark.dml import TableStore
+
+        def folded(readers, span=TableStore._MIRROR_FOLD_SPAN):
+            st = TableStore(spark=None, view_prefix="p_")
+            st._table_versions["t"] = 200
+            st.chain_readers = lambda name: readers
+            with mock.patch.object(TableStore, "_MIRROR_FOLD_SPAN", span):
+                st._mirror_chain["t"] = st._fold_chain(
+                    "t", [(v, v + 1, None) for v in range(200)]
+                )
+            return st
+
+        st = folded([0, 10])
+        assert len(st._mirror_chain["t"]) <= TableStore._MIRROR_CHAIN_CAP
+        assert st.deltas_since("t", 0) == [] and st.deltas_since("t", 10) == []
+        st = folded([0, 150], span=8)
+        assert st.deltas_since("t", 0) is None
+        assert st.deltas_since("t", 150) == []
+        assert folded([0], span=8)._mirror_chain["t"] is None
+        # entries below every reader are pruned; no reader keeps nothing
+        assert folded([150])._mirror_chain["t"][0][0] == 150
+        assert folded([])._mirror_chain["t"] == []
+
+    def test_fold_keeps_both_readers(self, spark, tmp_path):
+        """The snapshot reads the chain from the persist, the mirror from
+        one commit later. A no-read burst past _MIRROR_CHAIN_CAP must fold
+        around both positions: the next query advances the mirror by the
+        deltas (no restage, no Spark) and the next persist still writes
+        only the delta rows as a chained dir."""
+        import json
+        import os
+        import unittest.mock as mock
+
+        import pyarrow.parquet as pq
+
+        from leaf_spark.dml import TableStore
+
+        from .fixtures import msg
+
+        s = self._chat(spark, tmp_path)
+        s.persist_state()
+        s.add_events([msg("bulk", "one", 2)])
+        q = LeafQuery("message_stats", limit=1000)
+        s.query("a", q)  # the mirror stages one commit past the snapshot
+        assert s._mirror_versions["messages"] > s._snap_table_versions["messages"]
+        n = TableStore._MIRROR_CHAIN_CAP + 6
+        for i in range(n):  # NO reads, NO persist in between
+            s.add_events([msg("bulk", f"w{i}", 100 + i)])
+        chain = s.store._mirror_chain["messages"]
+        assert chain is not None and len(chain) <= TableStore._MIRROR_CHAIN_CAP
+        expect = self._spark_rows(s, "a", q)
+        with mock.patch.object(
+            Stream, "query_df", side_effect=AssertionError("spark path used")
+        ), mock.patch.object(
+            LocalEval, "stage_table", side_effect=AssertionError("restaged")
+        ):
+            got = s.query("a", q)
+        assert got == expect
+        assert s._mirror_rows["messages"] == n + 2
+        s.persist_state()
+        with open(s._snapshot_manifest_path()) as f:
+            m = json.load(f)
+        assert m["tables"]["messages"]["paths"] == [
+            "v000001/messages",
+            "v000002/messages",
+        ]
+        d2 = os.path.join(s._snapshot_base(), "v000002", "messages")
+        assert sum(
+            pq.ParquetFile(os.path.join(d2, f)).metadata.num_rows
+            for f in os.listdir(d2)
+            if f.endswith(".parquet")
+        ) == n + 1
 
     @staticmethod
     def _jobs(spark, fn) -> int:

@@ -194,8 +194,13 @@ class TestSnapshotVersionSkip:
     - pure driver-local appends since the last persist → only the delta
       rows are written as a new chain dir (manifest ``paths`` list),
       capped at _SNAPSHOT_CHAIN_CAP before a full-rewrite compaction;
-    - anything else (upsert/update/delete/trigger writes/rollback) →
-      poisoned, full rewrite (the safe direction).
+    - anything else (upsert/update/delete/trigger writes) → full
+      rewrite (the safe direction).
+
+    The snapshot is one of two readers of the store's version-keyed
+    append chain (the localexec mirror is the other): a rejected batch
+    bridges the chain with a no-op entry, so it leaves both regimes
+    above intact.
 
     GC keeps every chain dir the current manifest references and
     removes superseded ones at per-table granularity."""
@@ -314,8 +319,12 @@ class TestSnapshotVersionSkip:
 
     def test_rollback_poisons_chain(self, spark, tmp_root):
         """A rejected batch restores the pre-batch tables; deltas staged
-        during the failed fold must not leak into the next snapshot."""
+        during the failed fold must not leak into the next snapshot, and
+        the accepted delta before it still chains."""
         import json
+        import os
+
+        import pyarrow.parquet as _pq
 
         s = Stream(spark, tmp_root, "did:plc:snaprb")
         s.provide_module(CHAT)
@@ -333,20 +342,61 @@ class TestSnapshotVersionSkip:
         s.persist_state()
         with open(s._snapshot_manifest_path()) as f:
             m = json.load(f)
-        # poisoned → full rewrite (single fresh dir, not a chain)
-        assert len(m["tables"]["messages"]["paths"]) == 1
+        # the restore bridged the chain: only the accepted m2 is chained
+        assert m["tables"]["messages"]["paths"] == [
+            "v000001/messages",
+            "v000002/messages",
+        ]
+        d2 = os.path.join(s._snapshot_base(), "v000002", "messages")
+        assert [
+            v
+            for f in sorted(os.listdir(d2))
+            if f.endswith(".parquet")
+            for v in _pq.read_table(os.path.join(d2, f)).column("content").to_pylist()
+        ] == ["m2"]
         s2 = Stream(spark, tmp_root, "did:plc:snaprb")
         s2.provide_module(CHAT)
         assert [
             r["content"] for r in s2.query(None, LeafQuery("messages"))
         ] == ["m1", "m2"]
 
+    def test_rollback_leaves_untouched_table_in_place(self, spark, tmp_root):
+        """A rejected batch between two persists re-registers every table
+        on restore, but only with no-op chain entries: ``bans``, which no
+        accepted batch touched, keeps its v1 files and is not re-registered
+        by the second persist."""
+        import json
+
+        from leaf_spark import drisl
+        from leaf_spark.types import IncomingEvent
+
+        s = Stream(spark, tmp_root, "did:plc:snaprb2")
+        s.provide_module(CHAT)
+        s.add_events([msg("a", "m1", 1)])
+        s.persist_state()
+        with pytest.raises(Exception):
+            s.add_events(
+                [msg("a", "m2", 2), IncomingEvent("a", drisl.encode({"x": 1}))]
+            )
+        s.add_events([msg("a", "m3", 3)])
+        bans_ver = s.store.table_version("bans")
+        s.persist_state()
+        with open(s._snapshot_manifest_path()) as f:
+            m = json.load(f)
+        assert m["tables"]["bans"]["paths"] == ["v000001/bans"]
+        assert s.store.table_version("bans") == bans_ver
+        assert m["tables"]["messages"]["paths"] == [
+            "v000001/messages",
+            "v000002/messages",
+        ]
+
     def test_drop_recreate_does_not_resurrect(self, spark, tmp_root):
         """DROP TABLE + CREATE TABLE (same schema) + INSERT between
         persists must NOT chain the insert delta onto the DROPPED
-        table's snapshot files (advice r10 high: create() now poisons
-        _snap_deltas so the first persist after a recreate fully
-        rewrites)."""
+        table's snapshot files (advice r10 high: create() restarts the
+        append chain at the new table, so the snapshot reader, still at
+        the dropped table's version, finds no path and the first persist
+        after a recreate fully rewrites)."""
         import json
 
         from leaf_spark import drisl
@@ -580,6 +630,27 @@ class TestCrashInjection:
         assert calls["n"] >= 1
         s2 = self._mk(spark, tmp_root, "did:plc:cr4")
         assert self._contents(s2) == self._expect(2)
+
+    def test_crashed_persist_then_persist_again(self, spark, tmp_root):
+        """The process survives a persist that died before its manifest
+        publish and persists again: the snapshot must still hold every
+        row the published manifest's cursor covers (the failed attempt
+        must not count as a snapshot the chain reads from)."""
+        import unittest.mock as mock
+
+        s = self._mk(spark, tmp_root, "did:plc:cr6")
+        s.add_events([msg("a", "m1", 1)])
+        s.persist_state()
+        s.add_events([msg("a", "m2", 2)])
+        with mock.patch(
+            "leaf_spark.stream.json.dump", side_effect=OSError("power cut")
+        ):
+            with pytest.raises(OSError):
+                s.persist_state()
+        s.add_events([msg("a", "m3", 3)])
+        s.persist_state()
+        s2 = self._mk(spark, tmp_root, "did:plc:cr6")
+        assert self._contents(s2) == self._expect(3)
 
     def test_crash_storm_random_points(self, spark, tmp_root):
         """Randomized mini-soak: commits interleaved with persists that

@@ -19,12 +19,14 @@ stream count.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import tempfile
 import time
 from concurrent.futures import ThreadPoolExecutor
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from leaf_spark.session import get_spark
 from leaf_spark.stream import Stream
@@ -39,7 +41,7 @@ def _ingest_worker(argv: list[str]) -> None:
     server)."""
     import sys as _sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     from leaf_spark import drisl
     from leaf_spark.socketio import LeafSocketIOClient
 

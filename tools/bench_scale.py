@@ -7,7 +7,7 @@ shows up where it matters. A >1.5x per-query regression vs the most
 recent prior artifact fails loud (exit 1).
 
 Usage: python tools/bench_scale.py <round-number>
-Requires /root/repo/.scale/sf1.0 (run tools/gen_scale.py first).
+Requires .scale/sf1.0 in the checkout (run tools/gen_scale.py first).
 """
 
 from __future__ import annotations
@@ -20,7 +20,8 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from leaf_spark.session import get_spark  # noqa: E402
 
@@ -35,13 +36,13 @@ HEAVIES = [
     "q194_heaps_law",
     "q195_mann_kendall",
 ]
-SF10 = "/root/repo/.scale/sf1.0"
+SF10 = os.path.join(REPO, ".scale", "sf1.0")
 DRIFT_GATE = 1.5
 
 
 def _prior_artifact(round_no: int) -> dict | None:
     cands = []
-    for p in glob.glob("/root/repo/BENCH_SCALE_r*.json"):
+    for p in glob.glob(os.path.join(REPO, "BENCH_SCALE_r*.json")):
         m = re.search(r"_r(\d+)\.json$", p)
         if m and int(m.group(1)) < round_no:
             cands.append((int(m.group(1)), p))
@@ -74,7 +75,7 @@ def main() -> int:
         print(f"{name}: {out['queries'][name]} s")
     out["metric"] = "sf1.0_heavy_total_sec"
     out["value"] = round(sum(out["queries"].values()), 3)
-    path = f"/root/repo/BENCH_SCALE_r{round_no}.json"
+    path = os.path.join(REPO, f"BENCH_SCALE_r{round_no}.json")
     with open(path, "w") as f:
         json.dump(out, f, indent=1)
     print(json.dumps(out))

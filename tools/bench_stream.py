@@ -25,12 +25,14 @@ Prints one JSON line.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from leaf_spark.session import get_spark
 from leaf_spark.stream import Stream
@@ -40,14 +42,19 @@ from tests.fixtures import CHAT, marker, msg  # chat module + event factories
 
 
 def _count_py4j_calls() -> list[int]:
-    """Count every py4j round trip from here on; returns the counter."""
+    """Count the py4j round trips this thread makes from here on; returns
+    the counter. Calls from other threads (py4j's background release of
+    garbage-collected JVM objects) are not counted: their number depends
+    on when the collector runs, not on the code under measurement."""
     from py4j.clientserver import ClientServerConnection
 
     calls = [0]
     send = ClientServerConnection.send_command
+    owner = threading.get_ident()
 
     def counting(self, command):
-        calls[0] += 1
+        if threading.get_ident() == owner:
+            calls[0] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting

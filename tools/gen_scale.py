@@ -25,7 +25,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SRC = "/root/testdata/sf0.1/documents.parquet"
 EVENTS_SRC = "/root/testdata/sf0.1/events.parquet"
@@ -36,7 +37,7 @@ NEAR_DUP_WORD_FLIP = 0.10  # fraction of words replaced in a near-dup
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf1.0"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".scale", "sf1.0")
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     rng = np.random.default_rng(SEED)
 

@@ -15,9 +15,9 @@ With no args, compares sf0.1 vs .scale/sf1.0 over the full heavy list
 scale points — e.g. the r9 superlinear probe
 (VERDICT r8 "Next round #3"):
 
-    python tools/gen_scale.py /root/repo/.scale/sf3.0 30
+    python tools/gen_scale.py .scale/sf3.0 30
     python tools/scale_curve.py sf0.1=/root/testdata/sf0.1 \
-        sf3.0=/root/repo/.scale/sf3.0 --queries q90_containment_dedup,q49_minhash_lsh
+        sf3.0=.scale/sf3.0 --queries q90_containment_dedup,q49_minhash_lsh
 
 Ratios are judged against the actual doc-count multiple between the
 first and last scale point (linear growth slack x1.5), not a hardcoded
@@ -27,12 +27,14 @@ first and last scale point (linear growth slack x1.5), not a hardcoded
 from __future__ import annotations
 
 import json
+import os
 import re
 import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from leaf_spark.session import get_spark  # noqa: E402
 
@@ -59,7 +61,7 @@ HEAVIES = [
     "q178_permutation_entropy",
 ]
 SF01 = "/root/testdata/sf0.1"
-SF10 = "/root/repo/.scale/sf1.0"
+SF10 = os.path.join(REPO, ".scale", "sf1.0")
 
 
 def _q90_evidence(spark, sf_dir: str) -> float:
