@@ -29,7 +29,7 @@ fold/plan.py).
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import sqlcompat
+from .localdf import arrow_local_df
 from .sqlcompat import (
     SqlTranslationError,
     close_paren,
@@ -149,6 +150,27 @@ def _is_literal_plan(plan) -> bool:
     return True
 
 
+class _Frames(Mapping):
+    """``TableStore.tables``: name → DataFrame. Reading a table builds
+    its pending Python rows into the frame first
+    (``TableStore.frame``); iteration and membership build nothing."""
+
+    def __init__(self, store: "TableStore"):
+        self._store = store
+
+    def __getitem__(self, name: str) -> DataFrame:
+        return self._store.frame(name)
+
+    def __iter__(self):
+        return iter(self._store._frames)
+
+    def __len__(self) -> int:
+        return len(self._store._frames)
+
+    def __contains__(self, name) -> bool:
+        return name in self._store._frames
+
+
 @dataclass
 class TableStore:
     """Per-(stream, module) managed tables: name → DataFrame + schema.
@@ -157,19 +179,36 @@ class TableStore:
     lineage at commit points (localCheckpoint keeps them in executor memory —
     the parquet persistence of committed state is stream.py's job).
 
+    Python rows: a fold that ran in the stream's sqlite mirror
+    hands its result over as Python rows — the rows it appended
+    (``appended_rows``) or the table's whole new content
+    (``replaced_rows``). They wait in ``_pending`` and reach Spark only
+    when something reads the table: ``frame`` (``tables[name]``) and
+    ``view`` (``DmlExecutor._map_names``) rebuild it once as the frame ∪
+    one literal of the pending rows (or the literal alone for a
+    replacement) and re-register its temp view. A commit that only
+    hands over rows makes no JVM call.
+
     Literal-segment rule: a pure append onto a clean (not dirty) table
-    whose delta's optimized plan is a literal (``_is_literal_plan``)
-    leaves the table as ``checkpointed base ∪ literal deltas`` and keeps
-    it clean — the delta's values already sit in the plan, so there is
-    nothing for a checkpoint job to evaluate. The
-    ``_LITERAL_SEGMENT_CAP + 1``-th such segment marks the table dirty,
-    so ``checkpoint_all`` cuts the union once per that many appends.
+    whose delta's optimized plan is a literal (``_is_literal_plan``) —
+    a Spark-path append, or one rebuild of pending rows — leaves the
+    table as ``checkpointed base ∪ literal deltas`` and keeps it clean:
+    the delta's values already sit in the plan, so there is nothing for
+    a checkpoint job to evaluate. The ``_LITERAL_SEGMENT_CAP + 1``-th
+    such segment marks the table dirty, so ``checkpoint_all`` cuts the
+    union once per that many appends.
     """
 
     spark: SparkSession
     view_prefix: str
     defs: dict[str, TableDef] = field(default_factory=dict)
-    tables: dict[str, DataFrame] = field(default_factory=dict)
+    # the frame each table's temp view shows; see ``tables`` for reads
+    _frames: dict = field(default_factory=dict)
+    # name → (schema, rows, replace): Python rows not yet in
+    # _frames[name] or its view — the rows to append, or with replace
+    # the table's whole content. No rows and no replace: only the view
+    # is stale (restore reinstated another frame).
+    _pending: dict = field(default_factory=dict)
     views: dict[str, str] = field(default_factory=dict)  # name → select SQL
     triggers: dict[str, TriggerDef] = field(default_factory=dict)
     # tables mutated since the last checkpoint_all — checkpointing is
@@ -179,25 +218,24 @@ class TableStore:
     # cut (see the literal-segment rule above); bounds the union depth
     _segments: dict = field(default_factory=dict)
     _LITERAL_SEGMENT_CAP = 32
-    # per-table monotone registration counter (see register())
+    # per-table monotone content version (see _bump)
     _table_versions: dict = field(default_factory=dict)
-    # append chain: name → list of (lo_ver, hi_ver, delta_df | None)
-    # entries — each advances a reader at version lo to hi, every delta a
-    # proven literal — or None once poisoned by a registration that is
-    # not a proven append (``register``, the only poisoning rule). A None
-    # delta records a content-preserving re-registration (checkpoint /
-    # snapshot re-point). Two readers consume it through
+    # append chain: name → list of (lo_ver, hi_ver, rows | None) entries
+    # — each advances a reader at version lo to hi by appending rows (in
+    # table field order) — or None once poisoned by a registration that
+    # is not a proven append (``register``, the only poisoning rule). A
+    # None entry records a content-preserving re-registration
+    # (checkpoint / snapshot re-point). Two readers consume it through
     # ``deltas_since``, each from its own version (``chain_readers``):
     # Stream's localexec sqlite mirror advances by inserting the delta
     # rows, and persist_state writes them as an O(delta) incremental
     # snapshot. Pruning and folding (``_fold_chain``) keep every entry
     # and boundary a reader still needs: past _MIRROR_CHAIN_CAP entries
-    # the oldest pair no reader sits between FOLDS into one entry (delta
-    # = union of the two LocalRelations) instead of dropping history —
-    # a mirror grown past Stream._MIRROR_CAP cannot restage at all. A
-    # fold wider than _MIRROR_FOLD_SPAN versions (a reader that stopped
-    # reading; the union's ANALYSIS cost is linear in folded entries)
-    # cuts the chain at the next reader instead.
+    # the oldest pair no reader sits between FOLDS into one entry
+    # instead of dropping history — a mirror grown past
+    # Stream._MIRROR_CAP cannot restage at all. A fold wider than
+    # _MIRROR_FOLD_SPAN versions (a reader that stopped reading) cuts
+    # the chain at the next reader instead.
     _mirror_chain: dict = field(default_factory=dict)
     _MIRROR_CHAIN_CAP = 64
     # widest fold, in versions; also the most rows an append-grown mirror
@@ -225,6 +263,11 @@ class TableStore:
     # DROP INDEX can retract exactly what the index declared.
     unique_indexes: dict = field(default_factory=dict)
 
+    @property
+    def tables(self) -> _Frames:
+        """name → DataFrame; a read builds pending rows in (``frame``)."""
+        return _Frames(self)
+
     def record_change(self, n: int, last_id: int | None = None) -> None:
         self.changes = int(n)
         self.total_changes += int(n)
@@ -233,6 +276,43 @@ class TableStore:
 
     def view_name(self, table: str) -> str:
         return f"{self.view_prefix}{table}"
+
+    def frame(self, name: str) -> DataFrame:
+        """``name``'s DataFrame, its pending rows built in first."""
+        if name in self._pending:
+            self._build(name)
+        return self._frames[name]
+
+    def view(self, name: str) -> str:
+        """``name``'s temp view name, the view rebuilt first when it
+        misses pending rows."""
+        if name in self._pending:
+            self._build(name)
+        return self.view_name(name)
+
+    def _build(self, name: str) -> None:
+        """Fold ``name``'s pending rows into its frame — one literal,
+        unioned onto the frame or replacing it — and re-register the
+        view. The content and version stay as they are."""
+        schema, rows, replace = self._pending.pop(name)
+        df = self._frames[name]
+        if replace:
+            df = arrow_local_df(self.spark, rows, schema)
+            self._segments.pop(name, None)
+        elif rows:
+            df = df.unionByName(arrow_local_df(self.spark, rows, schema))
+            self._add_segment(name)
+        self._frames[name] = df
+        df.createOrReplaceTempView(self.view_name(name))
+
+    def _add_segment(self, name: str) -> None:
+        """One more literal unioned onto ``name``'s frame: the
+        literal-segment rule."""
+        segs = self._segments.get(name, 0)
+        if name not in self._dirty and segs < self._LITERAL_SEGMENT_CAP:
+            self._segments[name] = segs + 1
+        else:
+            self._dirty.add(name)
 
     def _empty_df(self, schema: T.StructType) -> DataFrame:
         """Empty DataFrame with a pure-JVM plan. ``createDataFrame([],
@@ -258,17 +338,23 @@ class TableStore:
         except Exception:
             return self.spark.createDataFrame([], schema)
 
-    def register(self, name: str, df: DataFrame) -> None:
-        self.tables[name] = df
-        # monotone per-table version: consumers that cache derived state
-        # (localexec table mirrors) key on this — object identity would
-        # be GC-reusable, and restore()/clear_state re-register too
-        self._table_versions[name] = self._table_versions.get(name, 0) + 1
-        # poison-by-default: every registration is assumed content-changing
-        # unless the caller (appended / reregister_preserving / replaced /
-        # restore) repairs the chain right after — the safe direction for
-        # ALTER/RENAME/ad-hoc register callers that know nothing of readers
+    def _bump(self, name: str) -> int:
+        """Advance ``name``'s version. Consumers that cache derived state
+        (localexec table mirrors) key on it — object identity would be
+        GC-reusable, and restore()/clear_state re-register too. The
+        chain is poisoned by default: every bump is assumed
+        content-changing unless the caller (appended / appended_rows /
+        reregister_preserving / replaced / restore) repairs it right
+        after — the safe direction for ALTER/RENAME/ad-hoc callers
+        that know nothing of readers."""
+        ver = self._table_versions[name] = self._table_versions.get(name, 0) + 1
         self._mirror_chain[name] = None
+        return ver
+
+    def register(self, name: str, df: DataFrame) -> None:
+        self._frames[name] = df
+        self._pending.pop(name, None)
+        self._bump(name)
         df.createOrReplaceTempView(self.view_name(name))
 
     def table_version(self, name: str) -> int:
@@ -293,13 +379,18 @@ class TableStore:
                 return
             raise ValueError(f"no such table {name}")
         del self.defs[name]
-        del self.tables[name]
+        self.forget(name)
         # indexes drop with their table (SQLite semantics)
         self.unique_indexes = {
             ix: tc for ix, tc in self.unique_indexes.items() if tc[0] != name
         }
         self._segments.pop(name, None)
         self.spark.catalog.dropTempView(self.view_name(name))
+
+    def forget(self, name: str) -> None:
+        """Drop ``name``'s frame and pending rows (DROP / RENAME)."""
+        self._frames.pop(name, None)
+        self._pending.pop(name, None)
 
     def known_tables(self) -> set[str]:
         """Lowercased names of every managed table and view."""
@@ -320,42 +411,76 @@ class TableStore:
     def appended(self, name: str, df: DataFrame, delta: DataFrame) -> None:
         """Like ``mutated`` but for a PURE append: ``df`` is exactly the
         previous table unioned with ``delta``. The delta is proved literal
-        once, here: a literal delta extends the append chain and, onto a
-        clean table, skips the checkpoint (the literal-segment rule); any
-        other delta restarts the chain at the new version (no reader
-        positioned before it can advance past an unprovable delta)."""
+        once, here: a literal delta extends the append chain (its rows,
+        read in process with no job) and, onto a clean table, skips
+        the checkpoint (the literal-segment rule); any other delta
+        restarts the chain at the new version (no reader positioned
+        before it can advance past an unprovable delta)."""
         try:  # pure planning: analysis ran when the frame was built
             plan = delta._jdf.queryExecution().optimizedPlan()
             literal = _is_literal_plan(plan)
         except Exception:  # a plan that fails to optimize is not literal
             literal = False
         chain = self._mirror_chain.get(name)
+        rows = None
+        if literal and chain is not None:
+            cols = self.defs[name].schema.fieldNames()
+            rows = [tuple(r[c] for c in cols) for r in delta.collect()]
         self.register(name, df)  # poisons the chain; repaired just below
         ver = self._table_versions[name]
         if chain is not None:
             self._mirror_chain[name] = (
-                self._fold_chain(name, [*chain, (ver - 1, ver, delta)])
+                self._fold_chain(name, [*chain, (ver - 1, ver, rows)])
                 if literal
                 else []
             )
-        segs = self._segments.get(name, 0)
-        if (
-            literal
-            and name not in self._dirty
-            and segs < self._LITERAL_SEGMENT_CAP
-        ):
-            self._segments[name] = segs + 1
+        if literal:
+            self._add_segment(name)
         else:
             self._dirty.add(name)
 
+    def appended_rows(
+        self, name: str, schema: T.StructType, rows: list[tuple]
+    ) -> int:
+        """Record ``rows`` (in ``schema`` field order) as appended to
+        ``name`` and return the new version. Nothing reaches Spark: the
+        rows wait in ``_pending`` for the table's next read. The chain
+        gains them as one delta (a poisoned chain restarts at the new
+        version, where the caller's reader already is)."""
+        chain = self._mirror_chain.get(name)
+        prev = self._pending.get(name)
+        if prev is not None and (prev[1] or prev[2]):
+            self._pending[name] = (schema, [*prev[1], *rows], prev[2])
+        else:
+            self._pending[name] = (schema, list(rows), False)
+        ver = self._bump(name)
+        self._mirror_chain[name] = (
+            [] if chain is None
+            else self._fold_chain(name, [*chain, (ver - 1, ver, list(rows))])
+        )
+        return ver
+
+    def replaced_rows(
+        self, name: str, schema: T.StructType, rows: list[tuple]
+    ) -> int:
+        """Record ``rows`` (in ``schema`` field order) as the whole new
+        content of ``name`` — a result the mirror fold already computed
+        — and return the new version. Nothing reaches Spark until the
+        table's next read; nothing is left to evaluate, so the table is
+        clean (``checkpoint_all`` runs no job for it). Not being an
+        append, it restarts the chain at the new version, where the
+        caller's reader already is."""
+        self._pending[name] = (schema, list(rows), True)
+        self._dirty.discard(name)
+        self._segments.pop(name, None)
+        ver = self._bump(name)
+        self._mirror_chain[name] = []
+        return ver
+
     def replaced(self, name: str, df: DataFrame) -> int:
         """Register ``df`` — the whole new content of ``name``, already
-        evaluated (a literal computed by the mirror fold,
-        Stream._mirror_fold, or a read of snapshot files) — and return
-        the new version. Nothing is left to evaluate, so the table is
-        registered clean (``checkpoint_all`` runs no job for it); not
-        being an append, it restarts the chain at the new version, where
-        the caller's reader already is."""
+        evaluated (a read of snapshot files) — and return the new
+        version; clean and restarting the chain like ``replaced_rows``."""
         self.register(name, df)
         self._dirty.discard(name)
         self._segments.pop(name, None)
@@ -381,13 +506,11 @@ class TableStore:
     def _fold_chain(self, name: str, chain: list) -> list | None:
         """Prune the entries below every reader, then bound chain length
         by FOLDING the oldest pair of entries no reader sits between
-        (their deltas union — a Union of LocalRelations is still a
-        literal plan, see ``_is_literal_plan``) instead of dropping
-        history. A fold wider than _MIRROR_FOLD_SPAN versions cuts the
-        chain at the next reader above it, so only the readers below
-        that one read None (a snapshot rewrites in full, a mirror
-        restages); with no reader above, or on column drift, the chain
-        is poisoned (None)."""
+        (their rows concatenate) instead of dropping history. A fold
+        wider than _MIRROR_FOLD_SPAN versions cuts the chain at the next
+        reader above it, so only the readers below that one read None (a
+        snapshot rewrites in full, a mirror restages); with no reader
+        above, the chain is poisoned (None)."""
         cur = self.table_version(name)
         start = chain[0][0] if chain else cur
         # a reader below the chain's start has lost its path already
@@ -403,17 +526,8 @@ class TableStore:
                     return None
                 chain = [e for e in chain if e[0] >= cut]
                 continue
-            if d1 is not None and d2 is not None:
-                cols = self.tables[name].columns
-                try:
-                    d1, d2 = (
-                        d if d.columns == cols else d.select(*cols)
-                        for d in (d1, d2)
-                    )
-                    d2 = d1.unionAll(d2)
-                except Exception:
-                    return None  # column drift across the fold boundary
-            chain[i : i + 2] = [(l1, h2, d1 if d2 is None else d2)]
+            rows = d1 if d2 is None else d2 if d1 is None else d1 + d2
+            chain[i : i + 2] = [(l1, h2, rows)]
         return chain
 
     def synced(self, name: str) -> None:
@@ -429,13 +543,10 @@ class TableStore:
         return self._mirror_base.get(name)
 
     def deltas_since(self, name: str, since_ver: int | None):
-        """Deltas that advance a reader at ``since_ver`` to the current
-        version, or None when not provable (no position, poisoned chain,
-        or history folded/restarted past the reader). Every delta on the
-        chain was proved literal by ``appended`` — values captured in the
-        plan, no lineage that could re-execute against since-changed
-        temp views — so its collect() is a driver-side values read. []
-        means only no-op re-registrations happened."""
+        """Row lists (table field order) that advance a reader at
+        ``since_ver`` to the current version, or None when not provable
+        (no position, poisoned chain, or history folded/restarted past
+        the reader). [] means only no-op re-registrations happened."""
         chain = self._mirror_chain.get(name)
         if chain is None or since_ver is None:
             return None
@@ -461,12 +572,13 @@ class TableStore:
         tables are already evaluated — re-checkpointing them would cost
         O(table) per batch for nothing — and so are clean tables grown by
         literal appends (a checkpointed base ∪ at most
-        ``_LITERAL_SEGMENT_CAP`` LocalRelations): an interactive commit
-        whose fold only appends literal rows runs no job here."""
+        ``_LITERAL_SEGMENT_CAP`` LocalRelations) and tables whose rows
+        wait in ``_pending``: an interactive commit whose fold only
+        appends literal rows runs no job here."""
         for name in sorted(self._dirty):
-            if name in self.tables:
+            if name in self._frames:
                 self.reregister_preserving(
-                    name, self.tables[name].localCheckpoint(eager=True)
+                    name, self.frame(name).localCheckpoint(eager=True)
                 )
         self._dirty.clear()
 
@@ -478,7 +590,8 @@ class TableStore:
     def snapshot(self) -> tuple:
         return (
             dict(self.defs),
-            dict(self.tables),
+            dict(self._frames),
+            dict(self._pending),
             dict(self.views),
             dict(self.triggers),
             (self.last_rowid, self.changes, self.total_changes),
@@ -499,17 +612,20 @@ class TableStore:
     def restore(self, snap) -> None:
         """Restore a snapshot taken before a failed fold: drop tables/views
         created since (incl. their temp views), then reinstate the saved
-        DataFrame versions with the dirty set, literal-segment counts and
-        mirror chains they had at snapshot time."""
-        defs, tables, views, triggers, counters, marks = snap
+        frames and pending rows with the dirty set, literal-segment
+        counts and mirror chains they had at snapshot time. A table whose
+        frame, pending rows and version are all unchanged is left as it
+        is — a batch rejected before its fold touches nothing — and a
+        reinstated one rebuilds its view on its next read."""
+        defs, frames, pending, views, triggers, counters, marks = snap
         dirty, segments, versions, chains, bases = marks
         self.last_rowid, self.changes, self.total_changes = counters
         self._dirty = set(dirty)
         self._segments = dict(segments)
         self._mirror_base = dict(bases)
         self.triggers = dict(triggers)
-        for gone in set(self.tables) - set(tables):
-            self.tables.pop(gone, None)
+        for gone in set(self._frames) - set(frames):
+            self.forget(gone)
             self.defs.pop(gone, None)
             try:
                 self.spark.catalog.dropTempView(self.view_name(gone))
@@ -522,8 +638,16 @@ class TableStore:
                 pass
         self.defs = dict(defs)
         self.views = dict(views)
-        for name, df in tables.items():
-            self.register(name, df)
+        for name, df in frames.items():
+            if (
+                self._frames.get(name) is df
+                and self._pending.get(name) is pending.get(name)
+                and self._table_versions.get(name) == versions.get(name)
+            ):
+                continue
+            self._frames[name] = df
+            self._pending[name] = pending.get(name) or (None, [], False)
+            self._bump(name)
             chain = chains.get(name)
             if chain is not None and name in versions:
                 # the restored version holds exactly the snapshot-time
@@ -598,7 +722,7 @@ class DmlExecutor:
                     view = self.extra_views[low]
                     out.append(view if isinstance(view, str) else view())
                 else:
-                    out.append(self.store.view_name(low))
+                    out.append(self.store.view(low))
             else:
                 out.append(t)
         return _j(out)
@@ -874,7 +998,8 @@ class DmlExecutor:
             raise SqlTranslationError(f"table {new} already exists")
         tdef = self.store.defs.pop(old)
         tdef.name = new
-        df = self.store.tables.pop(old)
+        df = self.store.tables[old]
+        self.store.forget(old)
         try:
             self.store.spark.catalog.dropTempView(self.store.view_name(old))
         except Exception:

@@ -614,7 +614,12 @@ class LocalEval:
             self._execute(stmt)
 
     def fold(
-        self, stmts: list[str], rows: list[tuple], written: dict, cap: int
+        self,
+        stmts: list[str],
+        rows: list[tuple],
+        written: dict,
+        cap: int,
+        appends: bool = False,
     ) -> dict[str, list[tuple]] | None:
         """Fold the (idx, user, payload) ``rows`` through the write
         statements (``eligible(write=True)``, names flattened) over the
@@ -625,10 +630,14 @@ class LocalEval:
 
         Runs inside one SAVEPOINT. Returns each table in ``written``
         (name → Spark schema) as rows in rowid order, with the SAVEPOINT
-        released: the mirrors now hold the result. Returns None with the
-        SAVEPOINT rolled back — every mirror as it was — on any sqlite
-        error or abort, a written table past ``cap`` rows, or a value
-        whose Python type is not exactly its field's (``_DECL``)."""
+        released: the mirrors now hold the result. With ``appends``
+        (every statement a plain INSERT) it returns only the rows each
+        INSERT appended, in insertion order — a temp trigger per table
+        logs ``new.rowid`` — and ``cap`` bounds those instead of the
+        whole table. Returns None with the SAVEPOINT rolled back — every
+        mirror as it was — on any sqlite error or abort, a table past
+        ``cap`` rows, or a value whose Python type is not exactly its
+        field's (``_DECL``)."""
         want = {
             name: [_DECL.get(f.dataType.simpleString()) for f in schema.fields]
             for name, schema in written.items()
@@ -639,25 +648,42 @@ class LocalEval:
         self._stage_event(["idx", "user", "payload"], [])
         con.execute("savepoint mirror_fold")
         try:
+            if appends:
+                con.execute("create temp table __appended (tbl text, rid integer)")
+                for i, name in enumerate(written):
+                    con.execute(
+                        f'create temp trigger __appended_{i} after insert on "{name}" '
+                        f"begin insert into __appended values ({i}, new.rowid); end"
+                    )
             for row in rows:
                 con.execute("delete from event")
                 con.execute("insert into event values (?, ?, ?)", row)
                 for stmt in stmts:
                     self._execute(stmt)
             out = {}
-            for name, schema in written.items():
+            for i, (name, schema) in enumerate(written.items()):
                 q = f'"{name}"'
-                if con.execute(f"select count(*) from {q}").fetchone()[0] > cap:
-                    raise LocalEvalError(f"{name} holds more than {cap} rows")
-                cols = ", ".join(f'"{c}"' for c in schema.fieldNames())
+                cols = ", ".join(f'{q}."{c}"' for c in schema.fieldNames())
+                src = (
+                    f"__appended join {q} on {q}.rowid = __appended.rid "
+                    f"where __appended.tbl = {i} order by __appended.rowid"
+                    if appends
+                    else f"{q} order by rowid"
+                )
                 got = con.execute(
-                    f"select {cols} from {q} order by rowid"
+                    f"select {cols} from {src} limit {cap + 1}"
                 ).fetchall()
+                if len(got) > cap:
+                    raise LocalEvalError(f"{name}: more than {cap} rows")
                 for r in got:
                     for v, (_, t) in zip(r, want[name]):
                         if v is not None and type(v) is not t:
                             raise LocalEvalError(f"{name}: {v!r} is not {t}")
                 out[name] = got
+            if appends:
+                for i in range(len(written)):
+                    con.execute(f"drop trigger __appended_{i}")
+                con.execute("drop table __appended")
         except (sqlite3.Error, LocalEvalError, LocalAbort):
             con.execute("rollback to mirror_fold")
             con.execute("release mirror_fold")

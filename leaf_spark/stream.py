@@ -83,6 +83,11 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 
+# the FAIR pool each thread's Spark jobs go to, as Stream._scheduler_pool
+# last set it (a local property of the thread's JVM peer)
+_THREAD_POOL = threading.local()
+
+
 class StreamError(RuntimeError):
     pass
 
@@ -96,8 +101,8 @@ def _norm_sql_value(v):
     """Normalize a Spark-collected query value to the reference's SQLite
     value space: booleans → 1/0 (SQLite has no boolean storage class;
     the wire codec already maps bool→integer) and bytearray → bytes.
-    Keeps the Spark path and the driver-side sqlite read path
-    value-identical."""
+    Keeps the values of the Spark path and the in-process sqlite read
+    path identical (row order: see ``Stream.query``)."""
     if isinstance(v, bool):
         return 1 if v else 0
     if isinstance(v, bytearray):
@@ -214,7 +219,7 @@ class Stream:
         self._lock = threading.RLock()
         # per-stream FAIR scheduler pool (pools are created on demand by
         # name): commit jobs and subscription re-queries submitted from a
-        # thread that entered _scheduler_pool() share this stream's pool,
+        # thread that called _scheduler_pool() share this stream's pool,
         # so N concurrent streams split the cores N ways instead of
         # FIFO-queueing whole job chains behind each other. On a real
         # cluster the same property routes to YARN/K8s FAIR pools.
@@ -259,26 +264,22 @@ class Stream:
         conversion failure (never a correctness dependency)."""
         return arrow_local_df(self.spark, rows, schema)
 
-    def _scheduler_pool(self):
+    def _scheduler_pool(self) -> None:
         """Route jobs submitted from the calling thread into this stream's
-        FAIR pool (restoring the caller's previous pool on exit). Local
-        properties are per-thread (PySpark pinned-thread mode), so
-        concurrent streams' commit/query chains schedule fairly instead of
-        FIFO-queueing behind each other — measured 4-stream push p95 drops
-        ~2.5x (SCALE.md subscription table)."""
-        from contextlib import contextmanager
-
-        @contextmanager
-        def _cm():
-            sc = self.spark.sparkContext
-            prev = sc.getLocalProperty("spark.scheduler.pool")
-            sc.setLocalProperty("spark.scheduler.pool", self._pool_name)
-            try:
-                yield
-            finally:
-                sc.setLocalProperty("spark.scheduler.pool", prev)
-
-        return _cm()
+        FAIR pool. Local properties are per-thread (PySpark pinned-thread
+        mode), so concurrent streams' commit/query chains schedule fairly
+        instead of FIFO-queueing behind each other — measured 4-stream
+        push p95 drops ~2.5x (SCALE.md subscription table). The pool stays
+        set when the call returns, and a thread-local record of what was
+        set skips the py4j round trip while the thread's pool already is
+        this stream's: a thread serving one stream pays it once, not per
+        commit, and one that serves another stream switches on its next
+        call."""
+        if getattr(_THREAD_POOL, "name", None) != self._pool_name:
+            self.spark.sparkContext.setLocalProperty(
+                "spark.scheduler.pool", self._pool_name
+            )
+            _THREAD_POOL.name = self._pool_name
 
     # -- A16 open/bootstrap --------------------------------------------------
 
@@ -585,8 +586,7 @@ class Stream:
                     # union of all chain dirs. O(delta) per persist
                     # regardless of table size (the SQLite-txn analogue).
                     and self._write_snapshot_table(
-                        name, tdef, path,
-                        df=functools.reduce(DataFrame.unionByName, deltas),
+                        name, tdef, path, rows=[r for d in deltas for r in d]
                     )
                 ):
                     paths = prev_paths + [rel]
@@ -752,7 +752,7 @@ class Stream:
     _SNAPSHOT_CHAIN_CAP = 8
 
     def _write_snapshot_table(
-        self, name: str, tdef, path: str, df=None
+        self, name: str, tdef, path: str, rows: list[tuple] | None = None
     ) -> bool:
         """Write a small table's snapshot directly with pyarrow. The
         layout matches the restore path exactly (a directory holding
@@ -760,19 +760,20 @@ class Stream:
         arrow types come from the Spark schema, so read-back types are
         identical. Returns False (caller uses the Spark writer) for
         big/unconvertible tables — never a correctness dependency.
-        ``df`` overrides the source frame (the incremental-snapshot path
-        writes just the append delta)."""
+        ``rows`` (in field order) replaces the table's own rows: the
+        incremental-snapshot path writes just the append delta."""
         try:
-            src = df if df is not None else self.store.tables[name]
-            rows = src.take(self._SNAPSHOT_DRIVER_CAP + 1)
+            cols = tdef.schema.fieldNames()
+            if rows is None:
+                got = self.store.tables[name].take(self._SNAPSHOT_DRIVER_CAP + 1)
+                rows = [tuple(r[c] for c in cols) for r in got]
             if len(rows) > self._SNAPSHOT_DRIVER_CAP:
                 return False
             from pyspark.sql.pandas.types import to_arrow_schema
 
-            asch = to_arrow_schema(tdef.schema)
-            cols = tdef.schema.fieldNames()
             tbl = pa.Table.from_pydict(
-                {c: [r[c] for r in rows] for c in cols}, schema=asch
+                {c: [r[i] for r in rows] for i, c in enumerate(cols)},
+                schema=to_arrow_schema(tdef.schema),
             )
             # a persist that crashed before the manifest rename leaves its
             # part files in this same v<seq> dir (the manifest seq never
@@ -997,20 +998,27 @@ class Stream:
         """Fold an interactive batch in the localexec sqlite mirror when
         it writes only small mirrored tables — the reference folds in
         process in SQLite (lib.rs:543-569; state events lib.rs:721-773)
-        — and hand each written table to Spark as one literal: no Spark
-        DML plan, join, window or checkpoint job.
+        — and hand each written table to the store as Python rows
+        (``TableStore.appended_rows`` / ``replaced_rows``): no Spark DML
+        plan, join, window, checkpoint job or JVM call. Spark sees the
+        rows when it next reads the table.
 
-        Applies when some statement is not a plain append (a pure-append
-        script keeps the literal-append path), every statement passes
+        Applies when every statement passes
         ``localexec.eligible(write=True)``, every table it reads or
         writes is managed, trigger-free and mirrored at its current
         version (``_mirror_tables``, which re-probes no table whose
         staging failed before), every written mirror is typed, and
         connection-state tracking is off. ``LocalEval.fold`` then runs
-        the batch in a SAVEPOINT; a written table past ``_MIRROR_CAP``
-        rows, a value of the wrong type, or any sqlite error or abort
-        rolls it back. Returns False — nothing written anywhere — for
-        the caller's Spark fold."""
+        the batch in a SAVEPOINT. A script of plain INSERTs — one per
+        written table, each reading only ``event`` — hands over only
+        the rows it appended, and its tables may grow to
+        ``_MIRROR_CAP_APPEND`` mirror rows; any other script of plain
+        INSERTs keeps the Spark path. A script with any other statement
+        hands over each written table whole, which must hold at most
+        ``_MIRROR_CAP`` rows. A table past its bound, a value of the
+        wrong type, or any sqlite error or abort rolls the SAVEPOINT
+        back. Returns False — nothing written anywhere — for the
+        caller's Spark fold."""
         store = self.store
         if store.track_changes:
             return False
@@ -1018,7 +1026,8 @@ class Stream:
         flat: list[str] = []
         refs: set[str] = set()
         written: list[str] = []
-        appends_only = True
+        appends = True
+        reads = False  # some statement reads a table besides its target
         for s_ in stmts:
             s2 = localexec.flatten_namespaces(s_)
             toks = tokenize(s2)
@@ -1028,14 +1037,20 @@ class Stream:
                 s2, known, allow_abort=False, toks=toks, mirrorable=r, write=True
             ):
                 return False
-            appends_only &= lows[0] == "insert" and on_conflict_at(toks, lows) < 0
-            written.append(localexec.write_target(lows))
+            target = localexec.write_target(lows)
+            appends &= lows[0] == "insert" and on_conflict_at(toks, lows) < 0
+            reads |= r != {target} or lows.count(target) > 1
+            written.append(target)
             flat.append(s2)
             refs |= r
         if (
-            appends_only
-            or not refs <= store.defs.keys()
+            not refs <= store.defs.keys()
             or any(t.table in refs for t in store.triggers.values())
+            # plain INSERTs keep the Spark path's set-wise plans when a
+            # source reads a table (here it would rescan it per event)
+            # or two of them write one table (they interleave per event
+            # here, statement by statement there)
+            or (appends and (reads or len(set(written)) < len(written)))
         ):
             return False
         self._purge_stale_mirrors()
@@ -1050,15 +1065,23 @@ class Stream:
             )
             for t in written
         }
-        out = le.fold(flat, local_rows, schemas, self._MIRROR_CAP)
+        cap = (
+            self._MIRROR_CAP_APPEND - max(self._mirror_rows[t] for t in written)
+            if appends
+            else self._MIRROR_CAP
+        )
+        out = le.fold(flat, local_rows, schemas, cap, appends=appends)
         if out is None:
             return False
         for name, rows in out.items():
-            ver = store.replaced(
-                name, arrow_local_df(self.spark, rows, schemas[name])
-            )
+            if appends:
+                ver = store.appended_rows(name, schemas[name], rows)
+                self._mirror_rows[name] += len(rows)
+            else:
+                ver = store.replaced_rows(name, schemas[name], rows)
+                self._mirror_rows[name] = len(rows)
             self._mirror_versions[name] = ver
-            self._mirror_rows[name] = len(rows)
+            store.synced(name)
         return True
 
     # -- A3 authorize --------------------------------------------------------
@@ -1164,9 +1187,10 @@ class Stream:
                 # every read-path attempt on a big table would re-pay
                 # the take() Spark job just to re-discover that
                 return False
-            df = self.store.tables.get(name)
-            if df is None:
+            tdef = self.store.defs.get(name)
+            if tdef is None:
                 return False
+            cols = tdef.schema.fieldNames()
             if self.store.deltas_since(name, staged) is None:
                 # never staged (or the chain from the staged version is
                 # lost), but the append chain may be complete since CREATE
@@ -1177,12 +1201,12 @@ class Stream:
                 if (
                     base is not None
                     and self.store.deltas_since(name, base) is not None
-                    and le.stage_table(name, df.columns, [], *self._mirror_def(name))
+                    and le.stage_table(name, cols, [], *self._mirror_def(name))
                 ):
                     self._mirror_rows[name] = 0
                     staged = base
             if staged is not None:
-                advanced = self._advance_mirror(name, df, staged, ver)
+                advanced = self._advance_mirror(name, cols, staged, ver)
                 if advanced == "advanced":
                     continue
                 if advanced == "toobig":
@@ -1192,6 +1216,7 @@ class Stream:
                 self._mirror_rows.pop(name, None)
             if not retry_failed and name in self._mirror_failed:
                 return False
+            df = self.store.tables[name]
             rows = df.take(self._MIRROR_CAP + 1)
             if len(rows) > self._MIRROR_CAP:
                 self._mirror_versions.pop(name, None)
@@ -1217,47 +1242,33 @@ class Stream:
         """(TableDef, UNIQUE columns) a typed mirror of ``name`` declares."""
         return self.store.defs.get(name), self.store.unique_key_cols(name)
 
-    def _advance_mirror(self, name: str, df, staged: int, ver: int) -> str:
+    def _advance_mirror(
+        self, name: str, cols: list[str], staged: int, ver: int
+    ) -> str:
         """Try to advance an already-staged mirror to ``ver`` by inserting
-        only the append-delta rows (TableStore.deltas_since) — no Spark
-        job, O(delta) sqlite inserts. Returns "advanced" (mirror now at
-        ``ver``), "restage" (chain unprovable → caller re-stages fully,
-        which re-applies the 256-row cap), or "toobig" (growth passed
-        _MIRROR_CAP_APPEND / unmirrorable values → mirror dropped and the
-        version negative-cached, caller uses Spark)."""
+        only the append-delta rows (TableStore.deltas_since, in the
+        table's field order ``cols``) — no JVM call, O(delta) sqlite
+        inserts. Returns "advanced" (mirror now at ``ver``), "restage"
+        (chain unprovable → caller re-stages fully, which re-applies the
+        256-row cap), or "toobig" (growth passed _MIRROR_CAP_APPEND /
+        unmirrorable values → mirror dropped and the version
+        negative-cached, caller uses Spark)."""
         deltas = self.store.deltas_since(name, staged)
         if deltas is None:
             return "restage"
         le = self._local_eval
-
-        def _fail() -> str:
+        total = self._mirror_rows.get(name, 0) + sum(map(len, deltas))
+        if total > self._MIRROR_CAP_APPEND or not all(
+            le.insert_rows(name, cols, rows_) for rows_ in deltas
+        ):
+            # unmirrorable value types may fail a later batch after
+            # earlier ones went in — the mirror is dropped either way,
+            # nothing can answer
             self._mirror_versions.pop(name, None)
             self._mirror_rows.pop(name, None)
             self._mirror_failed[name] = ver
             le.drop_table(name)
             return "toobig"
-
-        cols = df.columns
-        total = self._mirror_rows.get(name, 0)
-        batches: list[list[tuple]] = []
-        for d in deltas:
-            if d.columns != cols:
-                if set(d.columns) >= set(cols):
-                    d = d.select(*cols)
-                else:
-                    return "restage"
-            # LocalRelation plans (proved in appended): collect() is a
-            # driver-side literal read, not a cluster scan
-            drows = d.collect()
-            total += len(drows)
-            if total > self._MIRROR_CAP_APPEND:
-                return _fail()
-            batches.append([tuple(r[c] for c in cols) for r in drows])
-        for rows_ in batches:
-            if not le.insert_rows(name, cols, rows_):
-                # unmirrorable value types; earlier batches may already be
-                # in — the mirror is dropped either way, nothing can answer
-                return _fail()
         self._mirror_versions[name] = ver
         self._mirror_rows[name] = total
         # prune consumed history so the chain's fold budget covers LIVE
@@ -1422,7 +1433,8 @@ class Stream:
             raise StreamError("no module loaded")
         if not events:
             return self.state.latest_idx
-        with self._lock, self._scheduler_pool():
+        with self._lock:
+            self._scheduler_pool()
             self.catch_up()
             # the payload-decode memo's wins are all WITHIN one commit
             # (authorize + fold touch the same payloads ~5×); reset per
@@ -1487,6 +1499,7 @@ class Stream:
         if not events:
             return
         with self._lock:
+            self._scheduler_pool()
             rows = [(i + 1, e.user, e.payload) for i, e in enumerate(events)]
             snap = self.store.snapshot()
             try:
@@ -1530,7 +1543,13 @@ class Stream:
         (leaf-stream/src/lib.rs:842-862) — skipping the ~70-110 ms Spark
         SQL floor per named query and subscription re-query. Any gate
         miss or sqlite error falls back to the Spark path (the local
-        path never writes, so falling back mid-way is always safe)."""
+        path never writes, so falling back mid-way is always safe).
+
+        The two paths return the same multiset of rows, in the same
+        order wherever the ORDER BY is total. Rows that tie under a
+        partial ORDER BY (CHAT's ``message_stats`` orders by count only)
+        or come from a query with none may come back in another order:
+        each engine breaks ties by its own scan and aggregation order."""
         if self.module is None:
             raise StreamError("no module loaded")
         qdef = self.module.query_def(q.name)
@@ -1564,9 +1583,10 @@ class Stream:
         - every result column is a plain identifier (bare column or
           explicit alias) — unaliased expressions are NAMED differently
           by SQLite and Spark ('count(*)' vs 'count(1)').
-        Value parity: mirrors are staged from the live DataFrames, and
-        sqlite is the dialect the Spark translation approximates (the
-        differential suite's invariant), so matching rows are identical;
+        Value parity: mirrors hold the same rows as the store's tables,
+        and sqlite is the dialect the Spark translation approximates (the
+        differential suite's invariant), so matching rows are identical
+        (their order only as far as ``query``'s contract says);
         boolean expression results surface as sqlite 1/0, which the
         Spark path normalizes to as well (_norm_sql_value)."""
         stmts = split_statements(strip_comments(sql))
@@ -1613,7 +1633,8 @@ class Stream:
         """The Spark path of ``query``: run the named query's script with
         its bound ``args``; the last statement's result returns."""
         qdef = self.module.query_def(q.name)
-        with self._lock, self._scheduler_pool():
+        with self._lock:
+            self._scheduler_pool()
             return self._run_script(qdef.sql, "query", args=args)
 
     # -- A13 update pub/sub --------------------------------------------------

@@ -173,9 +173,7 @@ class SubscriptionWorker:
         # re-query collect()s submitted here schedule fairly against other
         # streams' commit chains instead of FIFO-queueing behind them
         try:
-            self.stream.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", self.stream._pool_name
-            )
+            self.stream._scheduler_pool()
         except Exception:
             pass  # scheduling is an optimization, never a failure mode
         while not self._stopped:

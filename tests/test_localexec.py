@@ -3,6 +3,8 @@ floor fix (VERDICT r7 "Next round #2"). The local path must be
 value-identical to the Spark path it bypasses, refuse anything it cannot
 prove event-only, and fall back (never error out) when mis-gated."""
 
+import unittest.mock as mock
+
 import pytest
 
 from leaf_spark import drisl, localexec
@@ -561,6 +563,25 @@ class TestReadPath:
         assert after[-1]["content"] == "m6"
         assert after == self._spark_rows(s, "a", LeafQuery("messages"))
 
+    def test_tied_rows_same_multiset(self, spark, tmp_path):
+        """The read-path contract: the same multiset of rows, in the same
+        order wherever ORDER BY is total. ``message_stats`` orders by
+        count only, so two senders tied at one message each may come
+        back in either order — but only among themselves."""
+        from .fixtures import msg
+
+        s = self._chat(spark, tmp_path)  # "a" holds 5 messages
+        s.add_events([msg("b", "b1", 6), msg("c", "c1", 7)])
+        q = LeafQuery("message_stats")
+        local, sparkr = s.query("a", q), self._spark_rows(s, "a", q)
+
+        def key(r):
+            return tuple(sorted(r.items()))
+
+        assert sorted(map(key, local)) == sorted(map(key, sparkr))
+        assert [r["n"] for r in local] == [r["n"] for r in sparkr] == [5, 1, 1]
+        assert local[0] == sparkr[0]
+
     def test_append_grown_mirror_keeps_serving(self, spark, tmp_path):
         """r11: a mirror staged under _MIRROR_CAP keeps serving while the
         table grows by provable pure appends — each commit advances the
@@ -902,8 +923,11 @@ class TestMirrorChainLongevity:
         cap = TableStore._MIRROR_CHAIN_CAP
         n = 100
         assert n > cap  # the scenario the old truncation broke
-        for i in range(n):  # NO reads in between: the chain must fold
-            s.add_events([msg("bulk", f"x{i}", 100 + i)])
+        # Spark-path appends (the mirror fold would keep the mirror
+        # current) with NO reads in between: the chain must fold
+        with mock.patch.object(Stream, "_mirror_fold", return_value=False):
+            for i in range(n):
+                s.add_events([msg("bulk", f"x{i}", 100 + i)])
         chain = s.store._mirror_chain["messages"]
         assert chain is not None and len(chain) <= cap
         # contiguous coverage survived the folds
@@ -954,7 +978,10 @@ class TestMirrorChainLongevity:
 
         s = self._chat(spark, tmp_path)
         s.query("a", LeafQuery("messages", limit=10))
-        with mock.patch.object(TableStore, "_MIRROR_FOLD_SPAN", 8):
+        # Spark-path appends: the mirror fold would keep the mirror current
+        with mock.patch.object(
+            TableStore, "_MIRROR_FOLD_SPAN", 8
+        ), mock.patch.object(Stream, "_mirror_fold", return_value=False):
             for i in range(TableStore._MIRROR_CHAIN_CAP + 10):
                 s.add_events([msg("bulk", f"z{i}", 100 + i)])
         # beyond the bound the chain poisons (restage fallback, not wrong
@@ -1016,8 +1043,11 @@ class TestMirrorChainLongevity:
         s.query("a", q)  # the mirror stages one commit past the snapshot
         assert s._mirror_versions["messages"] > s._snap_table_versions["messages"]
         n = TableStore._MIRROR_CHAIN_CAP + 6
-        for i in range(n):  # NO reads, NO persist in between
-            s.add_events([msg("bulk", f"w{i}", 100 + i)])
+        # Spark-path appends (the mirror fold would keep the mirror
+        # current) with NO reads and NO persist in between
+        with mock.patch.object(Stream, "_mirror_fold", return_value=False):
+            for i in range(n):
+                s.add_events([msg("bulk", f"w{i}", 100 + i)])
         chain = s.store._mirror_chain["messages"]
         assert chain is not None and len(chain) <= TableStore._MIRROR_CHAIN_CAP
         expect = self._spark_rows(s, "a", q)
@@ -1060,29 +1090,40 @@ class TestMirrorChainLongevity:
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     def test_literal_append_commits_run_no_job(self, spark, tmp_path):
-        """A commit whose fold only appends literal rows leaves the table
-        clean: no checkpoint job. The _LITERAL_SEGMENT_CAP + 1-th literal
-        segment marks the table dirty, and that commit runs exactly the
-        one checkpoint job that cuts the union."""
+        """A commit whose fold only appends rows runs no job: the mirror
+        fold hands the rows to the store, where they wait until Spark
+        reads the table. One read rebuilds the table as one literal
+        segment on its base; the _LITERAL_SEGMENT_CAP + 1-th segment
+        marks the table dirty, and the next commit runs exactly the one
+        checkpoint job that cuts the union."""
         from leaf_spark.dml import TableStore
 
         from .fixtures import msg
 
-        s = self._chat(spark, tmp_path)  # the seed commit: segment 1
+        s = self._chat(spark, tmp_path)  # the seed commit
         cap = 32
         jobs = [
             self._jobs(spark, lambda i=i: s.add_events([msg("b", f"f{i}", i)]))
-            for i in range(cap - 1)
+            for i in range(cap)
         ]
-        assert jobs == [0] * (cap - 1)
+        assert jobs == [0] * cap
         assert TableStore._LITERAL_SEGMENT_CAP == cap
-        assert s.store._segments["messages"] == cap
-        assert self._jobs(spark, lambda: s.add_events([msg("b", "cut", 99)])) == 1
         assert "messages" not in s.store._segments
+        assert len(s.store._pending["messages"][1]) == cap + 1
         q = LeafQuery("messages", limit=1000)
         rows = s.query("a", q)
         assert rows == self._spark_rows(s, "a", q)
         assert len(rows) == cap + 1
+        assert s.store._segments["messages"] == 1  # the one rebuild
+        assert "messages" not in s.store._pending
+        s.store._segments["messages"] = cap  # as after 32 rebuilds
+        s.add_events([msg("b", "more", 100)])
+        self._spark_rows(s, "a", q)  # the 33rd rebuild: dirty
+        assert self._jobs(spark, lambda: s.add_events([msg("b", "cut", 101)])) == 1
+        assert "messages" not in s.store._segments
+        rows = s.query("a", q)
+        assert rows == self._spark_rows(s, "a", q)
+        assert len(rows) == cap + 3
 
     @pytest.mark.parametrize("bulk", [1, Stream._MIRROR_CAP + 1])
     def test_rejected_batch_keeps_mirror_chain(self, spark, tmp_path, bulk):
@@ -1255,3 +1296,82 @@ class TestMirrorFold:
         assert self._jobs(spark, lambda: s2.add_state_events([marker("c", 4)])) == 0
         spark_rows, mirror = self._rows(s2, "state_read_markers")
         assert spark_rows == mirror == [("c", 4)]
+
+
+class TestPy4jBudget:
+    """A commit that the mirror folds makes (almost) no JVM call: the
+    rows reach Spark only when a Spark statement reads the table. Round
+    trips are counted on the calling thread with a wrapper on
+    ``ClientServerConnection.send_command`` (py4j releases garbage
+    collected objects from its own thread)."""
+
+    @staticmethod
+    def _counter():
+        import threading
+
+        from py4j.clientserver import ClientServerConnection
+
+        calls = [0]
+        send = ClientServerConnection.send_command
+        owner = threading.get_ident()
+
+        def counting(self, command):
+            if threading.get_ident() == owner:
+                calls[0] += 1
+            return send(self, command)
+
+        return calls, mock.patch.object(
+            ClientServerConnection, "send_command", counting
+        )
+
+    def test_warm_commits_stay_off_the_jvm(self, spark, tmp_path):
+        from leaf_spark.dml import DmlExecutor
+
+        from .fixtures import marker, msg
+
+        s = Stream(spark, str(tmp_path), "did:plc:py4j")
+        s.provide_module(CHAT)
+        s.add_events([msg("a", "warm", 1)])
+        s.add_state_events([marker("a", 1)])
+        q = LeafQuery("messages", limit=1000)
+        calls, counting = self._counter()
+        with counting:
+            used = []
+            for i in range(40):
+                c0 = calls[0]
+                s.add_events([msg(f"u{i % 3}", f"m{i}", 10 + i)])
+                c1 = calls[0]
+                s.add_state_events([marker(f"u{i % 3}", 10 + i)])
+                used.append((c1 - c0, calls[0] - c1))
+            versions = dict(s.store._table_versions)
+            c0 = calls[0]
+            with pytest.raises(BatchRejected, match="missing content"):
+                s.add_events([ev("a", x=1)])
+            rejected = calls[0] - c0
+        assert max(c for c, _ in used) <= 5, used
+        assert max(m for _, m in used) <= 5, used
+        assert rejected == 0
+        assert s.store._table_versions == versions
+        mirror = s.query("a", q)
+        assert len(mirror) == 41
+        # the Spark view is rebuilt on its first read, same rows in order
+        assert [r.asDict() for r in s.query_df("a", q, {
+            "start": 1, "limit": 1000, "requesting_user": "a"
+        }).collect()] == mirror
+        # a statement the mirror does not fold reads the rebuilt table
+        DmlExecutor(s.store).execute(
+            "insert into messages (idx, sender, content, sent_at) "
+            "select max(idx) + 1, 'z', 'spark', 0 from messages"
+        )
+        mirror = s.query("a", q)
+        assert mirror[-1]["content"] == "spark" and len(mirror) == 42
+        assert [tuple(r) for r in s.store.tables["messages"].collect()] == [
+            tuple(r.values()) for r in mirror
+        ]
+        markers = LeafQuery("my_unread")
+        unread = {u: s.query(u, markers) for u in ("u0", "u1", "u2")}
+        s.persist_state()
+        s2 = Stream(spark, str(tmp_path), "did:plc:py4j")
+        s2.provide_module(CHAT)
+        assert s2.query("a", q) == mirror
+        assert {u: s2.query(u, markers) for u in unread} == unread

@@ -1035,8 +1035,8 @@ class TestSoakMirrorBoundary:
         outcomes = []
         fold = LocalEval.fold
 
-        def recording(le, stmts, rows, written, cap):
-            out = fold(le, stmts, rows, written, cap)
+        def recording(le, stmts, rows, written, cap, **kw):
+            out = fold(le, stmts, rows, written, cap, **kw)
             if "state_marks" in written:
                 outcomes.append(out is not None)
             return out

@@ -859,3 +859,35 @@ def test_conversion_counts_match_batch_q196_counts(spark, events_src_dir, tmp_pa
         .collect()
     }
     assert got == batch and len(got) >= 2
+
+
+def test_commit_jobs_run_in_the_stream_pool(spark, tmp_path):
+    """Stream._scheduler_pool leaves the thread in the stream's FAIR pool
+    and skips the py4j calls while it already is; a thread that switches
+    streams switches pools, so a commit that does submit Spark work
+    (here a fold the mirror may not take) submits it from the stream's
+    own pool."""
+    import unittest.mock as mock
+
+    from leaf_spark.dml import DmlExecutor
+
+    sc = spark.sparkContext
+    a = Stream(spark, str(tmp_path / "a"), "did:plc:pool-a")
+    b = Stream(spark, str(tmp_path / "b"), "did:plc:pool-b")
+    for s in (a, b):
+        s.provide_module(CHAT)
+    seen = []
+    execute = DmlExecutor.execute
+
+    def recording(self, *args, **kwargs):
+        seen.append(sc.getLocalProperty("spark.scheduler.pool"))
+        return execute(self, *args, **kwargs)
+
+    with mock.patch.object(
+        Stream, "_mirror_fold", return_value=False
+    ), mock.patch.object(DmlExecutor, "execute", recording):
+        for s, i in ((a, 1), (b, 2), (a, 3), (a, 4)):
+            seen.clear()
+            s.add_events([msg("did:plc:u", f"m{i}", i)])
+            assert seen and set(seen) == {s._pool_name}
+    assert sc.getLocalProperty("spark.scheduler.pool") == a._pool_name

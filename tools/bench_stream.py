@@ -12,6 +12,10 @@ batch-safe INSERT…SELECT materializer):
             ClientServerConnection.send_command);
 - state:    the same two counts per single read-marker commit
             (spark_jobs_per_state_commit, py4j_calls_per_state_commit);
+- small:    py4j round trips per single-message commit on a warm
+            stream whose tables fit the sqlite mirror
+            (py4j_calls_per_small_commit) and per batch the authorizer
+            rejects (py4j_calls_per_reject);
 - replay:   events/sec to rebuild materialized state from the log
             (fresh Stream on the same root, snapshot disabled by removal);
 - reopen:   seconds to reopen with the persisted state snapshot (the
@@ -34,8 +38,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from leaf_spark import drisl
 from leaf_spark.session import get_spark
-from leaf_spark.stream import Stream
+from leaf_spark.stream import BatchRejected, Stream
 from leaf_spark.types import IncomingEvent, LeafQuery, SqlValue
 
 from tests.fixtures import CHAT, marker, msg  # chat module + event factories
@@ -145,6 +150,27 @@ def main() -> None:
             out["local_query_roundtrips_per_sec"] = round(
                 n_lq / (time.time() - t0), 2
             )
+            # py4j round trips of single-message commits and of batches
+            # the authorizer rejects, on this warm stream: its commits
+            # fold in the sqlite mirror and hand the rows to the store
+            n_small = 20
+            c0 = py4j_calls[0]
+            for k in range(n_small):
+                ss.add_events([msg("did:plc:u", f"s{k}", 1000 + k)])
+            out["py4j_calls_per_small_commit"] = round(
+                (py4j_calls[0] - c0) / n_small, 1
+            )
+            c0 = py4j_calls[0]
+            for k in range(n_small):
+                try:  # no .content: "missing content"
+                    ss.add_events(
+                        [IncomingEvent("did:plc:u", drisl.encode({"k": k}))]
+                    )
+                except BatchRejected:
+                    pass
+            out["py4j_calls_per_reject"] = round(
+                (py4j_calls[0] - c0) / n_small, 1
+            )
         finally:
             shutil.rmtree(sroot, ignore_errors=True)
 
@@ -205,7 +231,6 @@ def main() -> None:
         # wire overhead: the same query round-trips through the full
         # socket.io stack (msgpack packets over websocket) — the wire layer
         # should add ≪ 10 ms/call on top of the in-process number above
-        from leaf_spark import drisl
         from leaf_spark.catalog import StreamCatalog
         from leaf_spark.server import Connection, LeafServer
         from leaf_spark.socketio import LeafSocketIOClient, LeafSocketIOServer
