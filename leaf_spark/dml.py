@@ -392,9 +392,9 @@ class TableStore:
         self._frames.pop(name, None)
         self._pending.pop(name, None)
 
-    def known_tables(self) -> set[str]:
+    def known_tables(self) -> frozenset[str]:
         """Lowercased names of every managed table and view."""
-        return {n.lower() for n in self.defs} | {n.lower() for n in self.views}
+        return frozenset(n.lower() for n in (*self.defs, *self.views))
 
     def unique_key_cols(self, name: str) -> set:
         """Lowercased columns of ``name`` with a declared single-column

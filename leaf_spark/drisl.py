@@ -74,6 +74,27 @@ def _enc_head(major: int, arg: int) -> bytes:
     return bytes([(major << 5) | 27]) + arg.to_bytes(8, "big")
 
 
+# Key tuples whose map order is memoized, and the most keys one may
+# have: wire rows, wire cells and payloads repeat a few key sets, while
+# a huge map would pin every one of its keys in the cache.
+_MAP_ORDER_CACHE = 1024
+_MAP_ORDER_MAX_KEYS = 64
+
+
+@functools.lru_cache(maxsize=_MAP_ORDER_CACHE)
+def _map_order(keys: tuple) -> tuple[bytes, tuple[tuple[bytes, str], ...]]:
+    """A map's head and its (encoded key, key) pairs in bytewise order of
+    the encoded keys — the deterministic order, per key tuple."""
+    pairs = []
+    for k in keys:
+        if not isinstance(k, str):
+            raise TypeError(f"DRISL map keys must be text, got {type(k)}")
+        kb = k.encode("utf-8")
+        pairs.append((_enc_head(3, len(kb)) + kb, k))
+    pairs.sort(key=lambda kv: kv[0])
+    return _enc_head(5, len(pairs)), tuple(pairs)
+
+
 def encode(value: Any) -> bytes:
     """Encode a Python value as deterministic CBOR (DRISL profile):
     definite lengths, shortest-form integer heads, map keys sorted bytewise
@@ -85,7 +106,23 @@ def encode(value: Any) -> bytes:
 
 
 def _encode_into(v: Any, out: bytearray) -> None:
-    if v is None:
+    # text and maps first: they are most of a wire answer's items (the
+    # branches' types are disjoint, so the order changes no output)
+    if isinstance(v, str):
+        b = v.encode("utf-8")
+        out += _enc_head(3, len(b))
+        out += b
+    elif isinstance(v, dict):
+        keys = tuple(v)
+        head, pairs = (
+            _map_order(keys) if len(keys) <= _MAP_ORDER_MAX_KEYS
+            else _map_order.__wrapped__(keys)
+        )
+        out += head
+        for kb, k in pairs:
+            out += kb
+            _encode_into(v[k], out)
+    elif v is None:
         out.append(0xF6)
     elif v is True:
         out.append(0xF5)
@@ -104,27 +141,10 @@ def _encode_into(v: Any, out: bytearray) -> None:
     elif isinstance(v, bytes):
         out += _enc_head(2, len(v))
         out += v
-    elif isinstance(v, str):
-        b = v.encode("utf-8")
-        out += _enc_head(3, len(b))
-        out += b
     elif isinstance(v, (list, tuple)):
         out += _enc_head(4, len(v))
         for item in v:
             _encode_into(item, out)
-    elif isinstance(v, dict):
-        encoded = []
-        for k, val in v.items():
-            if not isinstance(k, str):
-                raise TypeError(f"DRISL map keys must be text, got {type(k)}")
-            kb = bytearray()
-            _encode_into(k, kb)
-            encoded.append((bytes(kb), val))
-        encoded.sort(key=lambda kv: kv[0])  # bytewise deterministic order
-        out += _enc_head(5, len(encoded))
-        for kb, val in encoded:
-            out += kb
-            _encode_into(val, out)
     elif isinstance(v, CidLink):
         out += _enc_head(6, 42)  # tag 42 = IPLD CID link
         _encode_into(b"\x00" + v.bytes, out)

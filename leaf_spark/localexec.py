@@ -49,6 +49,7 @@ from __future__ import annotations
 import json
 import re
 import sqlite3
+from functools import lru_cache
 
 from . import drisl
 from ._drisl_udfs import (
@@ -57,7 +58,8 @@ from ._drisl_udfs import (
     conv_extract_real,
     conv_extract_str,
 )
-from .sqlcompat import _is_word, tokenize
+from .module import ANALYSIS_CACHE
+from .sqlcompat import _is_word, lex
 
 
 _DC_MISS = object()
@@ -158,23 +160,38 @@ def write_target(lows: list[str]) -> str | None:
 
 def eligible(
     stmt: str,
-    known_tables: set[str],
+    known_tables: frozenset[str] | set[str],
     allow_abort: bool,
-    toks: list[str] | None = None,
     mirrorable: frozenset[str] | set[str] = frozenset(),
     write: bool = False,
+    event: bool = True,
 ) -> bool:
     """True when ``stmt`` provably touches only the staged ``event``
     table (plus tables in ``mirrorable``, which the caller promises to
     stage as literal rows) and allowlisted functions. ``stmt`` is a
     SELECT, or with ``write`` an INSERT/UPDATE/DELETE (``write_target``)
-    whose target is in ``mirrorable``.
+    whose target is in ``mirrorable``. Without ``event`` (no staged
+    batch: the named-query path) an unqualified ``event`` says False.
     Conservative: anything unrecognized (an unmirrored managed-table
     name, a ``state.`` qualifier, the raw ``events`` log, an
     un-allowlisted function, RETURNING) says False and the caller uses
-    the Spark path."""
-    toks = tokenize(stmt) if toks is None else toks
-    lows = [t.lower() if _is_word(t) else t for t in toks]
+    the Spark path. Memoized on exactly these arguments."""
+    return _eligible(
+        stmt, frozenset(known_tables), allow_abort, frozenset(mirrorable),
+        write, event,
+    )
+
+
+@lru_cache(maxsize=ANALYSIS_CACHE)
+def _eligible(
+    stmt: str,
+    known_tables: frozenset[str],
+    allow_abort: bool,
+    mirrorable: frozenset[str],
+    write: bool,
+    event: bool,
+) -> bool:
+    toks, lows = lex(stmt)
     if write:
         if write_target(lows) not in mirrorable:
             return False
@@ -190,6 +207,8 @@ def eligible(
             continue
         nxt = toks[i + 1] if i + 1 < n else ""
         if (low in known_tables and low not in mirrorable) or low == "events":
+            return False
+        if low == "event" and not event and (i == 0 or toks[i - 1] != "."):
             return False
         if low in ("state", "main") and nxt == ".":
             return False
@@ -217,28 +236,29 @@ def eligible(
     return True
 
 
+@lru_cache(maxsize=ANALYSIS_CACHE)
 def flatten_namespaces(stmt: str) -> str:
     """``state.t`` → ``state_t`` and ``main.t`` → ``t`` at the token
     level — the store's flat table naming (the same mapping the Spark
     translate layer applies), so read-path statements referencing state
     tables can hit their mirrors. Quoted qualifiers ('"state".t') are
     left alone: they fail the eligibility gate or error in sqlite, both
-    of which fall back to Spark."""
-    toks = tokenize(stmt)
+    of which fall back to Spark. Memoized."""
+    toks, lows = lex(stmt)
     out: list[str] = []
     i = 0
     n = len(toks)
     while i < n:
         t = toks[i]
         if (
-            _is_word(t)
-            and t.lower() in ("state", "main")
+            lows[i] in ("state", "main")
+            and _is_word(t)
             and i + 2 < n
             and toks[i + 1] == "."
             and _is_word(toks[i + 2])
             and (not out or out[-1] != ".")
         ):
-            if t.lower() == "state":
+            if lows[i] == "state":
                 out.append(f"state_{toks[i + 2]}")
             else:
                 out.append(toks[i + 2])
@@ -260,16 +280,18 @@ def plain_ident(name: str) -> bool:
     return bool(_IDENT_RE.match(name or ""))
 
 
-def table_refs(stmt: str, known_tables: set[str]) -> set[str]:
-    """Known managed tables the statement mentions (unqualified)."""
-    toks = tokenize(stmt)
-    return {
-        t.lower()
-        for i, t in enumerate(toks)
-        if _is_word(t)
-        and t.lower() in known_tables
+@lru_cache(maxsize=ANALYSIS_CACHE)
+def table_refs(stmt: str, known_tables: frozenset[str]) -> frozenset[str]:
+    """Known managed tables the statement mentions (unqualified).
+    Memoized on (statement, known-table set)."""
+    toks, lows = lex(stmt)
+    return frozenset(
+        low
+        for i, low in enumerate(lows)
+        if low in known_tables
+        and _is_word(toks[i])
         and (i == 0 or toks[i - 1] != ".")
-    }
+    )
 
 
 # Python value types a mirrored table row may carry — anything else
@@ -600,7 +622,7 @@ class LocalEval:
 
     def authorize_setwise(self, stmts: list[str], rows: list[tuple]) -> None:
         """Vectorized authorizer evaluation: each statement (already
-        rewritten by ``Stream._vectorize_auth_stmt`` to scan ``event``
+        rewritten by ``stream._vectorize_auth_stmt`` to scan ``event``
         as ``__ev__``) runs ONCE over the whole staged batch — one
         sqlite table scan instead of an N-event statement loop, so the
         driver's per-event GIL cost drops to per-batch. Within a

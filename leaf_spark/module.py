@@ -19,6 +19,7 @@ parity, not wire compatibility.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import re
 from dataclasses import dataclass, field
@@ -35,6 +36,13 @@ _COMMENT_RE = re.compile(r"--[^\n]*")
 
 def strip_comments(sql: str) -> str:
     return _COMMENT_RE.sub("", sql)
+
+
+# Entries per memoized statement analysis (this split, the lexer and the
+# localexec gates). A module has tens of statements and the known-table
+# set changes only on DDL, so this holds the working set of hundreds of
+# distinct modules in one process.
+ANALYSIS_CACHE = 4096
 
 
 _TRIGGER_HEAD_RE = re.compile(r"^\s*create\s+(temp\s+|temporary\s+)?trigger\b", re.IGNORECASE)
@@ -99,6 +107,14 @@ def split_statements(sql: str) -> list[str]:
     if stmt:
         out.append(stmt)
     return out
+
+
+@functools.lru_cache(maxsize=ANALYSIS_CACHE)
+def statements(sql: str) -> tuple[str, ...]:
+    """The statements of a module script: comments stripped, then
+    ``split_statements``. Memoized — the engine splits the same fixed
+    module text on every commit, read marker and named query."""
+    return tuple(split_statements(strip_comments(sql)))
 
 
 @dataclass(frozen=True)

@@ -26,7 +26,7 @@ import re
 from dataclasses import dataclass, field
 from functools import lru_cache
 
-from .module import split_statements
+from .module import ANALYSIS_CACHE, split_statements
 
 # ---------------------------------------------------------------------------
 # Tokenizer — minimal SQL-aware scanning (strings, identifiers, parens)
@@ -75,8 +75,20 @@ def tokenize(sql: str) -> list[str]:
     return out
 
 
+_WORD_START_RE = re.compile(r"[A-Za-z_]")
+
+
 def _is_word(tok: str) -> bool:
-    return bool(re.match(r"^[A-Za-z_]", tok))
+    return _WORD_START_RE.match(tok) is not None
+
+
+@lru_cache(maxsize=ANALYSIS_CACHE)
+def lex(sql: str) -> tuple[tuple[str, ...], tuple[str, ...]]:
+    """``tokenize(sql)`` and the same tokens with words lowercased, as
+    tuples. Memoized for the per-commit gates that re-read fixed module
+    statements; the translation and replay paths call ``tokenize``."""
+    toks = tuple(tokenize(sql))
+    return toks, tuple(t.lower() if _is_word(t) else t for t in toks)
 
 
 # ---------------------------------------------------------------------------

@@ -59,10 +59,10 @@ from . import drisl, localexec
 from .dml import DmlExecutor, TableStore
 from .fold import execute as fold_exec
 from .fold import plan as fold_plan
-from .module import BasicModuleDef, split_statements, strip_comments
+from .module import ANALYSIS_CACHE, BasicModuleDef, statements
 from .localdf import arrow_local_df
-from .sqlcompat import Authorizer, on_conflict_at, tokenize, top_level, _is_word
-from .types import Event, IncomingEvent, LeafQuery, SqlValue, validate_params
+from .sqlcompat import Authorizer, lex, on_conflict_at, top_level
+from .types import Event, IncomingEvent, LeafQuery, to_wire, validate_params
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -95,6 +95,48 @@ class StreamError(RuntimeError):
 class BatchRejected(StreamError):
     """Authorizer rejected an event → the WHOLE batch rolls back
     (reference lib.rs:592-595)."""
+
+
+# authorize-context event table carries ONLY (user, payload) — the
+# reference's temp event table for authorization (basic.rs:134-158);
+# idx/signature references fail there too.
+_SCALAR_EV_RE = re.compile(
+    r"\(\s*select\s+(user|payload)\s+from\s+event\s*\)",
+    re.IGNORECASE,
+)
+
+
+@functools.lru_cache(maxsize=ANALYSIS_CACHE)
+def _vectorize_auth_stmt(stmt: str) -> str | None:
+    """Rewrite an authorizer statement to evaluate per-event over the
+    WHOLE staged batch in one pass, when provably equivalent:
+
+    the statement must be a bare SELECT (no top-level FROM/WHERE/GROUP/
+    ORDER/LIMIT) whose only references to ``event`` are scalar
+    subqueries ``(select col from event)``. Those become column refs on
+    an appended ``from event __ev__`` — one row per staged event, so
+    throw()/unauthorized() fires iff it would fire for some event in
+    the per-event loop. Returns None when not provably rewritable
+    (caller falls back to the per-event path). Memoized on the text."""
+    s2 = _SCALAR_EV_RE.sub(lambda m: "__ev__." + m.group(1).lower(), stmt)
+    toks, lows = lex(s2)
+    if not lows or lows[0] != "select":
+        return None
+    if any(
+        lows[i] in (
+            "from", "where", "group", "order", "limit",
+            # compound selects: the appended "from event" would bind
+            # only to the LAST arm, and event-free earlier arms with
+            # throw()/unauthorized() would evaluate once per batch
+            # instead of once per event — not provably equivalent
+            "union", "intersect", "except", "values",
+        )
+        for i in top_level(toks)
+    ):
+        return None  # has its own relation/clauses — not a bare select
+    if "event" in lows:
+        return None  # residual event reference we can't prove safe
+    return s2 + " from event as __ev__"
 
 
 def _norm_sql_value(v):
@@ -879,7 +921,7 @@ class Stream:
 
     def _run_script(self, sql: str, policy: str, event_view: str | None = None,
                     args: dict | None = None, is_state: bool = False):
-        stmts = split_statements(strip_comments(sql))
+        stmts = statements(sql)
         ex = self._executor(event_view, stmts)
         last = None
         for stmt in stmts:
@@ -938,7 +980,7 @@ class Stream:
         if not fold_sql.strip():
             return
         is_state = policy == "state_materialize"
-        stmts = split_statements(strip_comments(fold_sql))
+        stmts = statements(fold_sql)
         for stmt in stmts:
             self.sql_authorizer.check(stmt, policy)
         if local_rows is not None and self._mirror_fold(stmts, local_rows):
@@ -1030,11 +1072,10 @@ class Stream:
         reads = False  # some statement reads a table besides its target
         for s_ in stmts:
             s2 = localexec.flatten_namespaces(s_)
-            toks = tokenize(s2)
-            lows = [t.lower() if _is_word(t) else t for t in toks]
+            toks, lows = lex(s2)
             r = localexec.table_refs(s2, known)
             if not localexec.eligible(
-                s2, known, allow_abort=False, toks=toks, mirrorable=r, write=True
+                s2, known, allow_abort=False, mirrorable=r, write=True
             ):
                 return False
             target = localexec.write_target(lows)
@@ -1087,46 +1128,6 @@ class Stream:
     # -- A3 authorize --------------------------------------------------------
 
     _AUTH_CHUNK = 32  # events per evaluation job (bounds union-plan depth)
-
-    # authorize-context event table carries ONLY (user, payload) — the
-    # reference's temp event table for authorization (basic.rs:134-158);
-    # idx/signature references fail there too.
-    _SCALAR_EV_RE = re.compile(
-        r"\(\s*select\s+(user|payload)\s+from\s+event\s*\)",
-        re.IGNORECASE,
-    )
-
-    def _vectorize_auth_stmt(self, stmt: str) -> str | None:
-        """Rewrite an authorizer statement to evaluate per-event over the
-        WHOLE staged batch in one pass, when provably equivalent:
-
-        the statement must be a bare SELECT (no top-level FROM/WHERE/GROUP/
-        ORDER/LIMIT) whose only references to ``event`` are scalar
-        subqueries ``(select col from event)``. Those become column refs on
-        an appended ``from event __ev__`` — one row per staged event, so
-        throw()/unauthorized() fires iff it would fire for some event in
-        the per-event loop. Returns None when not provably rewritable
-        (caller falls back to the per-event path)."""
-        s2 = self._SCALAR_EV_RE.sub(lambda m: "__ev__." + m.group(1).lower(), stmt)
-        toks = tokenize(s2)
-        lows = [t.lower() if _is_word(t) else t for t in toks]
-        if not lows or lows[0] != "select":
-            return None
-        if any(
-            lows[i] in (
-                "from", "where", "group", "order", "limit",
-                # compound selects: the appended "from event" would bind
-                # only to the LAST arm, and event-free earlier arms with
-                # throw()/unauthorized() would evaluate once per batch
-                # instead of once per event — not provably equivalent
-                "union", "intersect", "except", "values",
-            )
-            for i in top_level(toks)
-        ):
-            return None  # has its own relation/clauses — not a bare select
-        if "event" in lows:
-            return None  # residual event reference we can't prove safe
-        return s2 + " from event as __ev__"
 
     @property
     def _local_eval(self) -> localexec.LocalEval:
@@ -1296,7 +1297,7 @@ class Stream:
         branch calls it."""
         if self.module is None or not self.module.authorizer.strip():
             return
-        stmts = split_statements(strip_comments(self.module.authorizer))
+        stmts = statements(self.module.authorizer)
         for stmt in stmts:
             self.sql_authorizer.check(stmt, "authorize")
         known = self.store.known_tables()
@@ -1324,7 +1325,7 @@ class Stream:
                 # one event stage/delete/insert loop total instead of
                 # one per statement)
                 vec_map = {
-                    s_: self._vectorize_auth_stmt(s_) for s_ in local
+                    s_: _vectorize_auth_stmt(s_) for s_ in local
                 }
                 vecs = [v for v in vec_map.values() if v is not None]
                 others = [s_ for s_ in local if vec_map[s_] is None]
@@ -1361,7 +1362,7 @@ class Stream:
             # (LocalTableScan) is already a materialized literal — a
             # checkpoint there is a pure ~200 ms driver round-trip
             staged_df = staged_df.localCheckpoint()
-        vectorized = [self._vectorize_auth_stmt(s) for s in stmts]
+        vectorized = [_vectorize_auth_stmt(s) for s in stmts]
 
         branches: list[DataFrame] = []
         views: list[str] = []
@@ -1577,9 +1578,10 @@ class Stream:
         - every statement is a SELECT touching only mirrorable managed
           tables (≤_MIRROR_CAP rows, scalar-typed values) and
           allowlisted functions — the same gate as local authorize;
-        - no statement references ``event``/``events`` (no staged event
-          exists in query context, and the LocalEval connection may
-          hold a leftover authorize staging that must never answer);
+        - no statement references ``event``/``events`` (``eligible``
+          with ``event=False``: no staged event exists in query
+          context, and the LocalEval connection may hold a leftover
+          authorize staging that must never answer);
         - every result column is a plain identifier (bare column or
           explicit alias) — unaliased expressions are NAMED differently
           by SQLite and Spark ('count(*)' vs 'count(1)').
@@ -1589,7 +1591,7 @@ class Stream:
         (their order only as far as ``query``'s contract says);
         boolean expression results surface as sqlite 1/0, which the
         Spark path normalizes to as well (_norm_sql_value)."""
-        stmts = split_statements(strip_comments(sql))
+        stmts = statements(sql)
         if not stmts:
             return None
         known = self.store.known_tables()
@@ -1602,17 +1604,9 @@ class Stream:
             # propagate identically to the Spark path's
             self.sql_authorizer.check(s_, "query")
             s2 = localexec.flatten_namespaces(s_)
-            toks = tokenize(s2)
-            if any(
-                _is_word(t)
-                and t.lower() in ("event", "events")
-                and (i == 0 or toks[i - 1] != ".")
-                for i, t in enumerate(toks)
-            ):
-                return None
             refs = localexec.table_refs(s2, known)
             if not localexec.eligible(
-                s2, known, allow_abort=False, toks=toks, mirrorable=refs
+                s2, known, allow_abort=False, mirrorable=refs, event=False
             ):
                 return None
             needed |= refs
@@ -1645,5 +1639,8 @@ class Stream:
         return lambda: self._update_listeners.remove(cb)
 
     def rows_to_wire(self, rows: list[dict]) -> list[dict]:
-        """A11: rows → wire-codec maps ({col: {$type, value}})."""
-        return [{k: SqlValue.of(v).to_wire() for k, v in r.items()} for r in rows]
+        """A11: rows → wire-codec maps ({col: {$type, value}}), each cell
+        exactly ``SqlValue.of(v).to_wire()`` (``types.to_wire``, which
+        builds no SqlValue). Plain dicts: the JSON bridge and the shard
+        relay consume them as they are, and DRISL encodes them."""
+        return [{k: to_wire(v) for k, v in r.items()} for r in rows]

@@ -80,6 +80,29 @@ class SqlValue:
         return SqlValue(kind, d["value"])
 
 
+# wire tag of each Python type whose value goes on the wire as it is
+_WIRE_TAG = {
+    int: _WIRE_PREFIX + "integer",
+    float: _WIRE_PREFIX + "real",
+    str: _WIRE_PREFIX + "text",
+    bytes: _WIRE_PREFIX + "blob",
+}
+_NULL_WIRE_TAG = _WIRE_PREFIX + "null"
+
+
+def to_wire(v: Any) -> dict:
+    """``SqlValue.of(v).to_wire()`` without building the SqlValue: a
+    None, int, float, str or bytes cell maps straight to its wire dict;
+    anything else (bool → integer, bytearray → bytes, subclasses, the
+    ``TypeError`` of an unconvertible value) goes through ``SqlValue``."""
+    tag = _WIRE_TAG.get(type(v))
+    if tag is not None:
+        return {"$type": tag, "value": v}
+    if v is None:
+        return {"$type": _NULL_WIRE_TAG}
+    return SqlValue.of(v).to_wire()
+
+
 # ---------------------------------------------------------------------------
 # Query param declarations + validation (reference lib.rs:148-161, 268-320)
 # ---------------------------------------------------------------------------

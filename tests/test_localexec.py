@@ -3,6 +3,7 @@ floor fix (VERDICT r7 "Next round #2"). The local path must be
 value-identical to the Spark path it bypasses, refuse anything it cannot
 prove event-only, and fall back (never error out) when mis-gated."""
 
+import dataclasses
 import unittest.mock as mock
 
 import pytest
@@ -69,6 +70,49 @@ class TestEligibility:
             "select user from event returning user",
             self.KNOWN, allow_abort=False,
         )
+
+    def test_known_table_set_regates_a_statement(self):
+        """The memoized gates key on the known-table set: the same text
+        gates differently once a CREATE or DROP changes it."""
+        from leaf_spark.localexec import table_refs
+
+        stmt = "select k from extra order by k"
+        for known, want in (
+            (frozenset(self.KNOWN), False),  # unknown table: Spark
+            (frozenset(self.KNOWN | {"extra"}), True),  # created
+            (frozenset(self.KNOWN), False),  # dropped again
+        ):
+            refs = table_refs(stmt, known)
+            assert refs == ({"extra"} if want else set())
+            assert eligible(stmt, known, allow_abort=False, mirrorable=refs) is want
+
+    def test_memoized_results_cannot_leak_mutations(self):
+        from leaf_spark.localexec import flatten_namespaces, table_refs
+        from leaf_spark.module import statements
+        from leaf_spark.sqlcompat import lex, tokenize
+
+        stmt = "select user from state.m join bans on bans.user = m.user"
+        toks, lows = lex(stmt)
+        assert isinstance(toks, tuple) and isinstance(lows, tuple)
+        fresh = tokenize(stmt)  # the uncached tokenizer returns a new list
+        fresh.clear()
+        assert list(lex(stmt)[0]) == tokenize(stmt) and lex(stmt)[1] == lows
+        known = frozenset(self.KNOWN)
+        refs = table_refs(stmt, known)
+        with pytest.raises(AttributeError):
+            refs.add("messages")  # a frozenset
+        mine = set(refs)
+        mine.add("messages")
+        assert table_refs(stmt, known) == {"bans"}
+        flat = flatten_namespaces(stmt)
+        assert flat.startswith("select user from state_m join")
+        script = "select 1; -- note\nselect 2;"
+        parts = statements(script)
+        with pytest.raises(TypeError):
+            parts[0] = "drop table bans"  # a tuple
+        copy = list(parts)
+        copy.append("drop table bans")
+        assert statements(script) == ("select 1", "select 2")
 
 
 class TestLocalEvalParity:
@@ -209,8 +253,14 @@ class TestStreamIntegration:
         monkeypatch.setattr(localexec, "eligible",
                             lambda *a, **k: False)
         s2 = self._mk(spark, tmp_path / "off", CHAT, "did:plc:loff")
-        for m in msgs:
-            s2.add_events([m])
+        calls, counting = TestPy4jBudget._counter()
+        with counting:
+            for m in msgs:
+                c0 = calls[0]
+                s2.add_events([m])
+                # the patched gate is consulted on every commit (the
+                # memoized analysis sits behind it): the Spark path runs
+                assert calls[0] - c0 > 10
         off_rows = s2.query(None, LeafQuery("messages"))
         assert on_rows == off_rows
 
@@ -1375,3 +1425,87 @@ class TestPy4jBudget:
         s2.provide_module(CHAT)
         assert s2.query("a", q) == mirror
         assert {u: s2.query(u, markers) for u in unread} == unread
+
+    @staticmethod
+    def _tokenizer_passes():
+        """Count tokenizer passes (each starts with a match at offset 0)
+        through a stand-in for ``sqlcompat._TOKEN_RE``."""
+        from leaf_spark import sqlcompat
+
+        passes = [0]
+        pattern = sqlcompat._TOKEN_RE
+
+        class Counting:
+            def match(self, sql, pos=0):
+                if pos == 0:
+                    passes[0] += 1
+                return pattern.match(sql, pos)
+
+        return passes, mock.patch.object(sqlcompat, "_TOKEN_RE", Counting())
+
+    def test_warm_ops_run_no_tokenizer_pass(self, spark, tmp_path):
+        """Module statements are analysed once per (text, table set): a
+        warm commit, read marker and named query re-tokenize nothing
+        (each group of the five re-ran 21 passes before the memo)."""
+        from leaf_spark.sqlcompat import lex, tokenize
+
+        from .fixtures import marker, msg
+
+        s = Stream(spark, str(tmp_path), "did:plc:tokens")
+        s.provide_module(CHAT)
+        queries = [
+            LeafQuery("messages", limit=50),
+            LeafQuery("message_stats"),
+            LeafQuery("my_unread"),
+        ]
+
+        def group(i: int) -> list[int]:
+            ops = [
+                lambda: s.add_events([msg(f"u{i % 3}", f"m{i}", i)]),
+                lambda: s.add_state_events([marker(f"u{i % 3}", i)]),
+                *(lambda q=q: s.query("u1", q) for q in queries),
+            ]
+            used = []
+            for op in ops:
+                p0 = passes[0]
+                op()
+                used.append(passes[0] - p0)
+            return used
+
+        passes, counting = self._tokenizer_passes()
+        with counting:
+            group(0)  # warm-up: the first sight of each statement
+            used = [group(i) for i in range(1, 4)]
+            # the counter sees real passes: an uncached call and a miss
+            p0 = passes[0]
+            tokenize("select 1")
+            unseen = f"select '{tmp_path}'"
+            lex(unseen)
+            lex(unseen)
+            assert passes[0] - p0 == 2
+        assert used == [[0] * 5] * 3, used
+        assert len(s.query("u1", queries[0])) == 4
+
+
+class TestAnalysisMemo:
+    """The memoized statement analysis must re-gate whenever its inputs
+    change; a stale answer keyed on the text alone would serve a read
+    from a table the mirror does not hold, or skip one it does."""
+
+    ARGS = {"start": 1, "limit": 10, "requesting_user": None}
+    SQL = "select k from extra order by k"
+
+    def test_create_drop_and_update_module_regate(self, spark, tmp_path):
+        s = Stream(spark, str(tmp_path), "did:plc:regate")
+        s.provide_module(CHAT)
+        assert s._local_query(self.SQL, self.ARGS) is None  # unknown: Spark
+        s._run_script("create table extra (k text primary key)", "materialize")
+        assert s._local_query(self.SQL, self.ARGS) == []  # now the mirror's
+        s._run_script("drop table extra", "materialize")
+        assert s._local_query(self.SQL, self.ARGS) is None
+        s.update_module(dataclasses.replace(
+            CHAT,
+            init_sql=CHAT.init_sql
+            + " create table if not exists extra (k text primary key);",
+        ))
+        assert s._local_query(self.SQL, self.ARGS) == []

@@ -5,7 +5,7 @@ import/export, per-event fold fallback."""
 import pytest
 
 from leaf_spark import drisl
-from leaf_spark.stream import BatchRejected, Stream
+from leaf_spark.stream import BatchRejected, Stream, _vectorize_auth_stmt
 from leaf_spark.types import Event, IncomingEvent, LeafQuery, SqlValue
 
 from .fixtures import CHAT, COUNTER, bump, marker, msg
@@ -168,7 +168,7 @@ class TestAuthorizerPaths:
         )
         s = Stream(spark, str(tmp_path), "did:plc:authpaths")
         s.provide_module(mod)
-        assert s._vectorize_auth_stmt(
+        assert _vectorize_auth_stmt(
             "select throw('x') where (select user from event) = 'y'"
         ) is None
 
@@ -184,19 +184,17 @@ class TestAuthorizerPaths:
         assert s.state.latest_idx == 1  # whole batch rolled back
 
     def test_vectorized_path_used_for_chat(self, spark):
-        s_check = Stream.__new__(Stream)  # only needs the regex/classifier
         for stmt in [
             "select iif(exists(select 1 from bans where user = (select user from event)), unauthorized('banned user'), 1)",
             "select iif(drisl_exists((select payload from event), '.content'), 1, throw('missing content'))",
         ]:
-            assert Stream._vectorize_auth_stmt(s_check, stmt) is not None
+            assert _vectorize_auth_stmt(stmt) is not None
 
     def test_compound_selects_not_vectorized(self, spark):
         """advice r10 low: the appended 'from event' would bind only to
         the LAST arm of a compound select, and event-free earlier arms
         with throw()/unauthorized() would evaluate once per batch instead
         of once per event — compounds must take the per-event path."""
-        s_check = Stream.__new__(Stream)
         for stmt in [
             "select 1 union select iif((select user from event) = 'x', throw('a'), 1)",
             "select iif((select user from event) = 'x', throw('a'), 1) union all select 1",
@@ -204,10 +202,9 @@ class TestAuthorizerPaths:
             "select (select user from event) except select 'x'",
             "select 1 union values (2)",
         ]:
-            assert Stream._vectorize_auth_stmt(s_check, stmt) is None
+            assert _vectorize_auth_stmt(stmt) is None
         # nested compounds inside a subquery stay vectorizable
-        assert Stream._vectorize_auth_stmt(
-            s_check,
+        assert _vectorize_auth_stmt(
             "select iif((select user from event) in "
             "(select 'a' union select 'b'), throw('x'), 1)",
         ) is not None

@@ -9,6 +9,7 @@ from leaf_spark.types import (
     ParamValidationError,
     QueryParamDef,
     SqlValue,
+    to_wire,
     validate_params,
 )
 
@@ -29,6 +30,41 @@ class TestSqlValue:
     def test_wire_tags(self):
         assert SqlValue.of(5).to_wire()["$type"] == "muni.town.sqliteValue.integer"
         assert SqlValue.null().to_wire() == {"$type": "muni.town.sqliteValue.null"}
+
+
+class TestWireCells:
+    """``to_wire`` (and ``Stream.rows_to_wire`` on top of it) builds
+    exactly ``SqlValue.of(v).to_wire()`` for every kind of cell."""
+
+    VALUES = [None, True, False, 0, -5, 2**63 - 1, 1.5, -0.0, "", "x",
+              "é", b"", b"\x01", bytearray(b"ab")]
+
+    def test_every_kind(self):
+        from leaf_spark import drisl
+
+        for v in self.VALUES:
+            want = SqlValue.of(v).to_wire()
+            got = to_wire(v)
+            assert got == want, v
+            assert type(got.get("value")) is type(want.get("value")), v
+            assert drisl.encode(got) == drisl.encode(want), v
+
+    def test_unconvertible_raises_type_error(self):
+        from decimal import Decimal
+
+        for v in (object(), Decimal(1), [1], {"a": 1}):
+            with pytest.raises(TypeError):
+                SqlValue.of(v)
+            with pytest.raises(TypeError):
+                to_wire(v)
+
+    def test_rows_to_wire(self):
+        from leaf_spark.stream import Stream
+
+        rows = [{f"c{i}": v for i, v in enumerate(self.VALUES)}, {}, {"a": 1}]
+        assert Stream.rows_to_wire(None, rows) == [
+            {k: SqlValue.of(v).to_wire() for k, v in r.items()} for r in rows
+        ]
 
 
 class TestLeafQueryWindow:

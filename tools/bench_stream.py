@@ -14,8 +14,10 @@ batch-safe INSERT…SELECT materializer):
             (spark_jobs_per_state_commit, py4j_calls_per_state_commit);
 - small:    py4j round trips per single-message commit on a warm
             stream whose tables fit the sqlite mirror
-            (py4j_calls_per_small_commit) and per batch the authorizer
-            rejects (py4j_calls_per_reject);
+            (py4j_calls_per_small_commit), SQL tokenizer passes per such
+            commit (sql_tokenize_calls_per_small_commit: 0 while the
+            statement analysis memo holds the module) and py4j round
+            trips per batch the authorizer rejects (py4j_calls_per_reject);
 - replay:   events/sec to rebuild materialized state from the log
             (fresh Stream on the same root, snapshot disabled by removal);
 - reopen:   seconds to reopen with the persisted state snapshot (the
@@ -28,6 +30,7 @@ Prints one JSON line.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -38,7 +41,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from leaf_spark import drisl
+from leaf_spark import drisl, sqlcompat
 from leaf_spark.session import get_spark
 from leaf_spark.stream import BatchRejected, Stream
 from leaf_spark.types import IncomingEvent, LeafQuery, SqlValue
@@ -64,6 +67,26 @@ def _count_py4j_calls() -> list[int]:
 
     ClientServerConnection.send_command = counting
     return calls
+
+
+@contextlib.contextmanager
+def _counting_tokenize_passes():
+    """Count the SQL tokenizer passes made inside the block: each pass
+    starts with a match at offset 0 of ``sqlcompat._TOKEN_RE``."""
+    pattern = sqlcompat._TOKEN_RE
+    passes = [0]
+
+    class Counting:
+        def match(self, sql, pos=0):
+            if pos == 0:
+                passes[0] += 1
+            return pattern.match(sql, pos)
+
+    sqlcompat._TOKEN_RE = Counting()
+    try:
+        yield passes
+    finally:
+        sqlcompat._TOKEN_RE = pattern
 
 
 def _group_jobs(sc, group: str) -> int:
@@ -155,10 +178,14 @@ def main() -> None:
             # fold in the sqlite mirror and hand the rows to the store
             n_small = 20
             c0 = py4j_calls[0]
-            for k in range(n_small):
-                ss.add_events([msg("did:plc:u", f"s{k}", 1000 + k)])
+            with _counting_tokenize_passes() as passes:
+                for k in range(n_small):
+                    ss.add_events([msg("did:plc:u", f"s{k}", 1000 + k)])
             out["py4j_calls_per_small_commit"] = round(
                 (py4j_calls[0] - c0) / n_small, 1
+            )
+            out["sql_tokenize_calls_per_small_commit"] = round(
+                passes[0] / n_small, 1
             )
             c0 = py4j_calls[0]
             for k in range(n_small):
