@@ -5,8 +5,10 @@ layer (leaf-server/src/storage.rs, leaf-server/src/streams.rs).
   and reference-counting GC (A20: schema.sql:1-20, storage.rs:459-546).
 - StreamCatalog: stream directory + cache (A22 weak-value maps → here a
   plain dict with explicit eviction; Python GC semantics differ and a
-  driver-side handle is cheap), global stream metadata (latest_event,
-  handle) like storage.rs:254-290, admin listing (A23 admin/list_streams).
+  driver-side handle is cheap), global stream metadata (module, handle)
+  like storage.rs:254-290, admin listing (A23 admin/list_streams). A
+  stream's latest_event is read from its own commit point (stream.json),
+  never copied into the catalog-wide meta file per commit.
 """
 
 from __future__ import annotations
@@ -15,13 +17,13 @@ import json
 import os
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
 from .module import BasicModuleDef
 from .sqlcompat import Authorizer
-from .stream import Stream
+from .stream import Stream, _safe_dirname
 from .streaming.subscribe import SubscriptionWorker
 
 STAGED_MODULE_TTL_S = 500  # reference storage.rs staged_modules TTL
@@ -109,8 +111,8 @@ class StreamCatalog:
         self._open: dict[str, _Entry] = {}
         self._meta_path = os.path.join(root_dir, "streams_meta.json")
         self._meta: dict[str, dict] = self._load_meta()
-        # concurrent commits on DIFFERENT streams both persist latest_event
-        # through this catalog: without the lock, two writers race on the
+        # concurrent meta writes (create, handle, module, shard migration)
+        # on DIFFERENT streams: without the lock, two writers race on the
         # same .tmp file (the loser's os.replace hits FileNotFoundError)
         # and json.dump can iterate _meta mid-mutation
         self._meta_lock = threading.RLock()
@@ -151,17 +153,7 @@ class StreamCatalog:
         return stream
 
     def _register(self, stream: Stream) -> None:
-        worker = SubscriptionWorker(stream)
-
-        def _persist_latest(latest: int, did=stream.stream_did) -> None:
-            # server persists latest_event globally (streams.rs:64-73)
-            with self._meta_lock:
-                if did in self._meta:
-                    self._meta[did]["latest_event"] = latest
-                    self._save_meta()
-
-        stream.on_update(_persist_latest)
-        self._open[stream.stream_did] = _Entry(stream, worker)
+        self._open[stream.stream_did] = _Entry(stream, SubscriptionWorker(stream))
 
     def open(self, stream_did: str) -> Stream:
         e = self._open.get(stream_did)
@@ -214,11 +206,30 @@ class StreamCatalog:
             self._meta[stream_did]["handle"] = handle
             self._save_meta()
 
+    def _latest_event(self, stream_did: str) -> int:
+        """The stream's head: the open stream's committed ``latest_idx``,
+        else its stream.json commit point. The reference keeps the head in
+        its server db (streams.rs:64-73); here the stream's own state file
+        already holds it durably, so a commit rewrites no catalog file. The
+        meta entry's ``latest_event`` (0 at create, the head at a shard
+        migration) answers only for a stream that never committed."""
+        e = self._open.get(stream_did)
+        if e is not None:
+            return e.stream.state.latest_idx
+        sj = os.path.join(self.root, "streams", _safe_dirname(stream_did), "stream.json")
+        try:
+            with open(sj) as f:
+                return int(json.load(f).get("latest_idx", 0))
+        except FileNotFoundError:
+            return int(self._meta[stream_did].get("latest_event", 0))
+
     def stream_info(self, stream_did: str) -> StreamInfo:
         m = self._meta.get(stream_did)
         if m is None:
             raise KeyError(f"no such stream {stream_did}")
-        return StreamInfo(stream_did, m.get("latest_event", 0), m.get("module_cid"), m.get("handle"))
+        return StreamInfo(
+            stream_did, self._latest_event(stream_did), m.get("module_cid"), m.get("handle")
+        )
 
     def list_streams(self) -> list[StreamInfo]:
         return [self.stream_info(did) for did in sorted(self._meta)]

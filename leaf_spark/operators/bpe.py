@@ -10,7 +10,9 @@ frequency (map-side combined, k×|pairs| bounded) and (b) an array-side
 merge application — a pure projection over the vocab table, no shuffle.
 The driver loop holds only the learned merge list; the vocab DataFrame is
 localCheckpoint'd per iteration to keep lineage flat (the same pattern as
-clustering.kmeans / graph.pagerank_quantized).
+clustering.kmeans). The vocabulary grows with the corpus (Heaps' law), so
+unlike graph.pagerank_quantized's 120-node graph it is not collected to the
+driver.
 
 Determinism: the winning pair maximizes (count, then lexicographically
 smallest left, then right) — engine-stable. Merge application is greedy

@@ -722,53 +722,51 @@ _Q96_ORACLE = """
 """
 
 
+def _near_dup_pagerank(spark: SparkSession, sf_dir: str, iters: int) -> DataFrame:
+    """q96/q123's Spark side: ONE collect brings the word sets of the
+    ``doc_id < 120`` documents to the driver — tokenizing stays in Spark,
+    so Java's lower()/regex semantics are kept — and the Jaccard >= 0.5
+    pairs and the PageRank iterations run there, exactly. The graph is
+    bounded by the query text (120 nodes, 7,140 candidate pairs) at any
+    corpus scale, so a Spark word self-join and per-iteration shuffles
+    would pay job overhead for a few hundred rows."""
+    from .localdf import arrow_local_df
+    from .operators.graph import pagerank_quantized
+
+    load_tables(spark, sf_dir, names=("documents",))
+    df = spark.sql(
+        """
+        select doc_id, array_distinct(split(trim(lower(text)), '\\\\s+')) as words
+        from documents where doc_id < 120
+        """
+    )
+    docs = df.collect()
+    sets = [(r.doc_id, set(r.words)) for r in docs if r.words is not None]
+    edges = []
+    for i, (da, wa) in enumerate(sets):
+        for db, wb in sets[i + 1 :]:
+            nc = len(wa & wb)
+            if nc and float(nc) / float(len(wa) + len(wb) - nc) >= 0.5:
+                edges += [(da, db), (db, da)]
+    rank = pagerank_quantized(edges, (r.doc_id for r in docs), iters=iters)
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return arrow_local_df(
+        spark, sorted(rank.items()), f"doc_id {id_type}, rank bigint"
+    )
+
+
 @register(
     "q96_pagerank",
     _Q96_ORACLE,
     doc="quantized PageRank (3 damped power iterations, integer micro-units "
     "— floor-only bigint math, bit-exact oracle) over the symmetrized "
     "word-jaccard near-dup graph: the canonical-document / authority "
-    "election step after clustering (operators/graph.py pagerank_quantized)",
+    "election step after clustering. The graph is bounded by doc_id < 120, "
+    "so one collect brings the word sets to the driver and the pairs and "
+    "iterations run there (operators/graph.py pagerank_quantized)",
 )
 def q96_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.graph import pagerank_quantized
-
-    load_tables(spark, sf_dir, names=("documents",))
-    pairs = spark.sql(
-        """
-        with words as (
-          select doc_id, explode(array_distinct(split(trim(lower(text)), '\\\\s+')))
-            as word
-          from documents where doc_id < 120
-        ),
-        sizes as (select doc_id, count(*) as sz from words group by doc_id),
-        inter as (
-          select a.doc_id as da, b.doc_id as db, count(*) as n_common
-          from words a join words b on a.word = b.word and a.doc_id < b.doc_id
-          group by 1, 2
-        )
-        select da, db from inter
-        join sizes sa on sa.doc_id = da
-        join sizes sb on sb.doc_id = db
-        where cast(n_common as double) / (sa.sz + sb.sz - n_common) >= 0.5
-        """
-    # materialize the similarity graph once (r12): without this checkpoint
-    # the word self-join subplan is embedded into EVERY power iteration of
-    # the rank recurrence (plans/r12/q96_pagerank_before.txt shows 8
-    # SortMergeJoins / 12 exchanges for a 120-node graph)
-    ).localCheckpoint()
-    edges = pairs.selectExpr("da as src", "db as dst").unionAll(
-        pairs.selectExpr("db as src", "da as dst")
-    )
-    nodes = spark.table("documents").where(F.col("doc_id") < 120).select(
-        F.col("doc_id").alias("id")
-    )
-    pr = pagerank_quantized(edges, nodes, iters=3, damping_pct=85)
-    # (staged_sort tried here and NOT kept: the 120-node rank recurrence's
-    # re-execution under range sampling costs less than the extra
-    # exchange+stage — 7-run A/B was a wash; see OPTIMIZATION_r12.md)
-    return pr.select(F.col("id").alias("doc_id"), "rank").orderBy("doc_id")
-
+    return _near_dup_pagerank(spark, sf_dir, iters=3)
 
 
 _Q123_GRAPH_HEAD = """
@@ -837,48 +835,13 @@ def _pagerank_oracle(iters: int) -> str:
     "q123_pagerank_checkpointed",
     _pagerank_oracle(12),
     doc="quantized PageRank at 12 damped power iterations — the depth a "
-    "real authority ranking needs, runnable only because the rank "
-    "table's lineage is cut with localCheckpoint every 3 iterations "
-    "(operators/graph.py, VERDICT r4 #4); the oracle unrolls all 12 "
-    "integer recurrence steps, so every floor/damping step of every "
-    "iteration is bit-checked",
+    "real authority ranking needs, over q96's near-dup graph; one collect "
+    "of the bounded word sets, then all 12 steps on the driver (no Spark "
+    "lineage to cut). The oracle unrolls all 12 integer recurrence steps, "
+    "so every floor/damping step of every iteration is bit-checked",
 )
 def q123_pagerank_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.graph import pagerank_quantized
-
-    load_tables(spark, sf_dir, names=("documents",))
-    pairs = spark.sql(
-        """
-        with words as (
-          select doc_id, explode(array_distinct(split(trim(lower(text)), '\\\\s+')))
-            as word
-          from documents where doc_id < 120
-        ),
-        sizes as (select doc_id, count(*) as sz from words group by doc_id),
-        inter as (
-          select a.doc_id as da, b.doc_id as db, count(*) as n_common
-          from words a join words b on a.word = b.word and a.doc_id < b.doc_id
-          group by 1, 2
-        )
-        select da, db from inter
-        join sizes sa on sa.doc_id = da
-        join sizes sb on sb.doc_id = db
-        where cast(n_common as double) / (sa.sz + sb.sz - n_common) >= 0.5
-        """
-    # materialize the similarity graph once (r12): without this checkpoint
-    # the word self-join subplan is embedded into EVERY power iteration of
-    # the rank recurrence (plans/r12/q96_pagerank_before.txt shows 8
-    # SortMergeJoins / 12 exchanges for a 120-node graph)
-    ).localCheckpoint()
-    edges = pairs.selectExpr("da as src", "db as dst").unionAll(
-        pairs.selectExpr("db as src", "da as dst")
-    )
-    nodes = spark.table("documents").where(F.col("doc_id") < 120).select(
-        F.col("doc_id").alias("id")
-    )
-    pr = pagerank_quantized(edges, nodes, iters=12, damping_pct=85, checkpoint_every=3)
-    return pr.select(F.col("id").alias("doc_id"), "rank").orderBy("doc_id")
-
+    return _near_dup_pagerank(spark, sf_dir, iters=12)
 
 
 # ---------------------------------------------------------------------------

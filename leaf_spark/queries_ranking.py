@@ -18,20 +18,26 @@ the corpus once per consumer (q155's naive form showed 64 parquet scans).
 So the Spark side computes the reduction once, localCheckpoints it, and
 runs the solve over the checkpointed view: exactly ONE corpus scan per
 entry, asserted by tests/test_plans.py::test_checkpointed_entries_do_not_rescan.
+q155's reduction is bounded by 50 buckets x #sources, so it is collected
+instead and its solve runs on the driver.
 The DuckDB oracle keeps the single inlined SQL body (DuckDB materializes
 CTEs, so the inlining hazard is Spark-only).
 
 Scale notes (SCALE.md §1): every entry is aggregation-shaped — the
-corpus-sized shuffles are a single groupBy apiece; iterative solves (BT)
-run over the #sources-bounded win matrix, and the exact medians (q157)
+corpus-sized shuffles are a single groupBy apiece; the iterative solve (BT)
+runs over the #sources-bounded win matrix on the driver, and the exact medians (q157)
 come from count-of-counts histograms cumulated per key, never a
 row-number over raw events (the q118 class of hazard).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+from decimal import ROUND_HALF_UP, Decimal
+
 from pyspark.sql import DataFrame, SparkSession
 
+from .localdf import arrow_local_df
 from .queries import register
 from .session import load_tables
 
@@ -101,14 +107,16 @@ register(
 # (bucket, source) table; everything after is k^2-bounded.
 # ---------------------------------------------------------------------------
 
-_Q155_WINS = """
-    with m as (
+_Q155_M = """
       select doc_id % 50 as bucket, source,
              cast(sum(n_chars) as bigint) as s,
              cast(count(*) as bigint) as n
       from documents
       group by doc_id % 50, source
-    )
+"""
+
+_Q155_WINS = """
+    with m as ({M})
     select sa, sb,
            cast(sum(win_a) + 1 as bigint) as wa,
            cast(sum(win_b) + 1 as bigint) as wb
@@ -123,7 +131,7 @@ _Q155_WINS = """
       from m a join m b on a.bucket = b.bucket and a.source < b.source
     )
     group by sa, sb
-"""
+""".replace("{M}", _Q155_M)
 
 _Q155_FINAL = """
     with w as (select * from {W}),
@@ -159,65 +167,68 @@ _Q155_FINAL = """
 """
 
 
-# Spark-side solve (r13): algebraically identical, restructured so the
-# per-source tables are never joined when a single aggregation suffices.
-# The r12 form kept the oracle's 7-join text and BROADCAST-hinted every
-# solve table; the seven per-query broadcast builds (each a driver job)
-# cost MORE than the tiny SortMergeJoins they replaced on the driver's
-# bench (0.613 -> 1.040 s, VERDICT r12 "What's wrong #1"). This form
-# removes five of the seven joins outright instead of hinting them:
-#   - wi (sum of wins per i) and p1's denominator aggregate over e GROUP
-#     BY the same key i, and wi.i is unique — the join was a no-op row-
-#     wise, so p1 is ONE aggregation over e (no wi join);
-#   - p2 carries pa.w_total / pa.p through its GROUP BY (both are
-#     functionally determined by i), so the final p1-join-p2 projection
-#     falls out of p2's own aggregation (no wi join, no final join).
-# Exactly two joins remain (pa/pb attach iteration-1 strengths to both
-# endpoints of every e row) — those are hinted BROADCAST because p1 is
-# one row per source at any corpus size, and the localCheckpoint'd win
-# matrix reports no size statistics for the planner to see that. Every
-# arithmetic term (round/decimal(38,6) sums, cast order) is verbatim
-# from the oracle text, and the group keys only add functionally-
-# dependent columns, so the output is bit-identical; the differential
-# gate re-proves it per SF. The DuckDB oracle keeps the 7-join text.
-_Q155_FINAL_SPARK = """
-    with w as (select * from {W}),
-    e as (
-      select sa as i, sb as j, wa as wins, wa + wb as nij from w
-      union all
-      select sb as i, sa as j, wb as wins, wa + wb as nij from w
-    ),
-    p1 as (
-      select i, cast(sum(wins) as bigint) as w_total,
-             round(cast(cast(sum(wins) as bigint) as double) /
-               cast(sum(cast(round(cast(nij as double) / 2.0, 6)
-                             as decimal(38,6))) as double), 6) as p
-      from e
-      group by i
-    ),
-    p2 as (
-      select /*+ BROADCAST(pa, pb) */
-             e.i, pa.w_total, pa.p as p_it1,
-             round(cast(pa.w_total as double) /
-               cast(sum(cast(round(cast(e.nij as double) / (pa.p + pb.p), 6)
-                             as decimal(38,6))) as double), 6) as p
-      from e
-      join p1 pa on pa.i = e.i
-      join p1 pb on pb.i = e.j
-      group by e.i, pa.w_total, pa.p
-    )
-    select i as source, w_total as n_wins,
-           p_it1 as strength_it1, p as strength_it2
-    from p2
-    order by strength_it2 desc, source
-"""
+_MICRO = Decimal("1e-6")
+
+
+def _dec6(x: float) -> Decimal:
+    """Spark's ``cast(x as decimal(38,6))`` of a double: HALF_UP on the
+    double's shortest decimal form (Java's ``Double.toString``, Python's
+    ``repr``)."""
+    return Decimal(repr(x)).quantize(_MICRO, ROUND_HALF_UP)
+
+
+def _round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` of a double. ``+ 0.0`` folds -0.0 to 0.0, as
+    Spark's BigDecimal round does."""
+    return float(_dec6(x)) + 0.0
 
 
 def _q155_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One Spark job reduces the corpus to the (bucket, source) table —
+    at most 50 x #sources rows at any scale — and the win matrix and both
+    MM updates run on the driver with the oracle's arithmetic: exact
+    integer cross-multiplication, per-term ``round(., 6)``, exact
+    decimal(38,6) sums cast back to double. ``sa < sb`` compares Python
+    strs, whose code-point order is Spark's UTF-8 byte order."""
     load_tables(spark, sf_dir, names=("documents",))
-    w = spark.sql(_Q155_WINS).localCheckpoint()
-    w.createOrReplaceTempView("__q155_w__")
-    return spark.sql(_Q155_FINAL_SPARK.replace("{W}", "__q155_w__"))
+    buckets = defaultdict(list)
+    for r in spark.sql(_Q155_M).collect():
+        if r.bucket is not None and r.source is not None:
+            buckets[r.bucket].append((r.source, r.s, r.n))
+    wins: dict = {}
+    for rows in buckets.values():
+        for sa, s_a, n_a in rows:
+            for sb, s_b, n_b in rows:
+                if sa < sb:
+                    w = wins.setdefault((sa, sb), [1, 1])
+                    if s_a is not None and s_b is not None:
+                        w[0] += s_a * n_b > s_b * n_a
+                        w[1] += s_b * n_a > s_a * n_b
+    e = defaultdict(list)  # i -> [(j, wins_i, n_ij)]
+    for (sa, sb), (wa, wb) in wins.items():
+        e[sa].append((sb, wa, wa + wb))
+        e[sb].append((sa, wb, wa + wb))
+    w_total = {i: sum(w for _, w, _ in es) for i, es in e.items()}
+
+    def mm_update(denom) -> dict:
+        return {
+            i: _round6(
+                float(w_total[i])
+                / float(sum(_dec6(_round6(float(nij) / denom(i, j))) for j, _, nij in es))
+            )
+            for i, es in e.items()
+        }
+
+    p1 = mm_update(lambda i, j: 2.0)
+    p2 = mm_update(lambda i, j: p1[i] + p1[j])
+    rows = sorted(
+        ((i, w_total[i], p1[i], p2[i]) for i in e), key=lambda r: (-r[3], r[0])
+    )
+    return arrow_local_df(
+        spark,
+        rows,
+        "source string, n_wins bigint, strength_it1 double, strength_it2 double",
+    )
 
 
 register(
@@ -226,11 +237,11 @@ register(
     doc="Bradley-Terry strength ranking of sources from Laplace-smoothed "
     "pairwise bucket wins (mean-length comparisons by exact cross-"
     "multiplication, decimal-routed so 100 TB char-sums can't wrap), "
-    "two MM updates unrolled over the sources^2-bounded win matrix "
-    "with per-term rounds + decimal sums — the preference-ranking "
-    "primitive for RLHF pairs and mixture quality ordering. One corpus "
-    "shuffle into the checkpointed win matrix (the naive CTE form "
-    "re-scanned the corpus 64x); the solve never touches corpus rows",
+    "two MM updates over the sources^2-bounded win matrix with per-term "
+    "rounds + decimal sums — the preference-ranking primitive for RLHF "
+    "pairs and mixture quality ordering. One corpus shuffle into the "
+    "(bucket, source) table, collected once; the win matrix and the MM "
+    "solve run on the driver with the oracle's exact arithmetic",
 )(_q155_spark)
 
 

@@ -425,7 +425,12 @@ class ShardWorker:
             # new ones), so the directory is cold once this block exits
             with stream._lock:
                 with self.catalog._meta_lock:
-                    meta = self.catalog._meta.pop(did)
+                    # the exported entry carries the head: the target's
+                    # meta is the moved stream's only catalog record
+                    meta = {
+                        **self.catalog._meta.pop(did),
+                        "latest_event": stream.state.latest_idx,
+                    }
                     self.catalog._save_meta()
                 self.catalog.evict(did)
             return drisl.encode({"Ok": {"meta": meta, "subs": exported}})

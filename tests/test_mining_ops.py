@@ -433,29 +433,22 @@ def test_bucket_cap_chains_oversized_buckets(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_pagerank_hub_outranks_leaves(spark):
+def test_pagerank_hub_outranks_leaves():
     from leaf_spark.operators.graph import pagerank_quantized
 
     # star: 1..4 all point at 0 (and back) → 0 is the authority
     pairs = [(i, 0) for i in range(1, 5)]
-    edges = spark.createDataFrame(
-        pairs + [(b, a) for a, b in pairs], ["src", "dst"]
-    )
-    nodes = spark.createDataFrame([(i,) for i in range(6)], ["id"])
-    out = {r["id"]: r["rank"] for r in pagerank_quantized(edges, nodes).collect()}
+    out = pagerank_quantized(pairs + [(b, a) for a, b in pairs], range(6))
     assert out[0] > out[1] == out[2] == out[3] == out[4]
     # node 5 is isolated → base term only, below every connected node
     assert out[5] < out[1]
 
 
-def test_pagerank_matches_reference_integer_recurrence(spark):
+def test_pagerank_matches_reference_integer_recurrence():
     from leaf_spark.operators.graph import pagerank_quantized
 
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 0), (1, 2), (2, 0)], ["src", "dst"]
-    )
-    nodes = spark.createDataFrame([(0,), (1,), (2,)], ["id"])
-    out = {r["id"]: r["rank"] for r in pagerank_quantized(edges, nodes, iters=2).collect()}
+    edges = [(0, 1), (1, 0), (1, 2), (2, 0)]
+    out = pagerank_quantized(edges, [0, 1, 2], iters=2)
 
     # plain-python replica of the integer recurrence
     n, scale, d = 3, 1_000_000, 85
@@ -472,10 +465,9 @@ def test_pagerank_matches_reference_integer_recurrence(spark):
     assert out == rank
 
 
-def test_pagerank_iters10_checkpointed_matches_numpy_reference(spark):
-    """VERDICT r4 #4: 10 iterations with lineage checkpointing must stay
-    exact vs a NumPy replica of the integer recurrence, and the final
-    plan must not stack all 10 iterations of joins (lineage was cut)."""
+def test_pagerank_iters10_matches_numpy_reference():
+    """10 iterations stay exact vs a NumPy replica of the integer
+    recurrence."""
     import numpy as np
 
     from leaf_spark.operators.graph import pagerank_quantized
@@ -484,10 +476,7 @@ def test_pagerank_iters10_checkpointed_matches_numpy_reference(spark):
         (i, (i * 5 + 1) % 12) for i in range(12)
     ]
     pairs = [(a, b) for a, b in rng if a != b]
-    edges = spark.createDataFrame(pairs, ["src", "dst"])
-    nodes = spark.createDataFrame([(i,) for i in range(12)], ["id"])
-    res = pagerank_quantized(edges, nodes, iters=10, checkpoint_every=3)
-    out = {r["id"]: r["rank"] for r in res.collect()}
+    out = pagerank_quantized(pairs, range(12), iters=10)
 
     n, scale, d = 12, 1_000_000, 85
     base = ((100 - d) * scale // 100) // n
@@ -502,11 +491,53 @@ def test_pagerank_iters10_checkpointed_matches_numpy_reference(spark):
         rank = base + (d * s) // 100
     assert out == {i: int(rank[i]) for i in range(n)}
 
-    # lineage actually cut: the remaining plan holds the post-checkpoint
-    # iterations only (<= 4 joins per un-checkpointed iteration tail),
-    # not all 10
-    plan = res._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("Join") <= 2 * 4
+
+@pytest.mark.parametrize("iters", [3, 12])
+def test_pagerank_matches_duckdb_oracle_recurrence(iters):
+    """The driver solver against the q96/q123 oracle's own unrolled SQL
+    recurrence (everything after its graph-building CTEs), on seeded
+    random directed graphs plus an edgeless graph, a star and graphs with
+    isolated nodes and repeated edges."""
+    import random
+
+    import duckdb
+    import pyarrow as pa
+
+    from leaf_spark.operators.graph import pagerank_quantized
+    from leaf_spark.queries_mining import _pagerank_oracle
+
+    sql = _pagerank_oracle(iters)
+    recurrence = sql[sql.index("deg as (") :]
+    rnd = random.Random(1234 + iters)
+    graphs = [
+        ([], list(range(7))),  # no edges: every node keeps the base term
+        ([(i, 0) for i in range(1, 9)] + [(0, i) for i in range(1, 9)], list(range(10))),
+    ]
+    for _ in range(40):
+        n = rnd.randint(1, 40)
+        m = rnd.randint(0, 4 * n)
+        # node ids are sparse, so some nodes are isolated; edges repeat
+        ids = rnd.sample(range(1000), n)
+        edges = [(rnd.choice(ids), rnd.choice(ids)) for _ in range(m)]
+        graphs.append((edges, ids))
+    con = duckdb.connect()
+    for edges, ids in graphs:
+        con.register(
+            "e_tab",
+            pa.table(
+                {"src": [a for a, _ in edges], "dst": [b for _, b in edges]},
+                schema=pa.schema([("src", pa.int64()), ("dst", pa.int64())]),
+            ),
+        )
+        con.register("n_tab", pa.table({"id": pa.array(ids, pa.int64())}))
+        want = dict(
+            con.execute(
+                "with edges as (select src, dst from e_tab), "
+                "nodes as (select id from n_tab), " + recurrence
+            ).fetchall()
+        )
+        assert pagerank_quantized(edges, ids, iters=iters) == want, (edges, ids)
+    con.close()
 
 
 # ---------------------------------------------------------------------------

@@ -613,3 +613,28 @@ def test_q192_histogram_joins_stay_broadcast(spark, cases):
     pinned."""
     plan = plan_of(cases["q192_rfm_segments"].spark_fn(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan[:2000]
+
+
+@pytest.mark.parametrize(
+    "name,budget",
+    [("q96_pagerank", 4), ("q123_pagerank_checkpointed", 4), ("q155_bradley_terry", 3)],
+)
+def test_bounded_solve_job_budget(spark, cases, name, budget):
+    """q96/q123 (a 120-node graph) and q155 (a 50 x #sources table) reduce
+    the corpus in one Spark pass and solve on the driver: the whole query
+    — the call plus a noop write of its result, as the benchmark runs it —
+    stays within a few jobs, however many iterations the solve runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    cases[name].spark_fn(spark, SF_DIR).collect()  # warm: first table load
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "")
+    try:
+        df = cases[name].spark_fn(spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 1 <= jobs <= budget, (name, jobs)

@@ -184,3 +184,34 @@ class TestCatalog:
         catalog.create_stream("did:plc:s2", cid)
         with pytest.raises(ValueError, match="taken"):
             catalog.set_handle("did:plc:s2", "main-chat")
+
+    def test_commit_leaves_meta_file_and_info_reads_head(self, spark, tmp_path):
+        """A commit rewrites no catalog-wide file: streams_meta.json keeps
+        its bytes, and stream_info reads the head from the stream — open,
+        evicted, and after the catalog is closed and reopened."""
+        import os
+
+        root = str(tmp_path)
+        catalog = StreamCatalog(spark, root)
+        cid = catalog.modules.upload(CHAT)
+        did = "did:plc:meta1"
+        s = catalog.create_stream(did, cid)
+        meta_path = os.path.join(root, "streams_meta.json")
+        with open(meta_path, "rb") as f:
+            before = f.read()
+        s.add_events([msg("a", "one", 1)])
+        s.add_events([msg("b", "two", 2), msg("a", "three", 3)])
+        with open(meta_path, "rb") as f:
+            assert f.read() == before
+        assert catalog.stream_info(did).latest_event == 3
+        catalog.evict(did)
+        assert catalog.stream_info(did).latest_event == 3
+        catalog.close()
+
+        reopened = StreamCatalog(spark, root)
+        assert [i.latest_event for i in reopened.list_streams()] == [3]
+        reopened.open(did).add_events([msg("c", "four", 4)])
+        assert reopened.stream_info(did).latest_event == 4
+        reopened.close()
+        with open(meta_path, "rb") as f:
+            assert f.read() == before

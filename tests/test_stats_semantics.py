@@ -1100,3 +1100,60 @@ def test_mde_matches_closed_form(spark):
     assert r["p0"] == pytest.approx(p0, abs=1e-6)
     assert r["mde_abs"] == pytest.approx(mde, abs=1e-6)
     assert r["mde_rel"] == pytest.approx(mde / p0, abs=1e-5)
+
+
+# ---------------------------------------------------------------------------
+# q155's driver-side arithmetic: Spark's round(double, 6) and decimal sums
+# ---------------------------------------------------------------------------
+
+
+def test_round6_and_decimal_sums_match_spark(spark):
+    """q155 solves on the driver with ``_round6`` / ``_dec6`` standing in
+    for Spark's ``round(x, 6)`` and ``cast(. as decimal(38,6))``, and
+    Python ``Decimal`` sums cast back with ``float`` for
+    ``cast(sum(decimal) as double)``. Spark rounds the decimal form of
+    Java's ``Double.toString`` and Python that of ``repr``; JDK 17's
+    ``Double.toString`` is not always the shortest form, so a difference
+    would show at values next to a 6-decimal half-way point. 120k seeded
+    doubles, one local frame, one collect."""
+    import random
+
+    from leaf_spark.localdf import arrow_local_df
+    from leaf_spark.queries_ranking import _dec6, _round6
+
+    rnd = random.Random(155)
+    xs = []
+    for _ in range(40_000):  # int / int quotients, as the MM updates divide
+        xs.append(float(rnd.randint(1, 200_000)) / float(rnd.randint(1, 7_000)))
+    for _ in range(10_000):  # a 6-decimal half-way point, exact and +-1 ulp
+        h = (rnd.randint(0, 50_000_000) + 0.5) / 1e6
+        xs += [h, math.nextafter(h, math.inf), math.nextafter(h, -math.inf)]
+    for _ in range(30_000):  # within 5e-7 of a half-way point
+        xs.append((rnd.randint(0, 50_000_000) + 0.5) / 1e6 + rnd.uniform(-5e-7, 5e-7))
+    for _ in range(19_000):  # the strength range
+        xs.append(rnd.uniform(0.0, 50.0))
+    for _ in range(1_000):  # tiny negatives round to +0.0, not -0.0
+        xs.append(-rnd.uniform(0.0, 5e-7))
+    rows = []
+    for x in xs:
+        # q155's p2 terms: n_ij / (p_i + p_j) over 6-decimal strengths
+        terms = [
+            float(rnd.randint(2, 60))
+            / (round(rnd.uniform(0.05, 4.0), 6) + round(rnd.uniform(0.05, 4.0), 6))
+            for _ in range(rnd.randint(1, 8))
+        ]
+        rows.append((x, terms))
+    df = arrow_local_df(spark, rows, "x double, terms array<double>")
+    got = df.selectExpr(
+        "round(x, 6) as r",
+        "cast(round(x, 6) as decimal(38,6)) as d",
+        "cast(aggregate(terms, cast(0 as decimal(38,6)),"
+        " (acc, t) -> acc + cast(round(t, 6) as decimal(38,6))) as double) as s",
+    ).collect()
+    assert len(got) == len(rows) >= 100_000
+    bad = []
+    for (x, terms), g in zip(rows, got):
+        want_s = float(sum(_dec6(_round6(t)) for t in terms))
+        if repr(g.r) != repr(_round6(x)) or g.d != _dec6(x) or g.s != want_s:
+            bad.append((x, g, _round6(x), _dec6(x), want_s))
+    assert not bad, (len(bad), bad[:5])

@@ -31,8 +31,10 @@ Algorithm:
     shard's streams_meta.json (atomic tmp+rename per shard);
  5. drop now-empty surplus shard roots (only when they hold no streams);
  6. verify: every stream's DID hashes to the shard it now lives in, its
-    meta entry exists exactly once, and its stream.json matches the meta's
-    latest_event.
+    meta entry exists exactly once, and its stream.json is not behind the
+    meta's latest_event (the meta records the head only at create and at
+    a shard migration; the stream's own stream.json is the commit point,
+    so a meta head above it means commits were lost).
 
 Idempotent: re-running over an already-resharded root is a no-op plan.
 """
@@ -220,10 +222,10 @@ def _reshard_locked(root: str, new_n: int, verbose: bool) -> dict:
                     state = json.load(f)
                 if state.get("stream_did") != did:
                     raise ReshardError(f"{sj} belongs to {state.get('stream_did')}")
-                if int(state.get("latest_idx", 0)) != int(m.get("latest_event", 0)):
+                if int(state.get("latest_idx", 0)) < int(m.get("latest_event", 0)):
                     raise ReshardError(
                         f"{did}: stream.json latest_idx "
-                        f"{state.get('latest_idx')} != meta latest_event "
+                        f"{state.get('latest_idx')} < meta latest_event "
                         f"{m.get('latest_event')}"
                     )
     summary = {
